@@ -46,7 +46,6 @@ def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
                          "stream = Structured Streaming file source")
     ap.add_argument("--merge-mode", choices=("overwrite", "coalesce"), default=None)
     ap.add_argument("--merge-strategy", choices=("cow", "mor"), default=None)
-    ap.add_argument("--dedup-strategy", default=None)
     ap.add_argument("--n-buckets", type=int, default=None)
     ap.add_argument("--lateness-s", type=int, default=None)
     ap.add_argument("--max-files-per-trigger", type=int, default=None)
@@ -86,7 +85,7 @@ def load_config(ns: argparse.Namespace) -> dict:
         with open(ns.config) as fh:
             cfg = json.load(fh)
     for k in ("table_root", "wal_dir", "checkpoint_dir", "runner", "merge_mode",
-              "merge_strategy", "dedup_strategy", "n_buckets", "lateness_s",
+              "merge_strategy", "n_buckets", "lateness_s",
               "max_files_per_trigger", "auto_compact", "expire_keep_last",
               "orphan_grace_s", "master"):
         v = getattr(ns, k, None)
@@ -101,7 +100,6 @@ def load_config(ns: argparse.Namespace) -> dict:
     cfg.setdefault("runner", "tail")
     cfg.setdefault("merge_strategy", "mor")
     cfg.setdefault("merge_mode", "overwrite")
-    cfg.setdefault("dedup_strategy", "agg")
     cfg.setdefault("n_buckets", 64)
     cfg.setdefault("auto_compact", 8)
     if cfg.get("compact") or cfg.get("expire"):
@@ -153,7 +151,6 @@ def run(cfg: dict, spark=None) -> dict:
         checkpoint_dir=cfg["checkpoint_dir"],
         n_buckets=int(cfg["n_buckets"]),
         merge_mode=cfg["merge_mode"],
-        dedup_strategy=cfg["dedup_strategy"],
         lateness_s=cfg.get("lateness_s"),
         max_files_per_trigger=int(cfg.get("max_files_per_trigger", 1)),
         rename_hints=dict(cfg.get("rename_hints", {})),
@@ -191,7 +188,7 @@ def run(cfg: dict, spark=None) -> dict:
         if cfg["runner"] == "stream":
             results = run_stream(
                 table, job.wal_dir, job.checkpoint_dir, mode=job.merge_mode,
-                dedup_strategy=job.dedup_strategy, lateness_s=job.lateness_s,
+                lateness_s=job.lateness_s,
                 max_files_per_trigger=job.max_files_per_trigger,
                 auto_compact=auto_compact, expire_keep_last=expire_keep_last,
                 orphan_grace_s=orphan_grace_s,
@@ -199,8 +196,8 @@ def run(cfg: dict, spark=None) -> dict:
         else:
             results = tail_segments(
                 table, job.wal_dir, rename_hints=job.rename_hints or None,
-                mode=job.merge_mode, dedup_strategy=job.dedup_strategy,
-                lateness_s=job.lateness_s, auto_compact=auto_compact,
+                mode=job.merge_mode, lateness_s=job.lateness_s,
+                auto_compact=auto_compact,
                 expire_keep_last=expire_keep_last, orphan_grace_s=orphan_grace_s,
             )
     except BaseException as exc:

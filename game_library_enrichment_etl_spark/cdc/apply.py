@@ -1,4 +1,4 @@
-"""CDC batch apply: change events -> LWW dedup -> MERGE (COW) -> snapshot commit.
+"""CDC batch apply: change events -> LWW merge -> snapshot commit -> lineage.
 
 The Spark rendition of the reference's keyed-upsert pipeline
 (/root/reference/src/how_long_to_beat.py:236-244 replace-by-key+insert,
@@ -13,82 +13,88 @@ Merge modes
   target's; ``op='D'`` deletes; stale replayed events lose to the target's
   newer version (idempotent at the row level, on top of batch-id markers).
 - ``coalesce``: reference M2 parity (``pandas.DataFrame.update`` —
-  per-cell overwrite only where the source cell is non-null,
-  /root/reference/src/internet_games_database.py:298). Within a batch,
-  partial updates are folded per column (last non-null value at/after the
-  last I/D reset); against the target, columns coalesce unless the batch
-  contained a reset for that key.
+  per-cell overwrite only where the source cell is non-null, the
+  reference's internet_games_database.py:298). The stored row counts as
+  a reset (``I``, or ``D`` when tombstoned) at its own version;
+  a key's reset point is its latest I/D version, and each payload column
+  takes its last non-null value from the non-D rows at or after it.
 
-Scale notes (100 TB design)
----------------------------
-- Under the table's ``mor`` (merge-on-read) strategy the batch's winner
-  rows are APPENDED as delta files via the fused single-shuffle path
-  (cdc/fused.py): ONE payload exchange (bucket repartition), a
-  partition-local sort, then one Arrow pass doing LWW winner selection +
-  tombstoning + text extraction — per-batch write cost is O(batch), never
-  O(table); reads resolve LWW by (version, file sequence) and
-  ``lake.maintenance.compact`` folds buckets back to one file. Under
-  ``cow`` the target side of the merge is pruned to the buckets the batch
-  touches (manifest bucket ids) — merge cost is O(touched data).
-- COW overwrite-mode MERGE is the union + single-route-exchange LWW fold
-  (cdc/fused.fused_cow_merge, r6): target rows and raw batch rows union,
-  one exchange, partition-local sort, first-of-key filter — equivalence
-  with the full-outer-join formulation argued in that docstring; coalesce
-  mode keeps the join (cdc/apply._merge, SHUFFLE_HASH-pinned so payload
-  bytes are never sorted by the join). Hot keys still pre-reduce through
-  the ``salted`` two-phase strategy (operators/lww.py).
-- Everything is DataFrame-API; the only Python execution is the
-  Arrow-vectorized winner/extract pass (cdc/fused.py, functions/extract.py).
-- TWO actions per batch on the fused-MOR streaming hot path, only one of
-  which touches payload bytes: (1) a skinny column-pruned per-(segment,
-  bucket) stats pass (offsets, late counts, touched buckets, and a sound
-  hot-key bound — a key's rows never exceed its bucket's rows), (2) the
-  fused write itself — and in the micro-batch regime the two run
-  CONCURRENTLY (r6, ``_apply_fused_overlapped``): when the replay filter,
-  late predicate and a no-hot-key proof are derivable driver-side, the
-  stats job is submitted from a thread and joined before commit, so the
-  batch pays roughly one job latency instead of two. Winner/delete
-  counts come from the written files (manifest row counts + a threaded
-  pyarrow read of the tombstone column), and WAL-integrity is enforced
-  by the fused pass's partition-wide adjacent-duplicate check (winning
-  and non-winning duplicates alike). A third action — the exact skinny
-  per-key aggregation — runs only when its outputs are load-bearing:
-  coalesce-mode/join-path merges (pre-merge integrity + write sizing),
-  batches whose bucket bound admits a hot key (exact max_key_rows routes
-  the salted pre-reduce), and multi-segment batches (per-segment winner
-  attribution). On the COW overwrite path it runs concurrently with the
-  merge write and is absorbed before commit (the union merge consumes
-  nothing from it). The html-bearing winner rows are computed exactly
-  once inside the write (no persist, no second pass over payloads). A
-  ``DataFrame.observe`` design was rejected: ``Observation.get``
-  deadlocks when the apply runs inside a Structured Streaming
-  ``foreachBatch`` callback (the py4j callback thread can't re-enter the
-  JVM while the streaming engine waits on it).
+One orchestrator, two merge formulations
+----------------------------------------
+``apply_batch`` is the only apply path. Both merge formulations live in
+cdc/fused.py and share one shape — union, ONE route exchange, a
+partition-local sort, a first-of-key filter ("change propagation without
+joins"):
+- ``fused_mor_winners`` for merge-on-read tables in overwrite mode: the
+  batch's winners (deletes as tombstone rows) are APPENDED as delta
+  files — per-batch write cost is O(batch), never O(table); reads resolve
+  LWW by (version, file sequence) and ``lake.maintenance.compact`` folds
+  buckets back to one file.
+- ``fused_cow_merge`` for everything else (copy-on-write tables, and
+  coalesce mode on either strategy): stored rows of the touched buckets
+  union the raw batch rows and the merged row per key is rewritten.
+Hot keys pre-reduce through the ``salted`` two-phase strategy
+(operators/lww.py) in overwrite mode. The only Python execution is the
+Arrow-vectorized extraction on winner rows (functions/extract.py).
+
+Schedule
+--------
+Around the write run up to two skinny, column-pruned actions:
+(1) per-(segment, bucket) stats — offsets, late counts, touched buckets
+and a sound hot-key bound (a key's rows never exceed its bucket's rows);
+(2) the exact per-key winner pass — WAL integrity (duplicate (key, version)
+delivery), exact hot-key counts and per-segment winner attribution. (2)
+runs only when load-bearing: every copy-on-write merge, multi-segment
+batches and batches whose bucket bound admits a hot key. On the fused-MOR
+fast path winners and deletes come from the written files instead
+(manifest row counts + the tombstone sum folded into the footer harvest),
+and integrity from the fused pass's partition-wide duplicate check.
+
+The schedule decides WHEN those actions are joined:
+- sequential: (1) runs first; its replay/late/bucket outputs prune the
+  merge. (2) is joined before the write when it routes a hot key or the
+  fused-MOR write needs its counts, else after the write;
+- overlapped (micro-batch regime, see ``apply_batch``): (1) and (2) are
+  submitted from driver threads before the write and joined after it, so
+  the batch pays about one job latency instead of two or three.
+Either way every join — and so the WAL-integrity raise — lands strictly
+before the commit. A ``DataFrame.observe`` design was rejected:
+``Observation.get`` deadlocks when the apply runs inside a Structured
+Streaming ``foreachBatch`` callback (the py4j callback thread can't
+re-enter the JVM while the streaming engine waits on it).
 """
 
 from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
+from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.extract import EXTRACTOR_VERSION, extract_text_udf
-from ..lake.table import (
-    BUCKET_COL,
-    DELETED_COL,
-    MIN_ROWS_PER_SHARD,
-    IceletTable,
-    bucket_expr,
-)
+from ..functions.extract import EXTRACTOR_VERSION
+from ..lake.table import DELETED_COL, MIN_ROWS_PER_SHARD, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
+from .fused import fused_cow_merge, fused_mor_winners
 
 META_COLS = ("op", "batch_id")
 OP_COL = "op"
+
+# the micro-batch regime the overlapped schedule is gated to: at most four
+# sort shards of rows, so a loose footer bound can neither overshoot the
+# write layout nor hide a hot key
+MICRO_BATCH_ROWS = 4 * MIN_ROWS_PER_SHARD
+# the replay filter is inlined as isin() over the applied-marker set when
+# the stats are not known yet; past this size the literal list bloats the
+# plan and the sequential schedule costs one small job's latency instead
+MAX_INLINED_MARKERS = 10_000
 
 
 @dataclass
@@ -103,32 +109,22 @@ def apply_batch(
     table: IceletTable,
     batch: DataFrame,
     mode: str = "overwrite",
-    dedup_strategy: str = "skinny",
     rename_hints: dict[str, str] | None = None,
     lateness_s: int | None = None,
     default_batch_id: int | None = None,
     hot_key_threshold: int = 1_000_000,
-    mor_path: str = "fused",
 ) -> ApplyResult:
     """Apply one micro-batch of change events to the table. Idempotent:
     segments whose ``batch_id`` is already in the snapshot's commit markers
     are filtered out; an entirely-replayed batch is a no-op.
 
     ``hot_key_threshold``: per-batch hot-key detection (SURVEY §4
-    custom-2). The per-(segment, bucket) stats pass yields a sound bound
-    (max rows-per-key <= max live rows per bucket); only when a bucket
-    exceeds the threshold does the exact per-key pass run, and a key that
-    exceeds it routes the batch through the salted two-phase reduce
-    (operators/lww.py) before merging — a single key's rows would
-    otherwise all land in one task (one bucket partition under the fused
-    path, one hash partition under COW's skinny join) and straggle or
-    spill. The routing decision is recorded in metrics. WAL-integrity
-    (duplicate (key, warc_ts, lsn) delivery) raises loudly BEFORE commit
-    on every path: from the exact skinny pass when it runs (COW, join
-    path, hot-suspect or multi-segment batches), else from the fused
-    pass's partition-wide adjacent-duplicate check, which covers winning
-    and non-winning duplicates alike (pre-commit, nothing is committed to
-    the snapshot)."""
+    custom-2). Only a bucket whose live rows exceed the threshold can hide
+    a hot key; then the exact per-key pass runs before the write, and in
+    overwrite mode a key above the threshold routes the batch through the
+    salted two-phase reduce (operators/lww.py), so no single key's rows
+    land in one task. WAL integrity (duplicate (key, warc_ts, lsn)
+    delivery) raises before anything is committed."""
     t0 = time.monotonic()
     phase_t: dict[str, float] = {}
 
@@ -136,915 +132,392 @@ def apply_batch(
         now = time.monotonic()
         phase_t[name] = round(now - (t0 + sum(phase_t.values())), 3)
 
-    # Persist the micro-batch for the duration of the apply (guide §5)
-    # WHEN its source scan is NARROW: every path runs 2-3 actions over the
-    # batch (skinny stats, exact winner stats on COW, the merge/write),
-    # and a single-row-group/low-split source re-scans and re-derives
-    # SERIALLY per action — the cache turns that into one serial pass
-    # (measured −1s/batch at 12.5k-event batches over a one-split
-    # source). Over an already-parallel source the re-scan is cheap and
-    # caching the payload bytes is pure overhead (measured +5-15% apply
-    # wall at 250k-event batches over a 32-split source, both MOR and
-    # COW), so wide scans run uncached. The probe is metadata-only:
-    # inputFiles() is the file list the scan splits (batch.rdd
-    # .getNumPartitions() would be exact but pays a full physical
-    # planning per batch, ~0.1s measured). MEMORY_AND_DISK (spills,
-    # never OOMs); unpersisted in the finally. This caches the per-apply
-    # input inside the timed apply, not any cross-run result.
-    narrow_source = False
-    src_rows_bound: int | None = None
+    narrow, src_rows_bound = _source_footprint(batch)
+    with _persisted(batch, narrow) as batch:
+        snap = table.snapshot()
+        key = snap.properties["key"]
+        order_cols = tuple(snap.properties["version_cols"])
+        applied = set(snap.applied_batch_ids)
+        wm_us = snap.properties.get("watermark_us")  # event-time watermark, epoch micros
+
+        if "batch_id" not in batch.columns:
+            if default_batch_id is None:
+                raise ValueError("batch needs a batch_id column or default_batch_id")
+            batch = batch.withColumn("batch_id", F.lit(default_batch_id).cast("bigint"))
+
+        drop_late = lateness_s is not None and wm_us is not None
+        late_pred = (
+            F.col(order_cols[0]) < F.timestamp_micros(F.lit(int(wm_us)))
+            if drop_late
+            else F.lit(False)
+        )
+
+        def _live(df: DataFrame) -> DataFrame:
+            return df.where(~late_pred) if drop_late else df
+
+        # schema evolution resolved up front (driver-side only: schema +
+        # snapshot metadata, no action), so the normalized projection
+        # exists before any job is submitted
+        payload_struct = batch.drop(*[c for c in META_COLS if c in batch.columns]).schema
+        evo = table.resolve_schema(payload_struct, rename_hints)
+        cur = evo.schema
+        rev = {v: k for k, v in evo.batch_to_current.items()}  # current -> batch name
+        computed = _computed_cols(cur.names())
+        sel = [F.col(OP_COL)]
+        for f in cur.fields:
+            if f.name in computed or f.name == DELETED_COL:
+                continue
+            src = rev.get(f.name)
+            sel.append(
+                (F.col(src) if src is not None else F.lit(None)).cast(f.type).alias(f.name)
+            )
+        sel.append(F.col("batch_id"))
+
+        use_mor = table.merge_strategy == "mor" and mode == "overwrite"
+        table_rows = sum(f.rows for f in snap.files)
+        # ---- schedule. A narrow source is persisted (see _source_footprint)
+        # and latency-bound, so the skinny actions are submitted from
+        # driver threads up front, with the replay filter taken from the
+        # full applied-marker set (a superset of the replayed ids the stats
+        # would name — identical surviving rows). The write itself needs
+        # nothing from the stats when three facts hold driver-side: the
+        # replay filter is that marker filter, the late filter is a pure
+        # predicate of the snapshot watermark, and the footer row bound is
+        # <= hot_key_threshold (no key can be hot). Then the write starts
+        # immediately (overlapped). A copy-on-write merge additionally
+        # reads every bucket, which only costs nothing while the whole
+        # table (manifest row count) is itself micro-batch sized.
+        early = narrow and len(applied) <= MAX_INLINED_MARKERS
+        overlapped = (
+            early
+            and src_rows_bound is not None
+            and 0 < src_rows_bound <= min(hot_key_threshold, MICRO_BATCH_ROWS)
+            and (use_mor or table_rows <= MICRO_BATCH_ROWS)
+        )
+        stats_future = exact_future = None
+        if early:
+            pre = batch
+            if applied:
+                pre = pre.where(~F.col("batch_id").isin(*sorted(int(x) for x in applied)))
+            live = _live(pre)
+            pool = ThreadPoolExecutor(max_workers=2)
+            if overlapped:
+                stats_future = pool.submit(
+                    _segment_stats, pre, key, snap.n_buckets, order_cols, late_pred
+                )
+            if not use_mor:
+                exact_future = pool.submit(
+                    _exact_winner_stats, live.select(*sel), key, order_cols
+                )
+            pool.shutdown(wait=False)
+
+        def _nothing_to_merge(st: _BatchStats) -> ApplyResult | None:
+            """Result for a batch that is wholly replayed (skip) or wholly
+            late (commit its markers only); None when there is work."""
+            if st.ids and st.touched:
+                return None
+            if exact_future is not None:
+                exact_future.result()  # drain: its input is empty after the filters
+            if not st.ids:
+                return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
+            new_snap = table.commit([], set(), st.ids, cur if evo.changed else None,
+                                    _wm_update(wm_us, st.max_ts, lateness_s),
+                                    expected_version=snap.version)
+            metrics = _metrics(st, 0, 0, new_snap)
+            _append_lineage(table.root, st.segments, metrics, new_snap.version)
+            return ApplyResult(False, new_snap.version, metrics, st.segments)
+
+        st: _BatchStats | None = None
+        exact: tuple[int, int, int, bool] | None = None
+        hot = False
+        if not overlapped:
+            st = _BatchStats.fold(
+                _segment_stats(batch, key, snap.n_buckets, order_cols, late_pred), applied
+            )
+            _mark("t_stats")
+            done = _nothing_to_merge(st)
+            if done is not None:
+                return done
+            if st.replayed:
+                batch = batch.where(~F.col("batch_id").isin(st.replayed))
+            live = _live(batch)
+        norm_bid = live.select(*sel)
+        normalized = norm_bid.drop("batch_id")
+
+        def _exact(threshold: int) -> tuple[int, int, int, bool]:
+            rows = (
+                exact_future.result()
+                if exact_future is not None
+                else _exact_winner_stats(norm_bid, key, order_cols)
+            )
+            return _absorb_exact(rows, st.segments, order_cols, threshold)
+
+        # exact pass BEFORE the write: it routes a possible hot key, and a
+        # fused-MOR multi-segment write is checked against its winner count
+        if st is not None and (
+            st.max_bucket_live > hot_key_threshold or (use_mor and len(st.ids) > 1)
+        ):
+            exact = _exact(hot_key_threshold)
+            # a salted LWW pre-reduce would drop coalesce-mode partial cells
+            hot = exact[3] and mode == "overwrite"
+            _mark("t_winner_stats")
+
+        merge_src = (
+            lww_dedup(normalized, key, order_cols, strategy="salted") if hot else normalized
+        )
+        if use_mor:
+            out = fused_mor_winners(
+                merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
+                snap.n_buckets,
+                batch_rows=src_rows_bound if overlapped else st.live_rows,
+            )
+        else:
+            # the overlapped schedule reads every bucket (touched buckets
+            # are not known yet); its layout input is clamped to the gate's
+            # bound — the footer bound is loose, and an inflated estimate
+            # would tip sort_layout into a second salt shard for nothing
+            if overlapped:
+                target = table.read(include_deleted=True, as_schema=cur)
+                total_rows = min(table_rows + src_rows_bound, MICRO_BATCH_ROWS)
+            else:
+                target = table.read(buckets=st.touched, include_deleted=True, as_schema=cur)
+                touched = set(st.touched)
+                total_rows = (
+                    sum(f.rows for f in snap.files if f.bucket in touched) + st.live_rows
+                )
+            out = fused_cow_merge(
+                target, merge_src, key, OP_COL, order_cols, cur.to_spark(),
+                computed, snap.n_buckets, total_rows=total_rows, mode=mode,
+            )
+        # AQE adds nothing to a join-free, explicitly-partitioned write but
+        # stage-by-stage materialization latency: measured -18% apply wall
+        # at sf0.1 for the fused MOR write and -6% for the micro-batch COW
+        # write with it off. A large COW merge keeps it (the 1M-event A/B
+        # read parity-with-downside for AQE-off at scale). Plan building is
+        # lazy, so the conf takes effect at the write's execution.
+        aqe_off = use_mor or overlapped
+        spark = table.spark
+        if aqe_off:
+            prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            # the MOR tombstone count rides along in the footer harvest's
+            # threaded file pass (one open per file)
+            written = table.write_data_files_prepartitioned(
+                out, snap.version + 1, cur.version,
+                sum_col=DELETED_COL if use_mor else None,
+            )
+        finally:
+            if aqe_off:
+                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        files, n_tombstones = written if use_mor else (written, None)
+        _mark("t_merge_write")
+
+        if overlapped:
+            st = _BatchStats.fold(stats_future.result(), applied)
+            _mark("t_stats")
+            done = _nothing_to_merge(st)  # the written files stay uncommitted
+            if done is not None:
+                return done
+        if exact is None and (not use_mor or len(st.ids) > 1):
+            # after the write: integrity + per-segment attribution, still
+            # strictly before the commit (a poisoned batch wastes one write
+            # into an uncommitted directory no snapshot references)
+            exact = _exact(hot_key_threshold)
+        n_rows = sum(f.rows for f in files)
+        if exact is not None:
+            n_winners, n_deletes, max_key_rows, _ = exact
+            if use_mor and n_rows != n_winners:
+                # the delta files must hold exactly one row per winner key;
+                # a mismatch means a broken partitioning/sort invariant —
+                # fail before commit rather than corrupt read-time resolution
+                raise RuntimeError(
+                    f"fused-merge invariant violation: {n_rows} rows written "
+                    f"for {n_winners} winner keys"
+                )
+        else:
+            # fused-MOR fast path, single segment by construction: winners
+            # are the written delta rows (one per key), deletes the
+            # harvested tombstone sum; max_key_rows is reported as its sound
+            # per-bucket upper bound
+            n_winners, n_deletes, max_key_rows = n_rows, n_tombstones, st.max_bucket_live
+            st.attribute(st.segments[0], n_winners, n_deletes)
+        if "t_winner_stats" not in phase_t:
+            _mark("t_winner_stats")
+
+        if use_mor:
+            replaced: set[int] = set()
+        elif overlapped:
+            # every bucket was read: replace every bucket that held or
+            # gained a file (a superset rewrite of byte-identical rows)
+            replaced = {f.bucket for f in snap.files} | {f.bucket for f in files}
+        else:
+            replaced = set(st.touched)
+        # CAS on the base snapshot: a concurrent commit since this apply's
+        # read raises CommitConflictError (lake/locking.py) — the caller
+        # replays the batch against the new snapshot (idempotent by markers)
+        new_snap = table.commit(
+            files, replaced, st.ids,
+            cur if evo.changed else None,
+            _wm_update(wm_us, st.max_ts, lateness_s),
+            expected_version=snap.version,
+        )
+        metrics = _metrics(st, n_winners, n_deletes, new_snap)
+        metrics["wall_ms"] = int((time.monotonic() - t0) * 1000)
+        metrics["schema_changed"] = evo.changed
+        metrics["merge_strategy"] = "mor" if use_mor else "cow"
+        metrics["max_key_rows"] = max_key_rows
+        metrics["hot_key_routed"] = hot
+        metrics["winner_stats_path"] = "exact" if exact is not None else "manifest"
+        metrics["stats_overlapped"] = overlapped
+        metrics["phases_s"] = phase_t
+        _append_lineage(table.root, st.segments, metrics, new_snap.version)
+        return ApplyResult(False, new_snap.version, metrics, st.segments)
+
+
+def _source_footprint(batch: DataFrame) -> tuple[bool, int | None]:
+    """(narrow, footer row bound) of the batch's source scan.
+
+    A NARROW source (a few files) re-scans and re-derives serially per
+    action, so the apply persists it: measured -1s/batch at 12.5k-event
+    batches over a one-split source. Over an already-parallel source the
+    re-scan is cheap and caching payload bytes is pure overhead (+5-15%
+    apply wall at 250k-event batches over 32 splits). inputFiles() is
+    metadata-only (getNumPartitions() would pay a physical planning, ~0.1s).
+
+    The bound sums the narrow source files' parquet footer row counts: the
+    batch is a filtered projection of those files, so its rows never
+    exceed it. None when the source is wide or not parquet files."""
     try:
         src_files = batch.inputFiles()
         cores = batch.sparkSession.sparkContext.defaultParallelism
-        narrow_source = 0 < len(src_files) <= max(2, cores // 8)
-        if narrow_source:
-            # sound upper bound on the batch's row count from the source
-            # files' parquet footers (metadata-only, <=4 files, ~ms): the
-            # batch is a filtered projection of these files, so its rows
-            # never exceed their total. Gates the stats/write overlap
-            # below (bound <= hot threshold proves no hot key) and sizes
-            # the fused write's layout when the overlap skips the exact
-            # pre-count.
-            from urllib.parse import unquote, urlparse
-
-            src_rows_bound = 0
-            for p in src_files:
-                path = unquote(urlparse(p).path) if "://" in p or p.startswith(
-                    "file:"
-                ) else p
-                src_rows_bound += pq.ParquetFile(path).metadata.num_rows
     except Exception:
-        src_rows_bound = None
-    if not narrow_source:
-        return _apply_batch_inner(
-            table, batch, mode, dedup_strategy, rename_hints, lateness_s,
-            default_batch_id, hot_key_threshold, mor_path, t0, phase_t, _mark,
-            overlap_ok=False,
-        )
-    if os.environ.get("ICELET_BATCH_PERSIST", "1") == "0":
-        return _apply_batch_inner(
-            table, batch, mode, dedup_strategy, rename_hints, lateness_s,
-            default_batch_id, hot_key_threshold, mor_path, t0, phase_t, _mark,
-            overlap_ok=True, src_rows_bound=src_rows_bound,
-        )
-    from pyspark import StorageLevel
-
-    batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
+        return False, None
+    if not 0 < len(src_files) <= max(2, cores // 8):
+        return False, None
     try:
-        return _apply_batch_inner(
-            table, batch, mode, dedup_strategy, rename_hints, lateness_s,
-            default_batch_id, hot_key_threshold, mor_path, t0, phase_t, _mark,
-            overlap_ok=True, src_rows_bound=src_rows_bound,
+        return True, sum(
+            pq.ParquetFile(
+                unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p
+            ).metadata.num_rows
+            for p in src_files
         )
+    except Exception:
+        return True, None
+
+
+@contextmanager
+def _persisted(df: DataFrame, on: bool):
+    """``df`` persisted MEMORY_AND_DISK (spills, never OOMs) for the
+    duration of the block when ``on``. This caches the per-apply input
+    inside the timed apply, not any cross-run result."""
+    if not on:
+        yield df
+        return
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
     finally:
-        batch.unpersist(False)
+        df.unpersist(False)
 
 
-def _apply_batch_inner(
-    table: IceletTable,
-    batch: DataFrame,
-    mode: str,
-    dedup_strategy: str,
-    rename_hints: dict[str, str] | None,
-    lateness_s: int | None,
-    default_batch_id: int | None,
-    hot_key_threshold: int,
-    mor_path: str,
-    t0: float,
-    phase_t: dict[str, float],
-    _mark,
-    overlap_ok: bool = True,
-    src_rows_bound: int | None = None,
-) -> ApplyResult:
-    spark = table.spark
-    snap = table.snapshot()
-    key = snap.properties["key"]
-    order_cols = tuple(snap.properties["version_cols"])
-    applied = set(snap.applied_batch_ids)
-    wm_us = snap.properties.get("watermark_us")  # event-time watermark, epoch micros
-
-    if "batch_id" not in batch.columns:
-        if default_batch_id is None:
-            raise ValueError("batch needs a batch_id column or default_batch_id")
-        batch = batch.withColumn("batch_id", F.lit(default_batch_id).cast("bigint"))
-
+def _segment_stats(df: DataFrame, key: str, n_buckets: int, order_cols, late_pred) -> list:
+    """Action 1: per-(segment, bucket) offsets and late counts in one skinny
+    pass (batch_id, lsn, ts, key — html is never read). Grouping by bucket
+    costs nothing (map-side combine reduces to segments x buckets rows) and
+    yields the touched-bucket set plus the sound hot-key bound."""
     ts_col, lsn_col = order_cols
-    late_pred = (
-        (F.col(ts_col) < F.timestamp_micros(F.lit(int(wm_us))))
-        if (lateness_s is not None and wm_us is not None)
-        else F.lit(False)
-    )
-
-    # ---- schema evolution resolved up front (driver-side only: schema +
-    # snapshot metadata, no action) so the normalized projection exists
-    # before any job runs — the exact winner-stats pass can then overlap
-    # the offsets pass below (guide §2.6).
-    payload_struct = batch.drop(*[c for c in META_COLS if c in batch.columns]).schema
-    evo = table.resolve_schema(payload_struct, rename_hints)
-    cur = evo.schema
-    rev = {v: k for k, v in evo.batch_to_current.items()}  # current -> batch name
-    computed = _computed_cols(cur.names())
-    payload_fields = [
-        f for f in cur.fields if f.name not in computed and f.name != DELETED_COL
-    ]
-    sel = [F.col(OP_COL)]
-    for f in payload_fields:
-        src = rev.get(f.name)
-        sel.append(
-            (F.col(src) if src is not None else F.lit(None)).cast(f.type).alias(f.name)
+    return (
+        df.groupBy("batch_id", bucket_expr(key, n_buckets).alias("_b"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(lsn_col).alias("lsn_min"),
+            F.max(lsn_col).alias("lsn_max"),
+            F.max(ts_col).alias("ts_max"),
+            F.sum(late_pred.cast("long")).alias("late"),
         )
-
-    def _project_norm_bid(b: DataFrame) -> DataFrame:
-        return b.select(*sel, F.col("batch_id"))
-
-    # ---- overlap action 2 with action 1 when action 2 runs UNCONDITIONALLY
-    # (every non-fused-MOR path): both are independent skinny aggregations
-    # over the persisted batch, so submitting the exact pass from a driver
-    # thread lets its stages back-fill the stats job's tail instead of
-    # paying two full job latencies in sequence (guide §2.6). Gated on the
-    # narrow-source/persist decision (``overlap_ok``): that is the
-    # latency-bound regime where job latency dominates; two concurrent
-    # core-saturating jobs over a wide source just interleave (and race
-    # the cacheless scans). The filter here uses the full applied-marker
-    # set (a superset of the replayed ids the sequential path filters) —
-    # identical surviving rows. Skipped when the marker set is huge: an
-    # isin() over 10^5 literals bloats the plan, and the sequential path
-    # costs one small job's latency.
-    use_mor_candidate = (
-        table.merge_strategy == "mor"
-        and mode == "overwrite"
-        and DELETED_COL in cur.names()
-    )
-
-    # ---- fused-MOR stats/write OVERLAP (r6, guide §2.6): on the fused
-    # streaming hot path the offsets/late stats job (action 1) and the
-    # fused write are the only two actions, run back to back — two full
-    # job latencies in the latency-bound micro-batch regime. The write
-    # does not actually CONSUME the stats when three facts are knowable
-    # driver-side: (a) the replay filter equals "batch_id not in the
-    # applied-marker set" (a superset of the observed replayed ids —
-    # identical surviving rows), (b) the late filter is a pure predicate
-    # of the snapshot watermark, and (c) no hot key can exist because the
-    # source files' footer row bound is <= hot_key_threshold (a key's
-    # rows never exceed the batch's). The stats job is then submitted
-    # from a driver thread and the write runs concurrently; stats are
-    # joined BEFORE commit (new_ids / watermark / lineage are commit-time
-    # inputs). The bound also caps the write layout exactly as the exact
-    # count would at this size. Gated to the micro-batch regime (bound
-    # <= 4 sort shards): a loose multi-million-row bound would both
-    # overshoot the layout and lose the no-hot-key proof.
-    overlap_bound_ok = (
-        overlap_ok
-        and len(applied) <= 10_000
-        and src_rows_bound is not None
-        and 0 < src_rows_bound <= min(hot_key_threshold, 4 * MIN_ROWS_PER_SHARD)
-    )
-    if overlap_bound_ok and use_mor_candidate and mor_path == "fused":
-        return _apply_fused_overlapped(
-            table, batch, sel, cur, evo, key, order_cols, applied, wm_us,
-            lateness_s, late_pred, snap, src_rows_bound, _mark, t0, phase_t,
-        )
-    # COW variant of the same overlap: the union merge (fused_cow_merge)
-    # consumes only the TARGET from pre-write state, and when the whole
-    # table fits the micro-batch regime (manifest row count — driver-side
-    # — within the same 4-sort-shard bound) bucket pruning saves nothing:
-    # read every bucket, start the merge write immediately, and run the
-    # stats AND exact jobs concurrently with it, absorbing both before
-    # commit. Replaced buckets are then every bucket that held or gained
-    # a file (a superset rewrite with byte-identical logical rows —
-    # pruning is a write-amplification optimization, not semantics). Big
-    # tables keep the pruned sequential path.
-    table_rows = sum(f.rows for f in snap.files)
-    if (
-        overlap_bound_ok
-        and table.merge_strategy == "cow"
-        and mode == "overwrite"
-        and DELETED_COL in cur.names()
-        and table_rows <= 4 * MIN_ROWS_PER_SHARD
-    ):
-        return _apply_cow_overlapped(
-            table, batch, sel, cur, evo, key, order_cols, applied, wm_us,
-            lateness_s, late_pred, snap, src_rows_bound, table_rows, _mark,
-            t0, phase_t,
-        )
-
-    exact_future = None
-    if (
-        overlap_ok
-        and not (use_mor_candidate and mor_path == "fused")
-        and len(applied) <= 10_000
-    ):
-        pre = batch
-        if applied:
-            pre = pre.where(~F.col("batch_id").isin(*[int(x) for x in applied]))
-        if lateness_s is not None and wm_us is not None:
-            pre = pre.where(~late_pred)
-        from concurrent.futures import ThreadPoolExecutor
-
-        _exact_pool = ThreadPoolExecutor(max_workers=1)
-        exact_future = _exact_pool.submit(
-            _exact_winner_stats, _project_norm_bid(pre), key, order_cols
-        )
-        _exact_pool.shutdown(wait=False)
-
-    # ---- action 1: per-(segment, bucket) offset/late stats in one skinny
-    # column-pruned pass (batch_id, lsn, ts, key — html never read here).
-    # Grouping by bucket as well costs nothing (map-side combine reduces to
-    # n_segments * n_buckets rows) and yields the touched-bucket set PLUS a
-    # sound hot-key bound: every row of a key lands in the key's bucket, so
-    # max_key_rows <= max live bucket count — if no bucket exceeds the hot
-    # threshold, no key can, and the exact per-key pass (action 2) is
-    # skippable on the fused MOR path.
-    braw = (
-        batch.groupBy("batch_id", bucket_expr(key, snap.n_buckets).alias("_b"))
-        .agg(*_seg_stats_aggs(lsn_col, ts_col, late_pred))
         .collect()
     )
-    _mark("t_stats")
-    seg_stats = _fold_seg_stats(braw)
-    new_ids = [d["batch_id"] for d in seg_stats if d["batch_id"] not in applied]
-    if not new_ids:
-        if exact_future is not None:
-            exact_future.result()  # drain: its input is empty after the filter
-        return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
-    replayed = [d["batch_id"] for d in seg_stats if d["batch_id"] in applied]
-    seg_stats = [d for d in seg_stats if d["batch_id"] in set(new_ids)]
-    if replayed:
-        batch = batch.where(~F.col("batch_id").isin(replayed))
-    if lateness_s is not None and wm_us is not None:
-        batch = batch.where(~late_pred)
 
-    events_in = sum(d["events_in"] for d in seg_stats)
-    late_dropped = sum(d["late_dropped"] or 0 for d in seg_stats)
-    max_ts = max((d["ts_max"] for d in seg_stats if d["ts_max"] is not None), default=None)
-    # every surviving event's key yields exactly one LWW winner, so the
-    # winners' bucket set equals the surviving events' bucket set
-    touched = sorted({b for d in seg_stats for b in (d["buckets"] or [])})
 
-    norm_bid = _project_norm_bid(batch)
-    normalized = norm_bid.drop("batch_id")
+@dataclass
+class _BatchStats:
+    """Action 1's rows folded per new segment (sorted by batch_id), plus
+    the ids of segments already applied."""
 
-    if not touched:  # nothing survived late-drop/replay: commit markers only
-        if exact_future is not None:
-            exact_future.result()  # drain: its input is empty after the filters
-        new_snap = table.commit([], set(), new_ids, cur if evo.changed else None,
-                                _wm_update(wm_us, max_ts, lateness_s),
-                                expected_version=snap.version)
-        metrics = _metrics(events_in, late_dropped, 0, 0, 0, new_snap)
-        _append_lineage(table.root, seg_stats, metrics, new_snap.version)
-        return ApplyResult(False, new_snap.version, metrics, seg_stats)
+    segments: list[dict]
+    replayed: list[int]
 
-    # ---- merge-path decision, needed before action 2 can be gated
-    use_mor = (
-        table.merge_strategy == "mor"
-        and mode == "overwrite"
-        and DELETED_COL in cur.names()
-    )
-    mor_ndel: int | None = None  # tombstone count fused into the harvest
-    max_bucket_live = max((d["max_bucket_live"] for d in seg_stats), default=0)
-    # The exact per-key pass (action 2) is needed when any of its outputs
-    # is load-bearing:
-    # - COW / join-path merges: WAL-integrity must raise BEFORE the merge
-    #   (the fused pass has its own adjacent-duplicate winner check; the
-    #   other paths do not), and COW sizes its write from n_winners.
-    # - possible hot key: max live bucket rows bound max rows-per-key, so
-    #   only a bucket above the threshold can hide a hot key; the exact
-    #   pass then measures max_key_rows and routes the salted pre-reduce.
-    # - multi-segment batches: per-segment lineage attribution groups by
-    #   the winning row's batch_id.
-    # Otherwise — the fused-MOR streaming hot path — winners and deletes
-    # are derived from the written delta files themselves (manifest row
-    # counts + a threaded pyarrow scan of the tombstone column), and a
-    # whole skinny scan + per-key shuffle per batch disappears (measured
-    # at ~25% of batch wall at local[2]).
-    need_exact = (
-        not (use_mor and mor_path == "fused")
-        or len(new_ids) > 1
-        or max_bucket_live > hot_key_threshold
-    )
-
-    # ---- action 2 (exact path only): winner/delete counts over the SKINNY
-    # projection (key, version, op, batch_id — Catalyst prunes html out of
-    # the scan; map-side combinable two-level aggregation, so it is
-    # shuffle-light at any scale). Three things ride along for free:
-    # - WAL-integrity: per key, row count vs distinct-version count — a
-    #   mismatch means duplicate (key, warc_ts, lsn) delivery with
-    #   potentially divergent payloads, and the apply raises PRE-merge.
-    #   Checking here (not in the merge) keeps the failure loud and
-    #   UNIFORM across COW, MOR and hot-key-salted batches — the salted
-    #   pre-reduce would otherwise collapse duplicates arbitrarily before
-    #   the fused pass's adjacent-duplicate check could see them.
-    # - hot-key detection (max rows per key);
-    # - per-SEGMENT winner attribution: the winning row's batch_id, so
-    #   multi-segment lineage rows carry their own counts instead of
-    #   copies of the batch totals.
-    # COW-overwrite deferral (r6): the union-merge write (fused_cow_merge)
-    # consumes nothing from the exact pass — no pre-write sizing (the
-    # prepartitioned write takes no row estimate) and no salting decision
-    # when the bucket bound already proves no hot key — so the exact job
-    # keeps running CONCURRENTLY with the merge write and is absorbed
-    # before commit. The WAL-integrity raise still precedes the commit on
-    # every path (a poisoned batch wastes one write into an uncommitted
-    # uuid directory, which no snapshot ever references).
-    defer_exact = (
-        need_exact
-        and not use_mor
-        and mode != "coalesce"
-        and DELETED_COL in cur.names()  # else the join path sizes its write
-        and max_bucket_live <= hot_key_threshold
-    )
-    if need_exact and not defer_exact:
-        seg_rows = (
-            exact_future.result()
-            if exact_future is not None
-            else _exact_winner_stats(norm_bid, key, order_cols)
-        )
-        n_winners, n_deletes, max_key_rows, hot = _absorb_exact(
-            seg_rows, seg_stats, order_cols, hot_key_threshold
-        )
-    else:
-        # fast path / deferred: integrity is enforced by the fused pass's
-        # winner adjacent-duplicate check (MOR) or the deferred exact pass
-        # below (COW); counts come post-write. max_key_rows is reported as
-        # its sound per-bucket UPPER BOUND until the exact pass lands.
-        hot = False
-        n_winners = None
-        n_deletes = None
-        max_key_rows = max_bucket_live
-    _mark("t_winner_stats")
-
-    # engine-computed columns (text from html) are extracted on the batch
-    # WINNERS only — never on carried-forward target rows (python UDFs are
-    # evaluated eagerly for every input row, so computing them inside the
-    # merge would re-extract the whole touched table every batch). Their
-    # nullness mirrors the source column's, so they merge as plain payload
-    # under both modes. Winners flow into exactly one action (the write),
-    # so the extraction runs exactly once without any persist. Under mor
-    # extraction happens inside the fused Arrow pass AFTER the bucket
-    # shuffle, so extracted text bytes are never shuffled or sorted.
-    if use_mor and mor_path == "fused":
-        # ---- merge-on-read, fused single-shuffle path (cdc/fused.py):
-        # APPEND the batch's winners as delta files (deletes as tombstone
-        # rows); no target read, no join, ONE payload exchange — per-batch
-        # cost is O(batch), never O(table). Dedup happens partition-locally
-        # after the bucket repartition (bucket is a pure key function, so
-        # keys never span partitions); extraction runs on winner rows only
-        # inside the same Arrow pass. Reads resolve LWW by (version, file
-        # sequence); see lake/table.py.
-        from .fused import fused_mor_winners
-
-        replaced: set[int] = set()
-        merge_src = normalized
-        if hot:
-            # hot-key batch: pre-reduce with the salted two-phase max so no
-            # single key's rows concentrate in one bucket-partition task;
-            # the fused pass then sees at most one row per key
-            merge_src = lww_dedup(normalized, key, order_cols, strategy="salted")
-        out = fused_mor_winners(
-            merge_src, key, OP_COL, order_cols, cur.to_spark(),
-            computed, snap.n_buckets,
-            batch_rows=int(events_in - late_dropped),
-        )
-        # AQE adds nothing to the fused write — the plan is fully
-        # determined up front (explicit repartition counts AQE never
-        # coalesces, no joins, no skew rewrites) — but its stage-by-stage
-        # materialization adds scheduling latency to every micro-batch
-        # (measured: -18% apply wall at sf0.1 with it off). COW keeps AQE:
-        # its merge-join planning measurably wins there (+32% with it
-        # off). Guarded set/restore; plan building is lazy so the conf
-        # takes effect at the write's execution.
-        prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            # fast path (no exact pass): the tombstone count rides along
-            # in the harvest's threaded file pass — one open per file
-            # instead of two (harvest + _count_tombstones)
-            if need_exact:
-                files = table.write_data_files_prepartitioned(
-                    out, snap.version + 1, cur.version
-                )
-                mor_ndel = None
-            else:
-                files, mor_ndel = table.write_data_files_prepartitioned(
-                    out, snap.version + 1, cur.version, sum_col=DELETED_COL
-                )
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    elif use_mor:
-        # ---- merge-on-read, two-exchange path (mor_path="join"): skinny
-        # LWW dedup + payload fetch join, then the bucket repartition with
-        # post-shuffle extraction. Kept as a measured fallback to the fused
-        # path (same outputs; one more payload exchange + scan).
-        # unique_versions=True: the skinny stats pass above already raised
-        # on any duplicate (key, version), so the dropDuplicates guard's
-        # payload re-shuffle would be pure waste.
-        winners = lww_dedup(
-            normalized, key, order_cols,
-            strategy="salted" if hot else dedup_strategy,
-            unique_versions=True,
-        )
-        out_cols = []
-        is_del = F.col(OP_COL) == "D"
-        for f in cur.fields:
-            if f.name in computed:
-                continue  # extracted post-shuffle
-            if f.name == DELETED_COL:
-                out_cols.append(is_del.alias(DELETED_COL))
-            elif f.name in (key, *order_cols):
-                out_cols.append(F.col(f.name).cast(f.type).alias(f.name))
-            else:
-                out_cols.append(
-                    F.when(is_del, F.lit(None).cast(f.type))
-                    .otherwise(F.col(f.name).cast(f.type))
-                    .alias(f.name)
-                )
-        out = winners.select(*out_cols).withColumn(
-            BUCKET_COL, bucket_expr(key, snap.n_buckets)
-        )
-        replaced = set()
-        types = {f.name: f.type for f in cur.fields}
-
-        def post_shuffle(staged):
-            for cname, src_col in computed.items():
-                staged = staged.withColumn(
-                    cname,
-                    F.when(
-                        ~F.col(DELETED_COL), extract_text_udf(F.col(src_col))
-                    ).cast(types[cname]),
-                )
-            return staged
-
-        files = table.write_data_files(
-            out, snap.version + 1, cur.version, post_shuffle=post_shuffle
-        )
-    elif mode == "coalesce" or DELETED_COL not in cur.names():
-        # ---- copy-on-write MERGE (coalesce mode, and overwrite on tables
-        # WITHOUT a tombstone column) as a single full-outer join against
-        # the bucket-pruned target (tombstones included: a stale replayed
-        # event must lose to a newer D; target projected to the evolved
-        # schema). The per-cell fold has no union/window rendition, and
-        # the union path's target-side op reconstruction needs the stored
-        # tombstone flag — both cases keep the join formulation.
-        if mode == "coalesce":
-            winners = _fold_partial_updates(normalized, key, order_cols)
-        else:
-            winners = lww_dedup(
-                normalized, key, order_cols,
-                strategy="salted" if hot else "agg",
-                unique_versions=True,
+    @staticmethod
+    def fold(rows: list, applied: set) -> "_BatchStats":
+        by_seg: dict[int, dict] = {}
+        for r in rows:
+            d = by_seg.setdefault(
+                r["batch_id"],
+                {
+                    "batch_id": r["batch_id"], "events_in": 0, "lsn_min": None,
+                    "lsn_max": None, "ts_max": None, "late_dropped": 0,
+                    "buckets": set(), "max_bucket_live": 0,
+                },
             )
-        for cname, src_col in computed.items():
-            winners = winners.withColumn(
-                cname,
-                F.when(F.col(OP_COL) != "D", extract_text_udf(F.col(src_col))),
-            )
-        winners = winners.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-        target = table.read(buckets=touched, include_deleted=True, as_schema=cur)
-        out = _merge(target, winners, key, order_cols, cur, computed, mode)
-        replaced = set(touched)
-        out = out.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-        # ---- action 3: write per-bucket files (COW rewrites touched
-        # buckets). The manifest-derived row estimate lets the writer
-        # shard each bucket's sort to bounded memory (lake/table.py).
-        touched_rows = sum(f.rows for f in snap.files if f.bucket in replaced)
-        files = table.write_data_files(
-            out, snap.version + 1, cur.version,
-            expected_rows=touched_rows + n_winners,
+            d["events_in"] += int(r["n"])
+            d["late_dropped"] += int(r["late"] or 0)
+            for col, fold in (("lsn_min", min), ("lsn_max", max), ("ts_max", max)):
+                if r[col] is not None:
+                    d[col] = r[col] if d[col] is None else fold(d[col], r[col])
+            live = int(r["n"]) - int(r["late"] or 0)
+            if live > 0:
+                d["buckets"].add(r["_b"])
+                d["max_bucket_live"] = max(d["max_bucket_live"], live)
+        segs = sorted(by_seg.values(), key=lambda d: d["batch_id"])
+        return _BatchStats(
+            [d for d in segs if d["batch_id"] not in applied],
+            [d["batch_id"] for d in segs if d["batch_id"] in applied],
         )
-    else:
-        # ---- copy-on-write MERGE (overwrite mode), union + single route
-        # exchange (cdc/fused.fused_cow_merge, r6): target rows and raw
-        # batch rows union (no shuffle), one exchange routes (bucket,
-        # salt) groups, a partition-local sort + first-of-key filter
-        # yields the merged row — per-key semantics proven equivalent to
-        # the full-outer join in the function's docstring. Replaces three
-        # payload exchanges (batch LWW dedup, the join, the write
-        # repartition) with one, and extraction runs on batch-won winner
-        # rows only, exactly as before. The WAL-integrity raise stays in
-        # the exact stats pass above (always on for COW); a hot-key batch
-        # still pre-reduces with the salted two-phase max so no key
-        # concentrates its raw rows in one route partition.
-        from .fused import fused_cow_merge
 
-        merge_src = normalized
-        if hot:
-            merge_src = lww_dedup(normalized, key, order_cols, strategy="salted")
-        target = table.read(buckets=touched, include_deleted=True, as_schema=cur)
-        replaced = set(touched)
-        touched_rows = sum(f.rows for f in snap.files if f.bucket in replaced)
-        out = fused_cow_merge(
-            target, merge_src, key, OP_COL, order_cols, cur.to_spark(),
-            computed, snap.n_buckets,
-            total_rows=touched_rows + int(events_in - late_dropped),
-        )
-        # AQE stays ON here: the 1M-event A/B (BENCH/holdcheck_r6c.jsonl)
-        # read parity-with-downside for AQE-off at scale, so only the
-        # overlapped micro-batch path (where it measured −6% wall) turns
-        # it off.
-        files = table.write_data_files_prepartitioned(
-            out, snap.version + 1, cur.version
-        )
-    _mark("t_merge_write")
-    if defer_exact:
-        # absorb the concurrently-running exact pass (see defer_exact
-        # above): WAL-integrity raise + per-segment attribution, still
-        # strictly before the commit
-        seg_rows = (
-            exact_future.result()
-            if exact_future is not None
-            else _exact_winner_stats(norm_bid, key, order_cols)
-        )
-        n_winners, n_deletes, max_key_rows, _ = _absorb_exact(
-            seg_rows, seg_stats, order_cols, hot_key_threshold
-        )
-    if use_mor:
-        written = sum(f.rows for f in files)
-        if n_winners is None:
-            # fast path: winners = the written delta rows (the fused window
-            # keeps exactly one row per key), deletes = an exact threaded
-            # pyarrow count of the tombstone column over this commit's
-            # files (column-pruned; no Spark job). Single segment by
-            # construction, so per-segment attribution is the totals.
-            n_winners = written
-            n_deletes = (
-                mor_ndel if mor_ndel is not None
-                else _count_tombstones(table.root, files)
-            )
-            d = seg_stats[0]
-            d["winners"] = n_winners
-            d["delete_winners"] = n_deletes
-            d["conflicts_resolved"] = (
-                int(d["events_in"]) - int(d["late_dropped"] or 0) - n_winners
-            )
-            d["buckets_touched"] = len(d["buckets"] or [])
-        elif written != n_winners:
-            # structural invariant check (exact path): the delta files must
-            # hold exactly one row per winner key (the fused dedup's
-            # contiguous-group scan and the skinny count both group by
-            # key; a mismatch means a broken partitioning/sort invariant)
-            # — fail before commit rather than corrupt read-time
-            # resolution.
-            raise RuntimeError(
-                f"fused-merge invariant violation: {written} rows written "
-                f"for {n_winners} winner keys"
-            )
-    # CAS on the base snapshot: a concurrent commit since this apply's read
-    # raises CommitConflictError (lake/locking.py) — the caller replays the
-    # batch against the new current snapshot (idempotent by batch markers)
-    new_snap = table.commit(
-        files, replaced, new_ids,
-        cur if evo.changed else None,
-        _wm_update(wm_us, max_ts, lateness_s),
-        expected_version=snap.version,
-    )
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = _metrics(events_in, late_dropped, n_winners, n_deletes, len(touched), new_snap)
-    metrics["wall_ms"] = wall_ms
-    metrics["schema_changed"] = evo.changed
-    metrics["merge_strategy"] = "mor" if use_mor else "cow"
-    # exact when the per-key pass ran; otherwise its sound per-bucket
-    # upper bound (a key's rows never exceed its bucket's rows)
-    metrics["max_key_rows"] = max_key_rows
-    metrics["hot_key_routed"] = hot
-    metrics["winner_stats_path"] = "exact" if need_exact else "manifest"
-    metrics["phases_s"] = phase_t
-    _append_lineage(table.root, seg_stats, metrics, new_snap.version)
-    return ApplyResult(False, new_snap.version, metrics, seg_stats)
+    @property
+    def ids(self) -> list[int]:
+        return [d["batch_id"] for d in self.segments]
 
+    @property
+    def events_in(self) -> int:
+        return sum(d["events_in"] for d in self.segments)
 
-def _apply_cow_overlapped(
-    table: IceletTable,
-    batch: DataFrame,
-    sel: list,
-    cur,
-    evo,
-    key: str,
-    order_cols: tuple[str, ...],
-    applied: set,
-    wm_us,
-    lateness_s: int | None,
-    late_pred,
-    snap,
-    src_rows_bound: int,
-    table_rows: int,
-    _mark,
-    t0: float,
-    phase_t: dict[str, float],
-) -> ApplyResult:
-    """COW-overwrite apply with the stats and exact jobs overlapped
-    against the union-merge write (see the gate comment in
-    ``_apply_batch_inner``). Surviving rows and final table content are
-    identical to the sequential path; the only physical difference is
-    that every existing bucket is rewritten (gated to tables within the
-    micro-batch bound, where bucket pruning saves nothing). Both skinny
-    jobs are absorbed — and the WAL-integrity raise lands — strictly
-    before the commit."""
-    from concurrent.futures import ThreadPoolExecutor
+    @property
+    def late_dropped(self) -> int:
+        return sum(d["late_dropped"] for d in self.segments)
 
-    pre = batch
-    if applied:
-        pre = pre.where(~F.col("batch_id").isin(*[int(x) for x in applied]))
-    drop_late = lateness_s is not None and wm_us is not None
-    live = pre.where(~late_pred) if drop_late else pre
-    ts_col, lsn_col = order_cols[0], order_cols[1]
-    norm_bid = live.select(*sel, F.col("batch_id"))
-    normalized = norm_bid.drop("batch_id")
+    @property
+    def live_rows(self) -> int:
+        return self.events_in - self.late_dropped
 
-    pool = ThreadPoolExecutor(max_workers=2)
-    stats_future = pool.submit(
-        lambda: pre.groupBy(
-            "batch_id", bucket_expr(key, snap.n_buckets).alias("_b")
-        )
-        .agg(*_seg_stats_aggs(lsn_col, ts_col, late_pred))
-        .collect()
-    )
-    exact_future = pool.submit(_exact_winner_stats, norm_bid, key, order_cols)
-    pool.shutdown(wait=False)
+    @property
+    def max_ts(self):
+        return max((d["ts_max"] for d in self.segments if d["ts_max"] is not None), default=None)
 
-    from .fused import fused_cow_merge
+    @property
+    def touched(self) -> list[int]:
+        # every surviving event's key yields exactly one LWW winner, so the
+        # winners' bucket set equals the surviving events' bucket set
+        return sorted({b for d in self.segments for b in d["buckets"]})
 
-    computed = _computed_cols(cur.names())
-    target = table.read(include_deleted=True, as_schema=cur)
-    # layout input clamped to the gate's micro-batch bound: the footer row
-    # bound is loose (whole source files vs the batch's slice), and an
-    # inflated row estimate tips sort_layout into a second salt shard —
-    # doubling files per commit and read amplification for nothing. The
-    # clamp is spill-safe: the gate caps true rows at table + bound <= 2x
-    # this value, well inside one shard's sorter budget.
-    out = fused_cow_merge(
-        target, normalized, key, OP_COL, order_cols, cur.to_spark(),
-        computed, snap.n_buckets,
-        total_rows=min(table_rows + src_rows_bound, 4 * MIN_ROWS_PER_SHARD),
-    )
-    # AQE off around the union write, same rationale as the fused MOR
-    # write: join-free, explicitly-partitioned plan — AQE contributes
-    # only stage materialization latency here (A/B'd r6)
-    spark = table.spark
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        files = table.write_data_files_prepartitioned(
-            out, snap.version + 1, cur.version
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    _mark("t_merge_write")
-    seg_stats = _fold_seg_stats(stats_future.result())
-    _mark("t_stats")
-    new_ids = [d["batch_id"] for d in seg_stats]
-    if not new_ids:  # fully replayed: the write rewrote identical rows;
-        # nothing is committed, the uuid directory stays orphaned
-        exact_future.result()  # drain (its input is empty too)
-        return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
-    events_in = sum(d["events_in"] for d in seg_stats)
-    late_dropped = sum(d["late_dropped"] or 0 for d in seg_stats)
-    max_ts = max((d["ts_max"] for d in seg_stats if d["ts_max"] is not None), default=None)
-    touched = sorted({b for d in seg_stats for b in (d["buckets"] or [])})
+    @property
+    def max_bucket_live(self) -> int:
+        return max((d["max_bucket_live"] for d in self.segments), default=0)
 
-    seg_rows = exact_future.result()
-    n_winners, n_deletes, max_key_rows, _ = _absorb_exact(
-        seg_rows, seg_stats, order_cols, hot_key_threshold=2**63 - 1
-    )
-    _mark("t_winner_stats")
-
-    replaced = {f.bucket for f in snap.files} | {f.bucket for f in files}
-    new_snap = table.commit(
-        files, replaced, new_ids,
-        cur if evo.changed else None,
-        _wm_update(wm_us, max_ts, lateness_s),
-        expected_version=snap.version,
-    )
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = _metrics(events_in, late_dropped, n_winners, n_deletes, len(touched), new_snap)
-    metrics["wall_ms"] = wall_ms
-    metrics["schema_changed"] = evo.changed
-    metrics["merge_strategy"] = "cow"
-    metrics["max_key_rows"] = max_key_rows
-    metrics["hot_key_routed"] = False
-    metrics["winner_stats_path"] = "exact"
-    metrics["stats_overlapped"] = True
-    metrics["phases_s"] = phase_t
-    _append_lineage(table.root, seg_stats, metrics, new_snap.version)
-    return ApplyResult(False, new_snap.version, metrics, seg_stats)
-
-
-def _absorb_exact(
-    seg_rows: list,
-    seg_stats: list[dict],
-    order_cols: tuple[str, ...],
-    hot_key_threshold: int,
-) -> tuple[int, int, int, bool]:
-    """Fold the exact per-key pass's rows into the batch bookkeeping:
-    raise on WAL-integrity violations (duplicate (key, version) delivery),
-    attribute winner/delete counts to each segment's lineage dict, and
-    return (n_winners, n_deletes, max_key_rows, hot)."""
-    if any(int(r["max_dup"] or 0) > 0 for r in seg_rows):
-        raise RuntimeError(
-            "WAL integrity violation: duplicate (key, "
-            f"{', '.join(order_cols)}) delivered within one batch; "
-            "lsn must be a unique sequence number"
-        )
-    n_winners = sum(int(r["n"]) for r in seg_rows)
-    n_deletes = sum(int(r["n_del"] or 0) for r in seg_rows)
-    max_key_rows = max((int(r["max_key_rows"] or 0) for r in seg_rows), default=0)
-    hot = max_key_rows > hot_key_threshold
-    by_bid = {int(r["batch_id"]): r for r in seg_rows}
-    for d in seg_stats:
-        r = by_bid.get(int(d["batch_id"]))
-        d["winners"] = int(r["n"]) if r is not None else 0
-        d["delete_winners"] = int(r["n_del"] or 0) if r is not None else 0
-        d["conflicts_resolved"] = (
-            int(d["events_in"]) - int(d["late_dropped"] or 0) - d["winners"]
-        )
-        d["buckets_touched"] = len(d["buckets"] or [])
-    return n_winners, n_deletes, max_key_rows, hot
-
-
-def _seg_stats_aggs(lsn_col: str, ts_col: str, late_pred) -> list:
-    """Action 1's aggregate expressions (shared by the sequential and
-    overlapped paths so the two can never drift)."""
-    return [
-        F.count(F.lit(1)).alias("n"),
-        F.min(lsn_col).alias("lsn_min"),
-        F.max(lsn_col).alias("lsn_max"),
-        F.max(ts_col).alias("ts_max"),
-        F.sum(late_pred.cast("long")).alias("late"),
-    ]
-
-
-def _fold_seg_stats(braw: list) -> list[dict]:
-    """Fold action 1's per-(segment, bucket) rows into per-segment dicts
-    (events/late counts, lsn/ts extents, touched buckets, the sound
-    per-bucket hot-key bound), sorted by batch_id."""
-    by_seg: dict[int, dict] = {}
-    for r in braw:
-        d = by_seg.setdefault(
-            r["batch_id"],
-            {
-                "batch_id": r["batch_id"],
-                "events_in": 0,
-                "lsn_min": None,
-                "lsn_max": None,
-                "ts_max": None,
-                "late_dropped": 0,
-                "buckets": set(),
-                "max_bucket_live": 0,
-            },
-        )
-        d["events_in"] += int(r["n"])
-        d["late_dropped"] += int(r["late"] or 0)
-        for col, fold in (("lsn_min", min), ("lsn_max", max), ("ts_max", max)):
-            if r[col] is not None:
-                d[col] = r[col] if d[col] is None else fold(d[col], r[col])
-        live = int(r["n"]) - int(r["late"] or 0)
-        if live > 0:
-            d["buckets"].add(r["_b"])
-            d["max_bucket_live"] = max(d["max_bucket_live"], live)
-    return sorted(by_seg.values(), key=lambda d: d["batch_id"])
-
-
-def _apply_fused_overlapped(
-    table: IceletTable,
-    batch: DataFrame,
-    sel: list,
-    cur,
-    evo,
-    key: str,
-    order_cols: tuple[str, ...],
-    applied: set,
-    wm_us,
-    lateness_s: int | None,
-    late_pred,
-    snap,
-    src_rows_bound: int,
-    _mark,
-    t0: float,
-    phase_t: dict[str, float],
-) -> ApplyResult:
-    """Fused-MOR apply with the stats job overlapped against the write
-    (see the gate comment in ``_apply_batch_inner``). Surviving rows,
-    written files, commit markers, metrics and lineage are identical to
-    the sequential fused path: the replay filter uses the full
-    applied-marker set (same survivors), the stats job runs over the
-    replay-filtered-but-NOT-late-filtered frame (late counts preserved),
-    and the write additionally drops late rows. Stats are joined before
-    anything is committed."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    spark = table.spark
-    pre = batch
-    if applied:
-        pre = pre.where(~F.col("batch_id").isin(*[int(x) for x in applied]))
-    drop_late = lateness_s is not None and wm_us is not None
-    live = pre.where(~late_pred) if drop_late else pre
-    ts_col, lsn_col = order_cols[0], order_cols[1]
-
-    pool = ThreadPoolExecutor(max_workers=1)
-    stats_future = pool.submit(
-        lambda: pre.groupBy(
-            "batch_id", bucket_expr(key, snap.n_buckets).alias("_b")
-        )
-        .agg(*_seg_stats_aggs(lsn_col, ts_col, late_pred))
-        .collect()
-    )
-    pool.shutdown(wait=False)
-
-    from .fused import fused_mor_winners
-
-    norm_bid = live.select(*sel, F.col("batch_id"))
-    normalized = norm_bid.drop("batch_id")
-    computed = _computed_cols(cur.names())
-    out = fused_mor_winners(
-        normalized, key, OP_COL, order_cols, cur.to_spark(), computed,
-        snap.n_buckets, batch_rows=src_rows_bound,
-    )
-    # AQE off around the fused write only — same rationale and guard as
-    # the sequential path (join-free, explicitly-partitioned plan). The
-    # tombstone count rides along in the harvest's threaded file pass
-    # (used on the single-segment path; the multi-segment path takes its
-    # counts from the exact pass).
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        files, mor_ndel = table.write_data_files_prepartitioned(
-            out, snap.version + 1, cur.version, sum_col=DELETED_COL
-        )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-    _mark("t_merge_write")
-    seg_stats = _fold_seg_stats(stats_future.result())
-    _mark("t_stats")
-    new_ids = [d["batch_id"] for d in seg_stats]
-    if not new_ids:  # fully replayed (the write saw zero surviving rows)
-        return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
-    events_in = sum(d["events_in"] for d in seg_stats)
-    late_dropped = sum(d["late_dropped"] or 0 for d in seg_stats)
-    max_ts = max((d["ts_max"] for d in seg_stats if d["ts_max"] is not None), default=None)
-    touched = sorted({b for d in seg_stats for b in (d["buckets"] or [])})
-    max_bucket_live = max((d["max_bucket_live"] for d in seg_stats), default=0)
-
-    if not touched:  # nothing survived late-drop: commit markers only
-        new_snap = table.commit([], set(), new_ids, cur if evo.changed else None,
-                                _wm_update(wm_us, max_ts, lateness_s),
-                                expected_version=snap.version)
-        metrics = _metrics(events_in, late_dropped, 0, 0, 0, new_snap)
-        _append_lineage(table.root, seg_stats, metrics, new_snap.version)
-        return ApplyResult(False, new_snap.version, metrics, seg_stats)
-
-    written = sum(f.rows for f in files)
-    if len(new_ids) > 1:
-        # multi-segment: per-segment winner attribution needs the exact
-        # per-key pass (post-write here; the fused pass already enforced
-        # WAL integrity partition-wide during the write)
-        seg_rows = _exact_winner_stats(norm_bid, key, order_cols)
-        n_winners, n_deletes, max_key_rows, _ = _absorb_exact(
-            seg_rows, seg_stats, order_cols, hot_key_threshold=2**63 - 1
-        )
-        if written != n_winners:
-            raise RuntimeError(
-                f"fused-merge invariant violation: {written} rows written "
-                f"for {n_winners} winner keys"
-            )
-        stats_path = "exact"
-    else:
-        n_winners = written
-        n_deletes = mor_ndel
-        max_key_rows = max_bucket_live
-        d = seg_stats[0]
-        d["winners"] = n_winners
-        d["delete_winners"] = n_deletes
-        d["conflicts_resolved"] = (
-            int(d["events_in"]) - int(d["late_dropped"] or 0) - n_winners
-        )
-        d["buckets_touched"] = len(d["buckets"] or [])
-        stats_path = "manifest"
-    _mark("t_winner_stats")
-
-    new_snap = table.commit(
-        files, set(), new_ids,
-        cur if evo.changed else None,
-        _wm_update(wm_us, max_ts, lateness_s),
-        expected_version=snap.version,
-    )
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    metrics = _metrics(events_in, late_dropped, n_winners, n_deletes, len(touched), new_snap)
-    metrics["wall_ms"] = wall_ms
-    metrics["schema_changed"] = evo.changed
-    metrics["merge_strategy"] = "mor"
-    metrics["max_key_rows"] = max_key_rows
-    metrics["hot_key_routed"] = False
-    metrics["winner_stats_path"] = stats_path
-    metrics["stats_overlapped"] = True
-    metrics["phases_s"] = phase_t
-    _append_lineage(table.root, seg_stats, metrics, new_snap.version)
-    return ApplyResult(False, new_snap.version, metrics, seg_stats)
+    @staticmethod
+    def attribute(d: dict, winners: int, deletes: int) -> None:
+        d["winners"] = winners
+        d["delete_winners"] = deletes
+        d["conflicts_resolved"] = d["events_in"] - d["late_dropped"] - winners
+        d["buckets_touched"] = len(d["buckets"])
 
 
 def _exact_winner_stats(norm_bid: DataFrame, key: str, order_cols) -> list:
-    """Action 2's aggregation (see the need_exact comment block): per-key
-    winner fold over the skinny projection, re-grouped by the winning
-    row's batch_id. Factored out so the always-exact paths can submit it
-    from a driver thread concurrently with the offsets pass."""
+    """Action 2: per-key winner fold over the SKINNY projection (key,
+    version, op, batch_id — Catalyst prunes html out of the scan; map-side
+    combinable), re-grouped by the winning row's batch_id. Per key, row
+    count vs distinct-version count exposes duplicate delivery."""
     ver = F.struct(*[F.col(c) for c in order_cols])
     return (
         norm_bid.select(key, OP_COL, "batch_id", *order_cols)
@@ -1068,160 +541,39 @@ def _exact_winner_stats(norm_bid: DataFrame, key: str, order_cols) -> list:
     )
 
 
-def _count_tombstones(root: str, files) -> int:
-    """Exact tombstone count over one commit's delta files: a threaded
-    pyarrow read of the boolean DELETED_COL only (kilobytes per file) —
-    same driver-side threaded-footer pattern as manifest harvesting, no
-    Spark job. Only the fused fast path uses it (the exact stats pass
-    computes deletes ahead of the write otherwise)."""
-    import pyarrow.compute as pc
-    from concurrent.futures import ThreadPoolExecutor
-
-    def one(f) -> int:
-        t = pq.read_table(os.path.join(root, f.path), columns=[DELETED_COL])
-        n = pc.sum(t[DELETED_COL]).as_py()
-        return int(n or 0)
-
-    if not files:
-        return 0
-    with ThreadPoolExecutor(max_workers=min(16, len(files))) as ex:
-        return sum(ex.map(one, files))
-
-
-# --------------------------------------------------------------------- merge
-# Column-expression memo (r6; same rationale as cdc/fused._EXPR_CACHE):
-# the merge's ~6 CASE columns per field cost ~0.2s of py4j round trips
-# per batch and are byte-identical across a steady stream's batches.
-_MERGE_EXPR_CACHE: dict[tuple, dict] = {}
-
-
-def _merge(
-    target: DataFrame,
-    winners: DataFrame,
-    key: str,
+def _absorb_exact(
+    seg_rows: list,
+    segments: list[dict],
     order_cols: tuple[str, ...],
-    cur,
-    computed: dict[str, str],
-    mode: str,
-) -> DataFrame:
-    """Full-outer merge: new target rows for the touched buckets.
-
-    take_src  <=>  a batch winner exists and its version >= target version
-    (stale replays lose; reference precursor: newest-extract-wins,
-    /root/reference/src/how_long_to_beat.py:287-296).
-    """
-    ck = (
-        target.sparkSession.sparkContext.applicationId,
-        cur.json() if hasattr(cur, "json") else str(cur),
-        tuple(winners.columns), key, order_cols, mode,
-    )
-    hit = _MERGE_EXPR_CACHE.get(ck)
-    if hit is not None:
-        t = target.select(hit["t_aliases"])
-        s = winners.select(hit["s_aliases"])
-        j = t.join(s.hint("SHUFFLE_HASH"), hit["cond"], "full_outer")
-        return j.select(*hit["out_cols"])
-    tcols = [f.name for f in cur.fields]
-    t_aliases = [F.col(c).alias(f"t_{c}") for c in tcols]
-    t = target.select(t_aliases)
-    s_payload = [c for c in winners.columns if c not in (BUCKET_COL,)]
-    s_aliases = [F.col(c).alias(f"s_{c}") for c in s_payload]
-    s = winners.select(s_aliases)
-    # full-outer joins cannot broadcast; without a hint the planner picks
-    # sort-merge, which sorts every payload byte of BOTH sides. Shuffled
-    # hash (Spark 3.1+ supports full-outer SHJ) builds a hash map from the
-    # batch-winners side — bounded by the batch size per partition — and
-    # STREAMS the target side, so touched-bucket payload bytes are never
-    # sorted (guide §3.1). Measured r6: parity at the sf0.1 latency floor
-    # (~1.5k-row sides); the win is structural — at scale the touched-
-    # bucket target is the big side and skipping its sort is the point.
-    cond = F.col(f"t_{key}") == F.col(f"s_{key}")
-    j = t.join(s.hint("SHUFFLE_HASH"), cond, "full_outer")
-
-    s_ver = F.struct(*[F.col(f"s_{c}") for c in order_cols])
-    t_ver = F.struct(*[F.col(f"t_{c}") for c in order_cols])
-    has_t = F.col(f"t_{key}").isNotNull()
-    has_s = F.col(f"s_{key}").isNotNull()
-    take_src = has_s & (~has_t | (s_ver >= t_ver))
-    src_is_delete = take_src & (F.col(f"s_{OP_COL}") == "D")
-
-    reset = F.col("s__has_reset") if mode == "coalesce" else F.lit(True)
-    merged_val: dict[str, F.Column] = {}
-    for f in cur.fields:
-        if f.name == DELETED_COL:
-            continue
-        sv, tv = F.col(f"s_{f.name}"), F.col(f"t_{f.name}")
-        # computed columns (text) arrive pre-extracted on the winners and
-        # merge exactly like payload: their nullness mirrors html's
-        src_val = sv if mode != "coalesce" else F.when(reset, sv).otherwise(F.coalesce(sv, tv))
-        if f.name in (key, *order_cols):
-            merged_val[f.name] = F.when(take_src, sv).otherwise(tv)
-        else:
-            # deletes become tombstones: payload nulled, key+version kept
-            merged_val[f.name] = F.when(src_is_delete, F.lit(None).cast(f.type)).otherwise(
-                F.when(take_src, src_val).otherwise(tv)
-            )
-
-    if DELETED_COL in [f.name for f in cur.fields]:
-        merged_val[DELETED_COL] = F.when(take_src, F.col(f"s_{OP_COL}") == "D").otherwise(
-            F.coalesce(F.col(f"t_{DELETED_COL}"), F.lit(False))
+    hot_key_threshold: int,
+) -> tuple[int, int, int, bool]:
+    """Fold the exact pass's rows into the batch bookkeeping: raise on
+    WAL-integrity violations (duplicate (key, version) delivery, lsn must
+    be a unique sequence number), attribute winner/delete counts to each
+    segment, and return (n_winners, n_deletes, max_key_rows, hot)."""
+    if any(int(r["max_dup"] or 0) > 0 for r in seg_rows):
+        raise RuntimeError(
+            "WAL integrity violation: duplicate (key, "
+            f"{', '.join(order_cols)}) delivered within one batch; "
+            "lsn must be a unique sequence number"
         )
-
-    cols = [merged_val[f.name].alias(f.name) for f in cur.fields]
-    _MERGE_EXPR_CACHE[ck] = {
-        "t_aliases": t_aliases, "s_aliases": s_aliases, "cond": cond,
-        "out_cols": cols,
-    }
-    return j.select(*cols)
+    n_winners = sum(int(r["n"]) for r in seg_rows)
+    n_deletes = sum(int(r["n_del"] or 0) for r in seg_rows)
+    max_key_rows = max((int(r["max_key_rows"] or 0) for r in seg_rows), default=0)
+    by_bid = {int(r["batch_id"]): r for r in seg_rows}
+    for d in segments:
+        r = by_bid.get(int(d["batch_id"]))
+        _BatchStats.attribute(
+            d,
+            int(r["n"]) if r is not None else 0,
+            int(r["n_del"] or 0) if r is not None else 0,
+        )
+    return n_winners, n_deletes, max_key_rows, max_key_rows > hot_key_threshold
 
 
 def _computed_cols(names: list[str]) -> dict[str, str]:
     """Engine-computed columns: text is extracted from html when both exist."""
     return {"text": "html"} if ("text" in names and "html" in names) else {}
-
-
-# --------------------------------------------------- coalesce-mode batch fold
-def _fold_partial_updates(
-    normalized: DataFrame, key: str, order_cols: tuple[str, ...]
-) -> DataFrame:
-    """Fold a batch of partial updates per key (reference M2 semantics).
-
-    For every payload column: the last non-null value among events at or
-    after the key's last reset (I or D). Emits the final op, final version
-    and a ``_has_reset`` flag (a reset row must NOT coalesce against the
-    pre-batch target value). Pure hash aggregation — skew-resistant.
-    """
-    ts_col, lsn_col = order_cols
-    ver = F.struct(F.col(ts_col).alias("v1"), F.col(lsn_col).alias("v2"))
-    resets = (
-        normalized.where(F.col(OP_COL).isin("I", "D"))
-        .groupBy(key)
-        .agg(F.max(ver).alias("_reset_ver"))
-    )
-    b = normalized.join(resets, key, "left")
-    after_reset = F.col("_reset_ver").isNull() | (ver >= F.col("_reset_ver"))
-    payload = [c for c in normalized.columns if c not in (OP_COL, key, *order_cols)]
-
-    aggs = [
-        F.max(ver).alias("_last_ver"),
-        F.max(F.struct(ver.alias("v"), F.col(OP_COL).alias("x"))).alias("_op_s"),
-        F.max(F.col("_reset_ver")).alias("_rv"),
-    ]
-    for c in payload:
-        cond = (F.col(OP_COL) != "D") & after_reset & F.col(c).isNotNull()
-        aggs.append(F.max(F.when(cond, F.struct(ver.alias("v"), F.col(c).alias("x")))).alias(f"_f_{c}"))
-    g = b.groupBy(key).agg(*aggs)
-
-    sel = [
-        F.col(key),
-        F.col("_op_s.x").alias(OP_COL),
-        F.col(f"_last_ver.v1").alias(ts_col),
-        F.col(f"_last_ver.v2").alias(lsn_col),
-        F.col("_rv").isNotNull().alias("_has_reset"),
-    ]
-    for c in payload:
-        sel.append(F.col(f"_f_{c}.x").alias(c))
-    return g.select(*sel)
 
 
 # ------------------------------------------------------------------- lineage
@@ -1234,17 +586,17 @@ def _wm_update(wm_us: int | None, max_ts, lateness_s: int | None) -> dict:
     return {"watermark_us": new_wm}
 
 
-def _metrics(events_in, late_dropped, n_winners, n_deletes, n_buckets_touched, snap) -> dict:
+def _metrics(st: _BatchStats, n_winners, n_deletes, snap) -> dict:
     # rows_after is the manifest row count: exact live+tombstone rows under
     # cow; under mor it counts STORED rows (shadowed delta rows included)
     # until compaction folds them — computing live rows would cost a scan.
     return {
-        "events_in": int(events_in),
-        "late_dropped": int(late_dropped),
+        "events_in": int(st.events_in),
+        "late_dropped": int(st.late_dropped),
         "winners": int(n_winners),
-        "conflicts_resolved": int(events_in - late_dropped - n_winners),
+        "conflicts_resolved": int(st.live_rows - n_winners),
         "delete_winners": int(n_deletes),
-        "buckets_touched": int(n_buckets_touched),
+        "buckets_touched": len(st.touched),
         "rows_after": int(snap.total_rows()),
         "snapshot_version": int(snap.version),
         "extractor_version": EXTRACTOR_VERSION,

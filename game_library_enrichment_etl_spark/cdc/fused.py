@@ -1,11 +1,13 @@
-"""Fused single-shuffle MOR apply: one payload exchange per batch.
+"""The two CDC merge formulations: one payload exchange per batch.
 
-Round-2/3 profiling (BENCH/profile_apply.py, BENCH/decompose.py) showed the
-merge-write phase of the MOR apply was the scaling bottleneck, and that its
-cost was structural: the skinny-join path scanned the segment twice more
-and moved every payload byte through TWO exchanges (the SHUFFLE_HASH fetch
-join on key, then the bucket repartition before the write). This module
-replaces that with the minimal data movement the semantics allow:
+``fused_mor_winners`` (merge-on-read, overwrite mode) and
+``fused_cow_merge`` (copy-on-write, and coalesce mode on either strategy)
+are the only merge paths cdc/apply.py runs. Neither joins: a skinny-join
+formulation scanned the segment twice more and moved every payload byte
+through TWO exchanges (a SHUFFLE_HASH fetch join on key, then the bucket
+repartition before the write), and round-2/3 profiling showed that
+structural cost dominated the merge-write phase. Both functions instead
+move the data the minimum the semantics allow:
 
     window over exact-routed partitioning of (_bucket[, _salt]) groups
     (lake/table.route_expr)                          -- the ONLY exchange
@@ -192,64 +194,67 @@ def fused_cow_merge(
     computed: dict[str, str],
     n_buckets: int,
     total_rows: int | None = None,
+    mode: str = "overwrite",
 ) -> DataFrame:
-    """COW MERGE as union + one route exchange + partition-local LWW
-    (r6; the copy-on-write twin of ``fused_mor_winners``).
+    """COW MERGE as union + one route exchange + partition-local fold
+    (the copy-on-write twin of ``fused_mor_winners``).
 
-    The join formulation (cdc/apply._merge) moved the touched payload
-    bytes through THREE exchanges: the batch LWW dedup, the full-outer
-    join on key, and the bucket-route repartition before the write. But
-    the merge decision per key — "batch winner replaces the target row
-    iff its (warc_ts, lsn) is >= the target's; op='D' tombstones;
-    otherwise the target row carries forward" — is exactly an LWW fold
-    over the UNION of target rows and batch rows with a source-wins tie
-    break. So: tag target rows pref=0 / batch rows pref=1, union (no
-    shuffle), route-repartition once, sort partition-locally by (key ASC,
-    version DESC, pref DESC), keep each key's first row. Equivalence with
-    the join formulation, case by case for a key's first-sorted row:
+    A full-outer-join formulation moves the touched payload bytes through
+    THREE exchanges: the batch LWW dedup, the join on key, and the
+    bucket-route repartition before the write. But the merge decision per
+    key — "batch winner replaces the target row iff its (warc_ts, lsn) is
+    >= the target's; op='D' tombstones; otherwise the target row carries
+    forward" — is exactly an LWW fold over the UNION of target rows and
+    batch rows with a source-wins tie break. So: tag target rows pref=0 /
+    batch rows pref=1, union (no shuffle), route-repartition once, sort
+    partition-locally by (key ASC, version DESC, pref DESC), keep each
+    key's first row. Case by case for a key's first-sorted row:
 
     - batch row first and batch version > target's (or no target row):
-      take_src was true — same row wins; tombstoning below matches the
-      join path's delete CASEs.
-    - version tie: pref DESC puts the batch row first; take_src used
-      ``>=`` — same winner.
-    - target row first (its version is higher): take_src was false — the
-      target row carries forward verbatim, including an existing
-      tombstone (its op is re-derived as 'D' from the stored flag, so
-      the projection reproduces ``coalesce(t._deleted, false)``).
-    - batch rows never deduped up front: the sort orders a key's batch
-      rows version-DESC, so the first is the batch LWW winner — the
-      separate pre-merge dedup exchange is gone. Duplicate (key,
-      version) delivery raised in the exact stats pass BEFORE this runs
-      (unchanged), so winner ties within the batch cannot occur.
+      the batch winner replaces the row; ``op='D'`` tombstones it.
+    - version tie: pref DESC puts the batch row first — source wins.
+    - target row first (its version is higher): the target row carries
+      forward verbatim, including an existing tombstone (its op is
+      re-derived as 'D' from the stored flag).
+    - batch rows are never deduped up front: the sort orders a key's batch
+      rows version-DESC, so the first is the batch LWW winner. Duplicate
+      (key, version) delivery raises in the apply's exact stats pass
+      before the commit, so winner ties within the batch never commit.
+
+    ``mode='coalesce'`` (reference M2, ``pandas.DataFrame.update``) folds
+    the same sorted union per key instead of keeping one row verbatim.
+    The stored row counts as a reset (op ``I``, or ``D`` if tombstoned) at
+    its own version; the key's reset point is its latest I/D row by
+    (version, pref); each payload column takes its last non-null value
+    from the non-D rows at or after the reset point. The first-sorted row
+    still decides the key, the version and whether the key is deleted.
+    The fold is two window passes partitioned by (route, bucket[, salt],
+    key) — the same sort order, so no second exchange or sort is planned.
 
     Extraction (the only Python work) runs AFTER the winner filter and
-    receives NULL html for target-won and delete rows — target text is
-    passed through, never re-extracted, so per-batch Python cost stays
-    O(batch winners), never O(touched buckets).
+    receives NULL html unless the winning html came from a batch row —
+    stored text is passed through, never re-extracted, so per-batch Python
+    cost stays O(batch winners), never O(touched buckets).
 
     ``target`` must be the bucket-pruned read with tombstones included,
     projected to ``cur_schema`` (computed columns present); ``batch`` is
     the normalized projection (op + payload columns, computed absent).
     Output is bucket-clustered and key-sorted within buckets, ready for
-    ``write_data_files_prepartitioned`` — same file layout, key bounds
-    and per-commit file count as the join path's sorted write."""
+    ``write_data_files_prepartitioned``."""
     spark = target.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts, n_salts = sort_layout(nparts, n_buckets, total_rows)
     x = _cow_exprs(
         spark.sparkContext.applicationId, key, op_col, order_cols,
         cur_schema, tuple(sorted(computed.items())), n_buckets, n_parts,
-        n_salts,
+        n_salts, mode,
     )
-    t_side = target.select(*x["t_side"])
-    b_side = batch.select(*x["b_side"])
-    src = t_side.unionByName(b_side)
+    src = target.select(*x["t_side"]).unionByName(batch.select(*x["b_side"]))
     src = src.select(F.col("*"), *x["pw_aliased"])
     src = src.repartition(n_parts, x["pw0"])
-    sel = src.select(F.col("*"), x["first"])
-    winners = sel.where(F.col("_first"))
-    return winners.select(*x["out_cols"])
+    for stage in x["stages"]:
+        src = src.select(F.col("*"), *stage)
+    return src.where(F.col("_first")).select(*x["out_cols"])
 
 
 def _cow_exprs(
@@ -262,10 +267,11 @@ def _cow_exprs(
     n_buckets: int,
     n_parts: int,
     n_salts: int,
+    mode: str,
 ) -> dict:
     ck = (
         "cow", app_id, key, op_col, order_cols, cur_schema.json(),
-        computed_t, n_buckets, n_parts, n_salts,
+        computed_t, n_buckets, n_parts, n_salts, mode,
     )
     hit = _EXPR_CACHE.get(ck)
     if hit is not None:
@@ -276,13 +282,13 @@ def _cow_exprs(
         f.name for f in cur_schema.fields
         if f.name not in computed and f.name != DELETED_COL
     ]
-    # target rows re-derive op from the stored tombstone flag so the
-    # shared winner projection reproduces them verbatim; batch rows carry
-    # their op and NULL computed columns (filled by extraction if they win)
+    # target rows re-derive op from the stored tombstone flag — a stored
+    # row is a reset (I, or D when tombstoned) at its own version; batch
+    # rows carry their op and NULL computed columns
     t_side = [
         F.when(
             F.coalesce(F.col(DELETED_COL), F.lit(False)), F.lit("D")
-        ).otherwise(F.lit("U")).alias(op_col),
+        ).otherwise(F.lit("I")).alias(op_col),
         *[F.col(c) for c in payload],
         *[F.col(c) for c in computed],
         F.lit(0).alias("_pref"),
@@ -300,43 +306,74 @@ def _cow_exprs(
     # bucket must exist before the layout exprs reference it
     t_side.append(bucket_expr(key, n_buckets).alias(BUCKET_COL))
     b_side.append(bucket_expr(key, n_buckets).alias(BUCKET_COL))
-    w = Window.partitionBy(*[F.col(a) for a in pw]).orderBy(
-        F.col(key).asc(),
-        *[F.col(c).desc() for c in order_cols],
-        F.col("_pref").desc(),
-    )
+    desc = [*[F.col(c).desc() for c in order_cols], F.col("_pref").desc()]
+    w = Window.partitionBy(*[F.col(a) for a in pw]).orderBy(F.col(key).asc(), *desc)
     prev_key = F.lag(F.col(key)).over(w)
     is_first = (F.row_number().over(w) == 1) | (~prev_key.eqNullSafe(F.col(key)))
+    stages = [[is_first.alias("_first")]]
 
     is_del = F.col(op_col) == "D"
+    folded: dict[str, F.Column] = {}
+    if mode == "coalesce":
+        # per-key frame over the same sort order (route, bucket[, salt] and
+        # key ascending, then version and pref descending): first-with-
+        # ignorenulls over it is "latest" in version order
+        wk = (
+            Window.partitionBy(*[F.col(a) for a in pw], F.col(key))
+            .orderBy(*desc)
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        vp = F.struct(*[F.col(c) for c in order_cols], F.col("_pref"))
+        reset = F.first(F.when(F.col(op_col).isin("I", "D"), vp), ignorenulls=True)
+        stages[0].append(reset.over(wk).alias("_reset"))
+        live_after = ~is_del & (F.col("_reset").isNull() | (vp >= F.col("_reset")))
+        text_of = {src: name for name, src in computed.items()}
+        fold_cols = []
+        for c in payload:
+            if c in (key, *order_cols):
+                continue
+            # the supplying row's pref (and stored text, for an extraction
+            # source) ride along so extraction runs only on batch-won html
+            parts = [F.col("_pref").alias("p"), F.col(c).alias("v")]
+            if c in text_of:
+                parts.append(F.col(text_of[c]).alias("t"))
+            fold = F.first(
+                F.when(live_after & F.col(c).isNotNull(), F.struct(*parts)),
+                ignorenulls=True,
+            )
+            fold_cols.append(fold.over(wk).alias(f"_f_{c}"))
+            folded[c] = F.col(f"_f_{c}")
+        stages.append(fold_cols)
+
     out_cols = []
     for f in cur_schema.fields:
         if f.name == DELETED_COL:
             out_cols.append(is_del.alias(f.name))
         elif f.name in computed:
             src_col = computed[f.name]
+            if src_col in folded:
+                from_batch = folded[src_col].getField("p") == 1
+                html = folded[src_col].getField("v")
+                stored = folded[src_col].getField("t")
+            else:
+                from_batch = F.col("_pref") == 1
+                html, stored = F.col(src_col), F.col(f.name)
             # batch-won live rows extract; target-won rows pass their
             # stored value through. The UDF is evaluated eagerly for
             # every winner row, so non-extracting rows feed it NULL
             # (cheap) instead of gating with a CASE around the UDF.
-            extracted = extract_text_udf(
-                F.when((F.col("_pref") == 1) & ~is_del, F.col(src_col))
-            )
+            extracted = extract_text_udf(F.when(from_batch & ~is_del, html))
             out_cols.append(
-                F.when(
-                    ~is_del,
-                    F.when(F.col("_pref") == 1, extracted).otherwise(F.col(f.name)),
-                )
+                F.when(~is_del, F.when(from_batch, extracted).otherwise(stored))
                 .cast(f.dataType)
                 .alias(f.name)
             )
         elif f.name in (key, *order_cols):
             out_cols.append(F.col(f.name))
         else:
+            val = folded[f.name].getField("v") if f.name in folded else F.col(f.name)
             out_cols.append(
-                F.when(is_del, F.lit(None).cast(f.dataType))
-                .otherwise(F.col(f.name))
-                .alias(f.name)
+                F.when(is_del, F.lit(None).cast(f.dataType)).otherwise(val).alias(f.name)
             )
     out_cols.append(F.col(BUCKET_COL))
     built = {
@@ -344,7 +381,7 @@ def _cow_exprs(
         "b_side": b_side,
         "pw_aliased": pw_aliased,
         "pw0": F.col(pw[0]),
-        "first": is_first.alias("_first"),
+        "stages": stages,
         "out_cols": out_cols,
     }
     _EXPR_CACHE[ck] = built

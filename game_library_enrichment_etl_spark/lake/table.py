@@ -17,6 +17,7 @@ read / merge-commit / snapshot) so a real Iceberg catalog could slot in.
 from __future__ import annotations
 
 import os
+import re
 import threading
 import uuid
 from functools import lru_cache, reduce
@@ -26,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .schema import TableSchema, evolve
+from .schema import Field, TableSchema, evolve
 from .snapshot import (
     DataFileMeta,
     Snapshot,
@@ -54,7 +55,7 @@ def bucket_expr(key_col: str, n_buckets: int):
 # (write_data_files / write_data_files_prepartitioned); the read path
 # exploits that to derive _seq from the file path instead of planning one
 # scan branch per sequence — after verifying the invariant per file
-_COMMIT_DIR_RE = __import__("re").compile(r"^v(\d+)-[0-9a-f]{8}$")
+_COMMIT_DIR_RE = re.compile(r"^v(\d+)-[0-9a-f]{8}$")
 
 
 def _path_sequence(rel_path: str) -> int | None:
@@ -73,9 +74,12 @@ def _seq_from_file_path():
     """Row-level _seq: parse the commit directory out of the scanned file's
     absolute URI. The LAST ``/data/v{seq}-{uuid8}/`` occurrence is taken so
     a table root that itself contains a look-alike component cannot
-    mis-parse (the manifest-relative suffix always supplies one match)."""
+    mis-parse (the manifest-relative suffix always supplies one match).
+    The trailing slash is a lookahead, not consumed: matches do not
+    overlap, so a consumed slash would let a root ENDING in a look-alike
+    component swallow the separator the real commit dir's match needs."""
     hits = F.regexp_extract_all(
-        F.input_file_name(), F.lit(r"/data/v(\d+)-[0-9a-f]{8}/"), F.lit(1)
+        F.input_file_name(), F.lit(r"/data/v(\d+)-[0-9a-f]{8}(?=/)"), F.lit(1)
     )
     return F.element_at(hits, -1).cast("long")
 
@@ -273,6 +277,18 @@ def layout_exprs(
     return [route], [route, *cluster]
 
 
+def _table_schema(schema: T.StructType | TableSchema) -> TableSchema:
+    """``schema`` as a TableSchema that carries the engine-managed
+    tombstone column (appended when absent): deletes are kept as tombstone
+    rows (key + version, payload nulls) so a stale out-of-order event in a
+    later batch cannot resurrect a deleted key."""
+    ts = schema if isinstance(schema, TableSchema) else TableSchema.from_spark(schema, 0)
+    if DELETED_COL in ts.names():
+        return ts
+    next_id = max((f.id for f in ts.fields), default=0) + 1
+    return TableSchema(ts.version, [*ts.fields, Field(next_id, DELETED_COL, "boolean")])
+
+
 class IceletTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -300,14 +316,15 @@ class IceletTable:
           O(batch), never O(table); reads resolve last-writer-wins per key by
           (version_cols, file sequence) and ``compact`` folds buckets back to
           one resolution-free file. The scale path for 10^10-event streams.
+
+        The engine-managed ``_deleted`` tombstone column is appended to
+        ``schema`` when it lacks one.
         """
         if merge_strategy not in ("cow", "mor"):
             raise ValueError(f"merge_strategy must be cow|mor, got {merge_strategy!r}")
         if read_snapshot(root) is not None:
             raise FileExistsError(f"table already exists at {root}")
-        tschema = (
-            schema if isinstance(schema, TableSchema) else TableSchema.from_spark(schema, 0)
-        )
+        tschema = _table_schema(schema)
         props = {
             "key": key_col,
             "version_cols": list(version_cols),
@@ -353,9 +370,7 @@ class IceletTable:
             )
         if merge_strategy not in ("cow", "mor"):
             raise ValueError(f"merge_strategy must be cow|mor, got {merge_strategy!r}")
-        tschema = (
-            schema if isinstance(schema, TableSchema) else TableSchema.from_spark(schema, 0)
-        )
+        tschema = _table_schema(schema)
         props = {
             "key": key_col,
             "version_cols": list(version_cols),
@@ -435,9 +450,7 @@ class IceletTable:
             ]
         if not files:
             empty = self.spark.createDataFrame([], cur.to_spark())
-            if DELETED_COL in cur.names() and not include_deleted:
-                empty = empty.drop(DELETED_COL)
-            return empty
+            return empty if include_deleted else empty.drop(DELETED_COL)
 
         # LWW resolution is needed only when a key could span two files of
         # its bucket. Within ONE commit that is impossible (bucket and the
@@ -539,7 +552,7 @@ class IceletTable:
             ).drop("_seq")
             if f_direct:
                 out = out.unionByName(_scan_union(f_direct, attach_seq=False))
-        if DELETED_COL in cur.names() and not include_deleted:
+        if not include_deleted:
             out = out.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
         return out
 
@@ -619,8 +632,6 @@ class IceletTable:
         df: DataFrame,
         version: int,
         schema_version: int,
-        post_shuffle=None,
-        expected_rows: int | None = None,
     ) -> list[DataFileMeta]:
         """Write ``df`` (current-schema columns + ``_bucket``) as immutable
         per-bucket parquet files under a per-attempt unique directory
@@ -649,18 +660,9 @@ class IceletTable:
         # key-range skipping on point lookups.
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         n_buckets = self.snapshot().n_buckets
-        # expected_rows (caller's estimate, e.g. touched-bucket manifest
-        # rows) sizes the exchange so each task's SORT holds a bounded
-        # row count — a huge bucket funneled into one task external-sorts
-        # multi-KB payload rows (see sort_layout)
-        n_parts, n_salts = sort_layout(nparts, n_buckets, expected_rows)
+        n_parts, n_salts = sort_layout(nparts, n_buckets)
         repart_cols, _ = layout_exprs(key, n_parts, n_salts)
         staged = df.repartition(n_parts, *repart_cols).sortWithinPartitions(BUCKET_COL, key)
-        if post_shuffle is not None:
-            # optional projection applied AFTER the exchange+sort (e.g. the
-            # html->text UDF on the "join" MOR path, so text bytes are
-            # never shuffled or sorted)
-            staged = post_shuffle(staged)
         (
             staged.write.mode("errorifexists")
             .partitionBy(BUCKET_COL)

@@ -32,6 +32,7 @@ DuckDB oracle reproduces every value exactly.
 from __future__ import annotations
 
 import logging
+import os
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
@@ -60,7 +61,7 @@ _SCRATCH: list = []
 
 # deployment toggle (and the A/B seam the r6 numbers were measured with):
 # ICELET_SCRATCH=0 disables the within-query persists
-_SCRATCH_ON = __import__("os").environ.get("ICELET_SCRATCH", "1") != "0"
+_SCRATCH_ON = os.environ.get("ICELET_SCRATCH", "1") != "0"
 
 
 def _drop_scratch() -> None:

@@ -5,37 +5,32 @@ Semantics: for each key keep exactly the row with the maximum
 per-group winner selection (/root/reference/src/how_long_to_beat.py:299-339)
 and "latest timestamped extract wins" (:287-296).
 
-Three physically distinct but semantically identical strategies:
+Two physically distinct but semantically identical strategies:
 
-- ``agg`` (default): ``groupBy(key).agg(max_by(struct(*), order))``.
-  Hash aggregation does map-side partial aggregation, so a hot key is
-  reduced per input partition before the shuffle — skew-resistant by
-  construction and the scale default.
-- ``window``: ``row_number() over (partition by key order by ts desc,
-  lsn desc) = 1`` — the canonical formulation (north_star wording); all
-  rows of a key shuffle to one partition, so it is skew-SENSITIVE and
-  kept for parity testing / small batches.
 - ``salted``: explicit two-phase reduce — phase 1 groups by
-  (key, salt=pmod(lsn, S)) and reduces, phase 2 re-reduces per key.
-  Exact because max over a total order is associative + commutative
-  (SURVEY.md §4 custom-2); demonstrates hot-key splitting when the
-  aggregate is NOT partially-aggregated by the engine (e.g. after a
-  window) or when a single grouping key exceeds one task's memory.
+  (key, salt=pmod(xxhash64(version), S)) with ``max_by(struct(*),
+  version)``, phase 2 re-reduces per key. Exact because max over a total
+  order is associative + commutative (SURVEY.md §4 custom-2); both phases
+  aggregate map-side, so a hot key is split across S groups before it
+  concentrates in one task. The apply's hot-key pre-reduce.
+- ``skinny``: max version over the (key, version) projection, then a
+  payload fetch join — never sorts payload bytes. The read-time
+  ``resolve='skinny'`` strategy (lake/table.py).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STRATEGIES = ("agg", "window", "salted", "skinny")
+STRATEGIES = ("salted", "skinny")
 
 
 def lww_dedup(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = ("warc_ts", "lsn"),
-    strategy: str = "agg",
+    strategy: str = "salted",
     n_salts: int = 16,
     unique_versions: bool = False,
 ) -> DataFrame:
@@ -48,10 +43,6 @@ def lww_dedup(
     every payload byte a second time; callers that can't guarantee
     uniqueness keep the default False.
     """
-    if strategy == "agg":
-        return _lww_agg(df, key, order_cols)
-    if strategy == "window":
-        return _lww_window(df, key, order_cols)
     if strategy == "salted":
         return _lww_salted(df, key, order_cols, n_salts)
     if strategy == "skinny":
@@ -73,7 +64,7 @@ def _lww_skinny(
     shuffle-hash on 1M-event batches. Hash, not sort-merge, so multi-KB
     payload rows are never sorted.
 
-    This is the scale default for web-page-sized payloads: max_by over a
+    For web-page-sized payloads: max_by over a
     struct containing a binary column falls back to SortAggregate (hash
     aggregation needs mutable primitive buffers), which sorts every payload
     byte twice (partial + final). Equivalent output to every other
@@ -86,7 +77,7 @@ def _lww_skinny(
     # eqNullSafe throughout: groupBy treats NULL as a regular grouping value
     # (and max(struct) can surface NULL version components), so the fetch
     # join must too — plain equality would silently drop any key whose
-    # winning row has a NULL version column, diverging from agg/window.
+    # winning row has a NULL version column, diverging from salted.
     fetched = (
         df.alias("l")
         .join(
@@ -105,23 +96,6 @@ def _lww_skinny(
 
 def _ver(order_cols: tuple[str, ...]):
     return F.struct(*[F.col(c) for c in order_cols])
-
-
-def _lww_agg(df: DataFrame, key: str, order_cols: tuple[str, ...]) -> DataFrame:
-    cols = df.columns
-    winner = df.groupBy(key).agg(
-        F.max_by(F.struct(*[F.col(c) for c in cols]), _ver(order_cols)).alias("_w")
-    )
-    return winner.select(*[F.col(f"_w.{c}").alias(c) for c in cols])
-
-
-def _lww_window(df: DataFrame, key: str, order_cols: tuple[str, ...]) -> DataFrame:
-    w = Window.partitionBy(key).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def _lww_salted(

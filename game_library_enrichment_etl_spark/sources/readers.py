@@ -173,7 +173,6 @@ class JobConfig:
     checkpoint_dir: str
     n_buckets: int = 64
     merge_mode: str = "overwrite"  # or "coalesce" (M2 partial updates)
-    dedup_strategy: str = "agg"  # or "window" / "salted"
     lateness_s: int | None = None
     max_files_per_trigger: int = 1
     rename_hints: dict[str, str] = field(default_factory=dict)

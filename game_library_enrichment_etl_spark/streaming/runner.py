@@ -44,7 +44,6 @@ def run_stream(
     checkpoint_dir: str,
     schema: T.StructType | None = None,
     mode: str = "overwrite",
-    dedup_strategy: str = "agg",
     lateness_s: int | None = None,
     max_files_per_trigger: int = 1,
     on_batch: Callable[[int, ApplyResult], None] | None = None,
@@ -74,9 +73,7 @@ def run_stream(
     results: list[ApplyResult] = []
 
     def handle(df, epoch_id: int) -> None:
-        res = apply_batch(
-            table, df, mode=mode, dedup_strategy=dedup_strategy, lateness_s=lateness_s
-        )
+        res = apply_batch(table, df, mode=mode, lateness_s=lateness_s)
         results.append(res)
         _maybe_auto_compact(table, res, auto_compact, expire_keep_last, orphan_grace_s)
         if on_batch is not None:
@@ -161,7 +158,6 @@ def tail_segments(
     pattern: str = "*.parquet",
     rename_hints: dict[str, str] | None = None,
     mode: str = "overwrite",
-    dedup_strategy: str = "agg",
     lateness_s: int | None = None,
     max_segments: int | None = None,
     auto_compact: int | None = 8,
@@ -184,12 +180,7 @@ def tail_segments(
         # per-batch job's map parallelism (sources/readers.py)
         df = read_change_batch(spark, p)
         res = apply_batch(
-            table,
-            df,
-            mode=mode,
-            dedup_strategy=dedup_strategy,
-            rename_hints=rename_hints,
-            lateness_s=lateness_s,
+            table, df, mode=mode, rename_hints=rename_hints, lateness_s=lateness_s
         )
         results.append(res)
         _maybe_auto_compact(table, res, auto_compact, expire_keep_last, orphan_grace_s)

@@ -61,12 +61,47 @@ def test_coalesce_partial_updates(spark, tmp_path):
     assert got["u2"]["lsn"] == 6
 
 
-def test_coalesce_matches_sequential_model(spark, tmp_path):
-    """Ordered stream (ts monotone with lsn): engine coalesce fold ==
-    sequential pandas-update model over the whole stream."""
-    ev = gen_change_events(800, 120, seed=31, jitter_s=0, late_frac=0.0)
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_coalesce_stale_reset_keeps_stored_cells(spark, tmp_path, strategy):
+    """A stale D older than the stored row is not a reset: the later
+    partial update coalesces onto the stored row, as the sequential model
+    folds it (D, then the stored I, then the U)."""
+    b1 = _batch([("I", 10, "u1", 10, b"<p>a</p>", "en")], 0)
+    b2 = _batch(
+        [
+            ("D", 5, "u1", 5, None, None),          # stale: older than the stored row
+            ("U", 20, "u1", 20, None, "de"),        # html stays 'a'
+        ],
+        1,
+    )
+    table = create_pages_table(
+        spark, str(tmp_path / "t"), n_buckets=4, merge_strategy=strategy
+    )
+    for b in (b1, b2):
+        apply_batch(table, spark.createDataFrame(b), mode="coalesce")
+
+    want = model_coalesce_state(pd.concat([b1, b2], ignore_index=True))
+    assert want["u1"]["html"] == b"<p>a</p>" and want["u1"]["lang"] == "de"
+    (got,) = table.read().toPandas().to_dict("records")
+    assert got["url"] == "u1" and got["lsn"] == 20
+    assert got["html"] is not None and bytes(got["html"]) == b"<p>a</p>"
+    assert got["lang"] == "de"
+    assert got["text"] == "a"
+
+
+@pytest.mark.parametrize(
+    "jitter_s,late_frac", [(0, 0.0), (30, 0.05)], ids=["ordered", "out-of-order"]
+)
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_coalesce_matches_sequential_model(spark, tmp_path, strategy, jitter_s, late_frac):
+    """Engine coalesce fold == sequential pandas-update model over the
+    whole stream, on both table strategies, for an ordered stream (ts
+    monotone with lsn) and one with event-time jitter and late events."""
+    ev = gen_change_events(800, 120, seed=31, jitter_s=jitter_s, late_frac=late_frac)
     paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 4)
-    table = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4)
+    table = create_pages_table(
+        spark, str(tmp_path / "t"), n_buckets=4, merge_strategy=strategy
+    )
     for p in paths:
         apply_batch(table, spark.read.parquet(p), mode="coalesce")
     want = model_coalesce_state(ev)

@@ -1,11 +1,11 @@
 """Focused tests for the r6 COW union-merge (cdc/fused.fused_cow_merge):
 
 1. Equivalence: the union + window formulation produces exactly the rows
-   the full-outer-join formulation (cdc/apply._merge) produces, on a frame
-   exercising every merge case — target-only live row, target-only
-   tombstone, batch-only insert, batch-only delete, batch newer than
-   target, batch STALE (older than target), exact version tie (source
-   must win), and multiple batch rows per key (in-batch LWW).
+   a full-outer-join merge of the batch LWW winners produces, derived by
+   hand on a frame exercising every merge case — target-only live row,
+   target-only tombstone, batch-only insert, batch-only delete, batch
+   newer than target, batch STALE (older than target), exact version tie
+   (source must win), and multiple batch rows per key (in-batch LWW).
 2. Plan shape: exactly ONE exchange, and extraction sits above the winner
    filter (losers and target-won rows never feed Python real html).
 """
@@ -17,13 +17,10 @@ import re
 
 from pyspark.sql import functions as F
 
-from game_library_enrichment_etl_spark.cdc.apply import _merge
 from game_library_enrichment_etl_spark.cdc.fused import fused_cow_merge
 from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA
-from game_library_enrichment_etl_spark.functions.extract import extract_text_udf
+from game_library_enrichment_etl_spark.functions.extract import extract_text_one
 from game_library_enrichment_etl_spark.lake.schema import TableSchema
-from game_library_enrichment_etl_spark.lake.table import BUCKET_COL, bucket_expr
-from game_library_enrichment_etl_spark.operators.lww import lww_dedup
 
 
 def _ts(s: int):
@@ -62,29 +59,42 @@ def _frames(spark):
 
 
 def _rows(df):
+    """(url, warc_ts epoch seconds, lsn, html, text, lang, _deleted), sorted."""
     cols = [f.name for f in PAGES_SCHEMA.fields]
+    out = df.select(*cols).withColumn("warc_ts", F.col("warc_ts").cast("long"))
     return sorted(
-        tuple(r[c] for c in cols) for r in df.select(*cols).collect()
+        tuple(bytes(r[c]) if isinstance(r[c], bytearray) else r[c] for c in cols)
+        for r in out.collect()
     )
+
+
+def _live(url: str, lsn: int, html: bytes) -> tuple:
+    # every fixture row's warc_ts is lsn seconds past the fixture epoch
+    return (url, int(_ts(lsn).timestamp()), lsn, html, extract_text_one(html), "en", False)
+
+
+def _tombstone(url: str, lsn: int) -> tuple:
+    return (url, int(_ts(lsn).timestamp()), lsn, None, None, None, True)
 
 
 def test_cow_union_merge_equals_join_merge(spark):
     cur, target, batch = _frames(spark)
-    computed = {"text": "html"}
-
-    # join formulation (the r6-start path, still serving coalesce mode)
-    winners = lww_dedup(batch, "url", ("warc_ts", "lsn"), strategy="agg",
-                        unique_versions=True)
-    winners = winners.withColumn(
-        "text", F.when(F.col("op") != "D", extract_text_udf(F.col("html")))
-    ).withColumn(BUCKET_COL, bucket_expr("url", 8))
-    joined = _merge(target, winners, "url", ("warc_ts", "lsn"), cur, computed,
-                    "overwrite")
-
     fused = fused_cow_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
-                            cur.to_spark(), computed, 8, total_rows=16)
+                            cur.to_spark(), {"text": "html"}, 8, total_rows=16)
 
-    want = _rows(joined)
+    # the full-outer-join merge of the batch LWW winners, case by case:
+    # take the batch winner iff its version >= the target's, tombstone it
+    # if it is a D, else carry the target row (stored text included)
+    want = sorted([
+        ("u/target-only", int(_ts(10).timestamp()), 10, b"<p>t1</p>", "t1", "en", False),
+        _tombstone("u/tombstone", 11),
+        _live("u/batch-newer", 40, b"<p>fresh</p>"),
+        ("u/batch-stale", int(_ts(50).timestamp()), 50, b"<p>kept</p>", "kept", "en", False),
+        _live("u/tie", 20, b"<p>s-tie</p>"),
+        _live("u/batch-only", 30, b"<p>new doc</p>"),
+        _tombstone("u/batch-del", 31),
+        _live("u/multi", 62, b"<p>v3 wins</p>"),
+    ])
     got = _rows(fused)
     assert got == want, f"union merge diverges from join merge:\n{got}\nvs\n{want}"
     # spot-check the interesting cases landed as designed
@@ -98,12 +108,15 @@ def test_cow_union_merge_equals_join_merge(spark):
 
 def test_cow_union_merge_plan_shape(spark):
     cur, target, batch = _frames(spark)
-    fused = fused_cow_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
-                            cur.to_spark(), {"text": "html"}, 8, total_rows=16)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") == 1, f"expected exactly one exchange:\n{plan}"
-    n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
-    assert n_sorts == 1, f"expected exactly one sort:\n{plan}"
-    # extraction above the winner filter: losers never reach Python
-    i_filt, i_py = plan.index("Filter"), plan.index("ArrowEvalPython")
-    assert i_py < i_filt, f"extraction must sit above the winner filter:\n{plan}"
+    # coalesce mode folds over the same union, exchange and sort
+    for mode in ("overwrite", "coalesce"):
+        fused = fused_cow_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
+                                cur.to_spark(), {"text": "html"}, 8, total_rows=16,
+                                mode=mode)
+        plan = fused._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("Exchange") == 1, f"{mode}: expected exactly one exchange:\n{plan}"
+        n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
+        assert n_sorts == 1, f"{mode}: expected exactly one sort:\n{plan}"
+        # extraction above the winner filter: losers never reach Python
+        i_filt, i_py = plan.index("Filter"), plan.index("ArrowEvalPython")
+        assert i_py < i_filt, f"{mode}: extraction must sit above the winner filter:\n{plan}"

@@ -170,20 +170,6 @@ def test_create_or_replace_resets_and_keeps_history(spark, tmp_path):
     pd.testing.assert_frame_equal(state1, _state(table))
 
 
-def test_mor_join_path_equals_fused(spark, tmp_path):
-    """The two MOR physical paths (fused single-shuffle window vs skinny
-    join + bucket repartition) must produce identical final state —
-    mor_path='join' is the measured fallback, 'fused' the default."""
-    ev = gen_change_events(2000, 250, seed=9)
-    paths = write_change_segments(str(tmp_path / "wal"), ev, 4)
-    tf = create_pages_table(spark, str(tmp_path / "f"), n_buckets=4, merge_strategy="mor")
-    tj = create_pages_table(spark, str(tmp_path / "j"), n_buckets=4, merge_strategy="mor")
-    for p in paths:
-        apply_batch(tf, spark.read.parquet(p), mor_path="fused")
-        apply_batch(tj, spark.read.parquet(p), mor_path="join")
-    pd.testing.assert_frame_equal(_state(tf), _state(tj))
-
-
 def test_read_resolve_window_equals_skinny(spark, tmp_path):
     """VERDICT r3 next #6: the read-time LWW resolve has a fused-style
     window strategy (one payload exchange, bucket-partitioned sort) — it
@@ -216,14 +202,23 @@ def test_single_reader_resolve_seq_from_path(spark, tmp_path):
     from game_library_enrichment_etl_spark.lake import table as lake_table
 
     ev = gen_change_events(1200, 150, seed=29, delete_frac=0.1)
-    # root deliberately contains a look-alike data/v{n}-{hex8} pair so the
-    # executor-side regex must take the LAST match, not the first
-    root = tmp_path / "data" / "v1-deadbeef" / "pages"
     paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 4)
-    t = create_pages_table(spark, str(root), n_buckets=4, merge_strategy="mor")
-    for p in paths:
-        apply_batch(t, spark.read.parquet(p))
+    # each root contains a look-alike data/v{n}-{hex8} pair, so the
+    # executor-side regex must take the LAST match, not the first; the
+    # second root ENDS in it, so a match that consumed its trailing slash
+    # would swallow the separator the real commit dir's match needs
+    roots = (
+        tmp_path / "data" / "v1-deadbeef" / "pages",
+        tmp_path / "end" / "data" / "v1-deadbeef",
+    )
+    for root in roots:
+        t = create_pages_table(spark, str(root), n_buckets=4, merge_strategy="mor")
+        for p in paths:
+            apply_batch(t, spark.read.parquet(p))
+        _check_seq_from_path(t, lake_table)
 
+
+def _check_seq_from_path(t, lake_table):
     snap = t.snapshot()
     assert len({f.sequence for f in snap.files}) == 4
     # driver-side invariant: every written file's path encodes its sequence
