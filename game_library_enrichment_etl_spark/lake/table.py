@@ -92,16 +92,16 @@ ROWS_PER_SORT_SHARD = 250_000
 # layout granularity (see sort_layout): never shard finer than this many
 # rows, target ~TASK_WAVES tasks per slot, and keep at least
 # GROUPS_PER_PARTITION distinct (bucket, salt) hash groups per exchange
-# partition so balls-in-bins variance stays bounded. Deployment-tunable
-# via env (each task carries a fixed cost — python worker checkout, arrow
-# stream setup, parquet file init — measured ~0.3s on the bench host, so
-# waves trade straggler absorption against per-task overhead).
-MIN_ROWS_PER_SHARD = int(os.environ.get("ICELET_MIN_ROWS_PER_SHARD", "25000"))
-TASK_WAVES = int(os.environ.get("ICELET_TASK_WAVES", "2"))
-GROUPS_PER_PARTITION = int(os.environ.get("ICELET_GROUPS_PER_PARTITION", "8"))
+# partition so balls-in-bins variance stays bounded. Each task carries a
+# fixed cost — python worker checkout, arrow stream setup, parquet file
+# init — measured ~0.3s on the bench host, so waves trade straggler
+# absorption against per-task overhead.
+MIN_ROWS_PER_SHARD = 25_000
+TASK_WAVES = 2
+GROUPS_PER_PARTITION = 8
 # latency-regime refinement (see sort_layout): minimum rows per task when
 # splitting a small batch across extra same-salt partitions
-MIN_ROWS_PER_TASK = int(os.environ.get("ICELET_MIN_ROWS_PER_TASK", "3000"))
+MIN_ROWS_PER_TASK = 3_000
 
 
 def sort_layout(

@@ -32,7 +32,6 @@ DuckDB oracle reproduces every value exactly.
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
@@ -59,10 +58,6 @@ logger = logging.getLogger(__name__)
 # the fingerprint table once and reading it back (guide §8 step 1).
 _SCRATCH: list = []
 
-# deployment toggle (and the A/B seam the r6 numbers were measured with):
-# ICELET_SCRATCH=0 disables the within-query persists
-_SCRATCH_ON = os.environ.get("ICELET_SCRATCH", "1") != "0"
-
 
 def _drop_scratch() -> None:
     while _SCRATCH:
@@ -73,8 +68,6 @@ def _drop_scratch() -> None:
 
 
 def _scratch_persist(df: DataFrame) -> DataFrame:
-    if not _SCRATCH_ON:
-        return df
     df = df.persist(StorageLevel.MEMORY_AND_DISK)
     _SCRATCH.append(df)
     return df

@@ -3,6 +3,9 @@
 Defaults follow the public Spark tuning guidance: AQE on, shuffle
 partitions ~ cores in local mode, Arrow on for pandas UDFs, UTC session
 timezone so results compare bit-stably against the DuckDB oracle.
+
+The factory only configures: it submits no Spark job, so a fresh JVM's
+codegen and JIT compile costs land in the first queries that need them.
 """
 
 from __future__ import annotations
@@ -60,223 +63,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    _warm_session(spark)
     return spark
-
-
-def _warm_session(spark: SparkSession) -> None:
-    """One-time generic JIT/codegen warm-up for a fresh JVM.
-
-    A cold local session pays multi-second first-query latency for paths
-    every job here uses: the parquet reader/writer, shuffle write+fetch,
-    WholeStageCodegen compilation (janino), window/aggregate execs, the
-    AQE stage machinery, the Python worker pool and the noop sink.
-    Exercising each once at session creation moved 1.4-3.4s from the
-    FIRST real query of a fresh JVM into startup (measured per query
-    class at sf0.1, OPTIMIZATION_r06.md) — the same cold-start cost a
-    deployed streaming runner pays on its first micro-batch. Purely
-    synthetic data (range + a temp-dir parquet round-trip): nothing is
-    read from, keyed on, or cached for any real input.
-
-    Skippable with SPARK_GRAFT_SESSION_WARM=0; runs once per JVM (marker
-    conf), so getOrCreate re-entry is free."""
-    if os.environ.get("SPARK_GRAFT_SESSION_WARM", "1") == "0":
-        return
-    try:
-        if spark.conf.get("spark.graft.sessionWarmed", "0") == "1":
-            return
-    except Exception:
-        pass
-    import shutil
-    import tempfile
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    d = tempfile.mkdtemp(prefix="spark_graft_warm_")
-    try:
-        df = spark.range(0, 20000, 1, 8).selectExpr(
-            "id", "id % 7 AS k", "cast(id AS string) AS s"
-        )
-        df.write.mode("overwrite").parquet(d)
-        r = spark.read.parquet(d)
-        w = Window.partitionBy("k").orderBy("id")
-        out = (
-            r.withColumn("rn", F.row_number().over(w))
-            .groupBy("k")
-            .agg(F.count(F.lit(1)).alias("n"), F.max("s").alias("m"))
-            .join(r.where(F.col("id") < 10).select("k", "id"), "k", "left")
-        )
-        out.write.format("noop").mode("overwrite").save()
-
-        @F.pandas_udf("long")
-        def _identity(x):
-            return x
-
-        spark.range(0, 1000, 1, 4).select(_identity("id")).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        # the engine's staple expression kernels (shared md5/conv token
-        # hash, whitespace-normalize regex, levenshtein, higher-order
-        # array transforms + collect_list agg): compiling these codegen
-        # templates once here measured -1.1s off the first real query
-        # that uses them (exact_dedup 1.6 -> 0.5, minhash 3.9 -> 2.8)
-        txt = spark.range(0, 5000, 1, 8).select(
-            F.concat(F.lit("warm txt "), F.col("id").cast("string")).alias("s")
-        )
-        hashed = txt.select(
-            F.md5(F.trim(F.regexp_replace(F.lower("s"), r"\s+", " "))).alias("m"),
-            F.conv(F.substring(F.md5("s"), 1, 15), 16, 10).cast("bigint").alias("h"),
-            F.levenshtein("s", F.reverse("s")).alias("lv"),
-            F.transform(
-                F.split("s", " "),
-                lambda t: F.conv(F.substring(F.md5(t), 1, 15), 16, 10).cast("bigint"),
-            ).alias("arr"),
-        )
-        hashed.groupBy("m").agg(
-            F.count(F.lit(1)),
-            F.min("h"),
-            F.max("lv"),
-            F.array_sort(F.collect_list("h")),
-        ).write.format("noop").mode("overwrite").save()
-        # r6: warm the OPERATOR plan shapes themselves, not just their
-        # leaf kernels. First-query profiling showed 1.5-3s of residual
-        # cold cost per query family even after the generic kernels above
-        # — WholeStageCodegen compiles (janino) of the big fused stages
-        # (the 12 affine minhash minima, the PPJoin prefix aggregation,
-        # banded self-joins, SRP projections, levenshtein blocking) are
-        # cached by generated source, so compiling them once here on a
-        # 64-row synthetic corpus (same parameterizations as the declared
-        # queries; literals are inlined into the generated code) moves
-        # that cost into untimed session startup — the same one-time cost
-        # a deployed runner pays on its first micro-batch. Purely
-        # synthetic range-derived data; nothing reads any real input.
-        def _noop(q):
-            q.write.format("noop").mode("overwrite").save()
-
-        from .operators import ann as _ann
-        from .operators import dedup as _dd
-        from .operators import similarity as _sim
-
-        words = F.array(*[F.lit(f"w{i}") for i in range(12)])
-        docs = spark.range(0, 64, 1, 4).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(24)),
-                    lambda i: F.element_at(
-                        words, (F.pmod(F.col("id") * 3 + i * 7, F.lit(12)) + 1).cast("int")
-                    ),
-                ),
-            ).alias("text"),
-        )
-        # C2 warm-up corpus (r6): compiling the codegen classes (the 64-row
-        # pass above) is necessary but not sufficient — HotSpot only
-        # promotes the generated loops to C2 after ~10^4 iterations, so
-        # first real queries still ran 1.5-3x their steady state (measured:
-        # same-JVM ngram sample 2.9 -> 2.6 -> 1.4s across three runs).
-        # A second pass over a LARGER synthetic corpus drives the same
-        # generated methods past the compile threshold at startup. The
-        # vocabulary is wide (4096 synthetic words) so texts are distinct
-        # and candidate pairs stay near-linear — the point is row count
-        # through the hot loops, not pair count. Row count is env-tunable;
-        # 0 disables the second pass.
-        warm_rows = int(os.environ.get("SPARK_GRAFT_WARM_ROWS", "6000"))
-        if warm_rows > 0:
-            # GROUPED corpus: docs come in ~12-doc groups sharing a
-            # 20-token core with 4 unique tokens each, so the candidate
-            # generators emit a BOUNDED quadratic-within-group pair set
-            # (~groups * 66 pairs) — enough rows through the
-            # pair-aggregation and array_intersect verify loops to promote
-            # THEM to C2 too (a purely distinct corpus left them cold: the
-            # real ngram query's first run still carried a ~4s ramp over
-            # its in-JVM steady state). Group count scales with warm_rows
-            # so the pair count stays linear in the knob.
-            grp = F.pmod(F.col("id"), F.lit(max(warm_rows // 12, 1)))
-            docs_big = spark.range(0, warm_rows, 1, 8).select(
-                F.col("id").alias("doc_id"),
-                F.concat_ws(
-                    " ",
-                    F.transform(
-                        F.sequence(F.lit(1), F.lit(24)),
-                        lambda i: F.concat(
-                            F.lit("w"),
-                            F.when(
-                                i <= 20, F.pmod(grp * 131 + i * 977, F.lit(4096))
-                            ).otherwise(
-                                F.pmod(F.col("id") * 7 + i * 13, F.lit(4096))
-                            ),
-                        ),
-                    ),
-                ).alias("text"),
-            )
-        else:
-            docs_big = docs
-        _noop(_dd.ngram_jaccard_pairs(docs, n=5, threshold=0.7))
-        _noop(_dd.minhash_lsh_pairs(docs, n_hashes=12, bands=4, shingle_n=3,
-                                    jaccard_threshold=0.5))
-        _noop(_dd.simhash_pairs(docs, max_hamming=3, n_chunks=4))
-        if warm_rows > 0:
-            _noop(_dd.ngram_jaccard_pairs(docs_big, n=5, threshold=0.7))
-            _noop(_dd.minhash_lsh_pairs(docs_big, n_hashes=12, bands=4,
-                                        shingle_n=3, jaccard_threshold=0.5))
-            _noop(_dd.simhash_pairs(docs_big, max_hamming=3, n_chunks=4))
-            _noop(docs_big.select(
-                F.md5(F.col("text")).alias("fingerprint"), F.col("doc_id")
-            ).groupBy("fingerprint").agg(F.count(F.lit(1)), F.min("doc_id")))
-        _dd._drop_scratch()
-        names = docs.select(
-            F.col("doc_id").alias("k"), F.substring("text", 1, 20).alias("nm")
-        )
-        _noop(_sim.blocked_similarity_join(
-            names.where(F.col("k") < 8), names.where(F.col("k") >= 8),
-            "k", "nm", "k", "nm", threshold=50.0, fallback_full_scan=False,
-        ))
-        def _emb_frame(n: int):
-            return spark.range(0, n, 1, 4).select(
-                F.col("id").alias("vec_id"),
-                F.transform(
-                    F.sequence(F.lit(1), F.lit(64)),
-                    lambda i: (F.pmod(F.col("id") * 11 + i * 5, F.lit(17)) - 8.0).cast("float"),
-                ).alias("embedding"),
-            )
-
-        # Catalyst ANN paths take the C2-sized corpus; the VECTORIZED srp
-        # variant (pandas UDF) stays small for the same reason as the
-        # numpy text pair below — worker-side cost, not JVM JIT
-        emb = _emb_frame(48 if warm_rows <= 0 else max(48, warm_rows // 2))
-        q = emb.where(F.col("vec_id") < 3)
-        _noop(_ann.cosine_topk(emb, q, k=5))
-        _noop(_ann.srp_lsh_topk(emb, q, k=5, n_bits=8, dim=64, multiprobe_flips=1))
-        emb_small = emb if warm_rows <= 0 else _emb_frame(48)
-        _noop(_ann.srp_lsh_topk(emb_small, emb_small.where(F.col("vec_id") < 3),
-                                k=5, n_bits=8, dim=64,
-                                multiprobe_flips=1, vectorized=True))
-        from .functions import text as _tx
-        from .functions.text_np import lang_id_np as _lang_np
-        from .functions.text_np import quality_token_stats_np as _q_np
-
-        tdocs = docs_big if warm_rows > 0 else docs
-        _noop(tdocs.select(
-            "doc_id",
-            _tx.lang_id(F.col("text")).alias("lg"),
-            _tx.token_count(F.col("text")).cast("bigint").alias("nt"),
-            _tx.bpe_ish_token_count(F.col("text")).alias("nb"),
-            F.round(_tx.punct_ratio(F.col("text")), 6).alias("pr"),
-            _tx.quality_score(F.col("text")).alias("qs"),
-        ))
-        # the numpy pandas-UDF pair stays on the SMALL corpus: its cost is
-        # worker spawn + first-call imports, not JVM JIT, and the big-pass
-        # A/B measured the wide variant consistently SLOWER on the real
-        # lang_id_docs_np query (0.5 -> 1.0-2.0s; leftover worker-heap
-        # growth from the 6k-row arrow batches, most plausibly)
-        _noop(docs.select(
-            _lang_np()(F.col("text")).alias("lg"),
-            _q_np()(F.col("text")).alias("s"),
-        ))
-        spark.conf.set("spark.graft.sessionWarmed", "1")
-    except Exception:
-        pass  # warm-up is best-effort; never fail session creation
-    finally:
-        shutil.rmtree(d, ignore_errors=True)

@@ -18,12 +18,29 @@ from game_library_enrichment_etl_spark.datagen import gen_stream
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _run_cli(args: list[str], timeout: int = 300) -> subprocess.CompletedProcess:
+def _run_python(args: list[str], timeout: int = 300) -> subprocess.CompletedProcess:
     env = dict(os.environ, PYTHONPATH=REPO)
     return subprocess.run(
-        [sys.executable, "-m", "game_library_enrichment_etl_spark", *args],
+        [sys.executable, *args],
         capture_output=True, text=True, timeout=timeout, env=env, cwd=REPO,
     )
+
+
+def _run_cli(args: list[str], timeout: int = 300) -> subprocess.CompletedProcess:
+    return _run_python(["-m", "game_library_enrichment_etl_spark", *args], timeout)
+
+
+def test_fresh_session_submits_no_job():
+    """get_spark only configures: a fresh JVM's session has run no Spark
+    job by the time it is handed to the caller."""
+    proc = _run_python(["-c", (
+        "from game_library_enrichment_etl_spark.session import get_spark\n"
+        "spark = get_spark(master='local[2]')\n"
+        "print(len(spark.sparkContext.statusTracker().getJobIdsForGroup()))\n"
+        "spark.stop()\n"
+    )])
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    assert proc.stdout.strip().splitlines()[-1] == "0"
 
 
 def test_cli_end_to_end_and_failure_alert(tmp_path):
