@@ -4,8 +4,9 @@ Round-3 verdict wrong #4: COW merges and compaction wrote through a path
 that repartitions on _bucket alone — one task per bucket, so a table with
 fewer buckets than the cluster has slots cannot use the extra slots at all
 (hard efficiency ceiling n_buckets/cpus). Round 4 routes that path through
-an in-bucket key salt (lake/table.py write_data_files), so the write fans
-out to ~shuffle-partition tasks while keeping at most n_salts same-commit
+an in-bucket key salt (lake/table.py in_bucket_salt; compaction's LWW
+resolve routes on it before write_data_files_prepartitioned), so the write
+fans out to ~shuffle-partition tasks while keeping at most n_salts same-commit
 files per bucket (still resolution-free on read).
 
 This harness makes the cap scenario explicit: a 4-bucket MOR table,

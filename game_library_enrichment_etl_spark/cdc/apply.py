@@ -262,9 +262,7 @@ def apply_batch(
             hot = exact[3] and mode == "overwrite"
             _mark("t_winner_stats")
 
-        merge_src = (
-            lww_dedup(normalized, key, order_cols, strategy="salted") if hot else normalized
-        )
+        merge_src = lww_dedup(normalized, key, order_cols) if hot else normalized
         if use_mor:
             out = fused_mor_winners(
                 merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,

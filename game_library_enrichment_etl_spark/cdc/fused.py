@@ -12,7 +12,8 @@ move the data the minimum the semantics allow:
     window over exact-routed partitioning of (_bucket[, _salt]) groups
     (lake/table.route_expr)                          -- the ONLY exchange
       -> partition-local sort (_bucket, key ASC, version DESC)
-      -> lag(key)-based "first row of key group" filter  == LWW winner
+      -> "first row of key group" filter (lake/table.first_row_of_key)
+                                                     == LWW winner
       -> delete tombstoning + winners-only html->text Arrow UDF
       -> parquet write partitionBy(_bucket), concurrent writers (no sort)
 
@@ -63,6 +64,7 @@ from ..lake.table import (
     BUCKET_COL,
     DELETED_COL,
     bucket_expr,
+    first_row_of_key,
     layout_exprs,
     sort_layout,
 )
@@ -110,12 +112,6 @@ def _fused_exprs(
     w = Window.partitionBy(*[F.col(a) for a in pw]).orderBy(
         F.col(key).asc(), *[F.col(c).desc() for c in order_cols]
     )
-
-    # winner = first row of its (contiguous, sorted-desc) key group.
-    # row_number()==1 guards the partition's very first row (lag is NULL
-    # there, which eqNullSafe would mis-read for a NULL key).
-    prev_key = F.lag(F.col(key)).over(w)
-    is_first = (F.row_number().over(w) == 1) | (~prev_key.eqNullSafe(F.col(key)))
 
     # WAL-integrity: a winner whose successor carries the SAME (key,
     # version) means duplicate lsn delivery with potentially divergent
@@ -176,7 +172,7 @@ def _fused_exprs(
         "bucket": bucket_expr(key, n_buckets),
         "pw_aliased": [e.alias(a) for e, a in zip(part_exprs, pw)],
         "pw0": F.col(pw[0]),
-        "first_dup": [is_first.alias("_first"), dup.alias("_dup")],
+        "first_dup": [first_row_of_key(key, w).alias("_first"), dup.alias("_dup")],
         "dup_any": F.max(F.col("_dup").cast("int")).over(w_all).alias("_dup_any"),
         "out_cols": out_cols,
     }
@@ -308,9 +304,7 @@ def _cow_exprs(
     b_side.append(bucket_expr(key, n_buckets).alias(BUCKET_COL))
     desc = [*[F.col(c).desc() for c in order_cols], F.col("_pref").desc()]
     w = Window.partitionBy(*[F.col(a) for a in pw]).orderBy(F.col(key).asc(), *desc)
-    prev_key = F.lag(F.col(key)).over(w)
-    is_first = (F.row_number().over(w) == 1) | (~prev_key.eqNullSafe(F.col(key)))
-    stages = [[is_first.alias("_first")]]
+    stages = [[first_row_of_key(key, w).alias("_first")]]
 
     is_del = F.col(op_col) == "D"
     folded: dict[str, F.Column] = {}

@@ -26,7 +26,7 @@ import time
 from pyspark.sql import functions as F
 
 from .snapshot import read_current_version, read_snapshot, snapshot_path
-from .table import BUCKET_COL, DELETED_COL, IceletTable, bucket_expr
+from .table import DELETED_COL, IceletTable
 
 
 def maybe_compact(
@@ -69,19 +69,16 @@ def compact(
     table: IceletTable,
     buckets: list[int] | None = None,
     expire_tombstones: bool = True,
-    fused: bool = True,
 ) -> dict:
     """Compact ``buckets`` (default: all buckets that have any file).
 
-    ``fused`` (default): resolution and rewrite share ONE payload exchange
-    and ONE sort — the raw delta rows (with their commit sequence) are
-    hash-partitioned on (_bucket, spill-bounded salt(key)), sorted
-    (key ASC, version DESC, seq DESC) once, LWW winners kept via the lag
-    filter (cdc/fused.py's trick), tombstones expired, and the stream is
-    written pre-partitioned with concurrent writers. The legacy path
-    (``fused=False``) reads-with-resolution then writes through
-    write_data_files — TWO payload exchanges + TWO sorts; kept as a
-    measured fallback. The salt count is derived from manifest row counts
+    Resolution and rewrite share ONE payload exchange and ONE sort: the raw
+    delta rows (with their commit sequence) go through the table's LWW
+    resolve (``IceletTable._resolve_lww``, the one ``read`` runs) —
+    routed on (_bucket, spill-bounded salt(key)), sorted (key ASC,
+    version DESC, seq DESC) once, each key's newest row kept — tombstones
+    are expired, and the stream is written pre-partitioned with
+    concurrent writers. The salt count is derived from manifest row counts
     (lake/table.sort_layout), so a huge bucket's sort is sharded to
     bounded memory even when shuffle partitions are few — without it a
     4.5M-row 4-bucket compaction at local[2] external-sorted into 24x
@@ -91,20 +88,16 @@ def compact(
     expired (estimated from manifest row counts).
     """
     snap = table.snapshot()
-    ts_col, lsn_col = snap.properties["version_cols"]
+    ts_col = snap.properties["version_cols"][0]
     wm_us = snap.properties.get("watermark_us")
 
     present = sorted({f.bucket for f in snap.files})
     todo = present if buckets is None else [b for b in buckets if b in present]
     if not todo:
         return {"buckets": 0, "rows_before": 0, "rows_after": 0}
-
-    rows_per_bucket: dict[int, int] = {}
-    for f in snap.files:
-        if f.bucket in set(todo):
-            rows_per_bucket[f.bucket] = rows_per_bucket.get(f.bucket, 0) + f.rows
-    rows_before = sum(rows_per_bucket.values())
-    key = table.key_col
+    todo_set = set(todo)
+    files = [f for f in snap.files if f.bucket in todo_set]
+    rows_before = sum(f.rows for f in files)
 
     # STRICTLY below the watermark: apply_batch's late-drop predicate is
     # ts < watermark (apply.py), so an event AT the watermark can still
@@ -118,46 +111,18 @@ def compact(
             F.col(ts_col) < F.timestamp_micros(F.lit(int(wm_us)))
         )
 
-    if fused:
-        from pyspark.sql import Window
-
-        from .table import layout_exprs, sort_layout
-
-        raw = table.read(buckets=todo, include_deleted=True, resolve="none")
-        src = raw.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-        nparts = int(table.spark.conf.get("spark.sql.shuffle.partitions"))
-        n_parts, n_salts = sort_layout(nparts, max(len(todo), 1), rows_before)
-        # bucket_ids=todo: compaction covers a SUBSET of buckets, so the
-        # balanced route needs dense group ids (see lake/table.layout_exprs)
-        repart_exprs, part_exprs = layout_exprs(
-            key, n_parts, n_salts, bucket_ids=sorted(todo)
-        )
-        src = src.repartition(n_parts, *repart_exprs)
-        order = [F.col(ts_col).desc(), F.col(lsn_col).desc(), F.col("_seq").desc()]
-        w = Window.partitionBy(*part_exprs).orderBy(F.col(key).asc(), *order)
-        prev_key = F.lag(F.col(key)).over(w)
-        is_first = (F.row_number().over(w) == 1) | (
-            ~prev_key.eqNullSafe(F.col(key))
-        )
-        out = (
-            src.withColumn("_first", is_first)
-            .where(F.col("_first") & ~dead)
-            .drop("_first", "_seq")
-        )
-        files = table.write_data_files_prepartitioned(
-            out, snap.version + 1, snap.schema.version
-        )
-    else:
-        df = table.read(buckets=todo, include_deleted=True).where(~dead)
-        out = df.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-        files = table.write_data_files(out, snap.version + 1, snap.schema.version)
+    raw = table._scan(snap, files, snap.schema, with_seq=True)
+    out = table._resolve_lww(raw, snap, todo, rows_before).where(~dead)
+    new_files = table.write_data_files_prepartitioned(
+        out, snap.version + 1, snap.schema.version
+    )
     # CAS: the rewrite resolved data as of snap.version — a concurrent
     # apply's commit in between would make this compaction a lost-update
     # (its output lacks that apply's rows for the compacted buckets), so
     # commit raises CommitConflictError instead; callers retry.
-    new_snap = table.commit(files, set(todo), [], new_schema=None,
+    new_snap = table.commit(new_files, todo_set, [], new_schema=None,
                             expected_version=snap.version)
-    rows_after = sum(f.rows for f in files)
+    rows_after = sum(f.rows for f in new_files)
     return {
         "buckets": len(todo),
         "rows_before": int(rows_before),

@@ -23,7 +23,7 @@ import uuid
 from functools import lru_cache, reduce
 
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -111,7 +111,7 @@ def sort_layout(
     rows_per_shard: int = ROWS_PER_SORT_SHARD,
 ) -> tuple[int, int]:
     """(exchange partitions, in-bucket salts) for a bucket-clustered SORT
-    stage (the fused write, the window read-resolve, fused compaction).
+    stage (the fused write, the LWW resolve of read and compaction).
 
     Constraints, resolved together:
     - PARTITION COUNT bounds each task's sorter: sorting happens per
@@ -258,13 +258,16 @@ def layout_exprs(
     sorts partition by (route, bucket[, salt]) — same semantic groups,
     one exchange, balanced partitions.
 
-    ``bucket_ids``: when the stage covers a SUBSET of buckets (compaction
-    of the `todo` list), round-robin needs dense group ids — raw bucket
-    ids modulo n_parts would collide some partitions and leave others
-    empty. The literal array maps each present bucket to its rank."""
+    ``bucket_ids``: when the stage covers a SUBSET of buckets (the LWW
+    resolve of a compaction's buckets or of a read's multi-sequence
+    buckets), round-robin needs dense group ids — raw bucket ids modulo
+    n_parts would collide some partitions and leave others empty. The
+    literal array maps each present bucket to its rank; when the ids are
+    exactly 0..k-1 the rank is the id itself and no array is planned."""
     cluster = [F.col(BUCKET_COL)]
-    if bucket_ids is not None:
-        arr = F.array(*[F.lit(int(x)).cast("long") for x in sorted(bucket_ids)])
+    ids = sorted(bucket_ids) if bucket_ids is not None else None
+    if ids is not None and ids != list(range(len(ids))):
+        arr = F.array(*[F.lit(int(x)).cast("long") for x in ids])
         dense_b = F.array_position(arr, F.col(BUCKET_COL).cast("long")) - F.lit(1)
     else:
         dense_b = F.col(BUCKET_COL)
@@ -275,6 +278,15 @@ def layout_exprs(
         grp = dense_b * F.lit(n_salts) + salt
     route = route_expr(grp, n_parts)
     return [route], [route, *cluster]
+
+
+def first_row_of_key(key_col: str, w):
+    """True on the first row of each key group of window ``w`` (partitioned
+    by a bucket layout, ordered key ASC then version DESC): the LWW winner.
+    ``row_number()==1`` guards the partition's very first row, where lag is
+    NULL and eqNullSafe would mis-read a NULL key as a repeat."""
+    prev_key = F.lag(F.col(key_col)).over(w)
+    return (F.row_number().over(w) == 1) | (~prev_key.eqNullSafe(F.col(key_col)))
 
 
 def _table_schema(schema: T.StructType | TableSchema) -> TableSchema:
@@ -320,24 +332,12 @@ class IceletTable:
         The engine-managed ``_deleted`` tombstone column is appended to
         ``schema`` when it lacks one.
         """
-        if merge_strategy not in ("cow", "mor"):
-            raise ValueError(f"merge_strategy must be cow|mor, got {merge_strategy!r}")
         if read_snapshot(root) is not None:
             raise FileExistsError(f"table already exists at {root}")
-        tschema = _table_schema(schema)
-        props = {
-            "key": key_col,
-            "version_cols": list(version_cols),
-            "merge_strategy": merge_strategy,
-        }
-        props.update(properties or {})
-        snap = Snapshot(
-            version=0, parent=None, n_buckets=n_buckets, schemas=[tschema], files=[],
-            applied_batch_ids=[], properties=props,
+        return IceletTable.create_or_replace(
+            spark, root, schema, key_col, version_cols, n_buckets,
+            merge_strategy, properties,
         )
-        os.makedirs(os.path.join(root, "data"), exist_ok=True)
-        write_snapshot(root, snap)
-        return IceletTable(spark, root)
 
     @staticmethod
     def exists(root: str) -> bool:
@@ -361,16 +361,12 @@ class IceletTable:
         schema lineage, and CLEARED batch-id markers/watermark so the whole
         change stream re-applies — while every prior snapshot stays readable
         via time travel (non-destructive at the metadata level; old data
-        files are reclaimed by retention, not by this verb)."""
-        prev = read_snapshot(root)
-        if prev is None:
-            return IceletTable.create(
-                spark, root, schema, key_col, version_cols, n_buckets,
-                merge_strategy, properties,
-            )
+        files are reclaimed by retention, not by this verb). On a root
+        with no table it creates one at version 0, which is how ``create``
+        builds its snapshot."""
         if merge_strategy not in ("cow", "mor"):
             raise ValueError(f"merge_strategy must be cow|mor, got {merge_strategy!r}")
-        tschema = _table_schema(schema)
+        prev = read_snapshot(root)
         props = {
             "key": key_col,
             "version_cols": list(version_cols),
@@ -378,14 +374,15 @@ class IceletTable:
         }
         props.update(properties or {})
         snap = Snapshot(
-            version=prev.version + 1,
-            parent=prev.version,
+            version=0 if prev is None else prev.version + 1,
+            parent=None if prev is None else prev.version,
             n_buckets=n_buckets,
-            schemas=[tschema],
+            schemas=[_table_schema(schema)],
             files=[],
             applied_batch_ids=[],
             properties=props,
         )
+        os.makedirs(os.path.join(root, "data"), exist_ok=True)
         write_snapshot(root, snap)
         return IceletTable(spark, root)
 
@@ -411,7 +408,6 @@ class IceletTable:
         key_range: tuple[str, str] | None = None,
         include_deleted: bool = False,
         as_schema: "TableSchema | None" = None,
-        resolve: str = "window",
     ) -> DataFrame:
         """Read the table at a snapshot (time travel), optionally pruned to a
         bucket set and/or key range using manifest stats — no file listing,
@@ -423,18 +419,15 @@ class IceletTable:
 
         Under merge-on-read, a key may appear in several delta files of its
         bucket; the read resolves last-writer-wins per key by
-        (version_cols, file sequence). ``resolve`` picks the physical
-        strategy: ``window`` (default — ONE payload exchange on the bucket
-        hash, partition-local sort, lag-based first-of-group filter; the
-        read-side twin of the fused write path) or ``skinny`` (two-phase
-        skinny-agg + payload fetch join — scans the delta files twice but
-        never sorts payload bytes; the r3 default, kept as a measured
-        fallback). Resolution is applied PER BUCKET: only buckets whose
-        files span more than one commit sequence go through the resolve
-        exchange; single-sequence buckets (COW tables, compacted buckets
-        of a MOR table) are unioned straight from the scan — their files
-        are key-disjoint by construction, so at steady state the shuffle
-        is proportional to the uncompacted delta, not the table."""
+        (version_cols, file sequence) through ``_resolve_lww`` — ONE payload
+        exchange on the bucket route, a partition-local sort and the
+        first-of-key filter, the same resolve compaction runs. Resolution
+        is applied PER BUCKET: only buckets whose files span more than one
+        commit sequence go through the resolve exchange; single-sequence
+        buckets (COW tables, compacted buckets of a MOR table) are unioned
+        straight from the scan — their files are key-disjoint by
+        construction, so at steady state the shuffle is proportional to the
+        uncompacted delta, not the table."""
         snap = self.snapshot(version)
         cur = as_schema if as_schema is not None else snap.schema
         files = snap.files
@@ -460,80 +453,14 @@ class IceletTable:
         # resolution-free right after compaction even when the salted
         # writer folded a bucket into several same-sequence files.
         per_bucket: dict[int, set[int]] = {}
-        rows_per_bucket: dict[int, int] = {}
         for f in files:
             per_bucket.setdefault(f.bucket, set()).add(f.sequence)
-            rows_per_bucket[f.bucket] = rows_per_bucket.get(f.bucket, 0) + f.rows
-        mor = snap.properties.get("merge_strategy", "cow") == "mor"
-        needs_resolve = mor and max(len(s) for s in per_bucket.values()) > 1
+        multi = set()
+        if snap.properties.get("merge_strategy", "cow") == "mor":
+            multi = {b for b, s in per_bucket.items() if len(s) > 1}
 
-        # group files by the SCHEMA VERSION they were written under and
-        # re-project by field id (rename/widen are metadata-only);
-        # sequence rides along as _seq for MOR version-tie resolution.
-        # One reader per schema version, not per (schema, sequence): an
-        # uncompacted MOR bucket set spans many commit sequences, and a
-        # per-sequence reader union planned S scan branches (S ~ commits
-        # since compaction) — S FileSourceScans to plan, codegen and
-        # schedule for the SAME schema (measured: the 8-commit bench
-        # table's post-apply read dropped 20-40% collapsing 8 branches
-        # to 1). _seq is then derived per row from the commit directory in
-        # the file path (data/v{seq}-{uuid8}/, the layout every writer
-        # uses) — verified driver-side against the manifest for every
-        # file first, with a per-sequence-reader fallback on any
-        # mismatch, so resolution order can never silently drift from
-        # the manifest's sequence numbers.
-        # resolve="none" (internal; fused compaction) skips resolution and
-        # RETAINS _seq so the caller can fold resolution into its own
-        # exchange — tombstones must stay visible or older versions would
-        # leak through the caller's resolve.
-        if resolve == "none" and not include_deleted:
-            raise ValueError("resolve='none' requires include_deleted=True")
-
-        def _scan_union(fs, attach_seq: bool) -> DataFrame:
-            by_sv: dict[int, list] = {}
-            for f in fs:
-                by_sv.setdefault(f.schema_version, []).append(f)
-            parts = []
-            for sv, metas in by_sv.items():
-                old = snap.schema_at(sv)
-                seqs = sorted({f.sequence for f in metas})
-                one_scan = (
-                    not attach_seq
-                    or len(seqs) == 1
-                    or all(_path_sequence(f.path) == f.sequence for f in metas)
-                )
-                groups = (
-                    [metas]
-                    if one_scan
-                    else [[f for f in metas if f.sequence == s] for s in seqs]
-                )
-                for g in groups:
-                    df = self.spark.read.schema(old.to_spark()).parquet(
-                        *[os.path.join(self.root, f.path) for f in g]
-                    )
-                    cols = []
-                    old_by_id = old.by_id()
-                    for cf in cur.fields:
-                        of = old_by_id.get(cf.id)
-                        if of is None:  # column added after these files were written
-                            cols.append(F.lit(None).cast(cf.type).alias(cf.name))
-                        else:
-                            cols.append(F.col(of.name).cast(cf.type).alias(cf.name))
-                    if attach_seq:
-                        gseqs = {f.sequence for f in g}
-                        if len(gseqs) == 1:
-                            cols.append(
-                                F.lit(next(iter(gseqs))).cast("long").alias("_seq")
-                            )
-                        else:
-                            cols.append(_seq_from_file_path().alias("_seq"))
-                    parts.append(df.select(*cols))
-            return reduce(lambda a, b: a.unionByName(b), parts)
-
-        if resolve == "none":
-            out = _scan_union(files, attach_seq=True)
-        elif not needs_resolve:
-            out = _scan_union(files, attach_seq=False)
+        if not multi:
+            out = self._scan(snap, files, cur, with_seq=False)
         else:
             # Selective resolve: only buckets whose files span >1 commit
             # sequence can hold a key twice, so only THEIR rows pay the
@@ -541,77 +468,113 @@ class IceletTable:
             # after per-bucket auto-compaction) are unioned straight from
             # the scan — at 100 TB this keeps the shuffle proportional to
             # the uncompacted delta, not the table.
-            multi = {b for b, s in per_bucket.items() if len(s) > 1}
             f_resolve = [f for f in files if f.bucket in multi]
             f_direct = [f for f in files if f.bucket not in multi]
-            order = tuple(snap.properties["version_cols"]) + ("_seq",)
             out = self._resolve_lww(
-                _scan_union(f_resolve, attach_seq=True),
-                snap.properties["key"], order, snap.n_buckets, resolve,
-                total_rows=sum(rows_per_bucket[b] for b in multi),
-            ).drop("_seq")
+                self._scan(snap, f_resolve, cur, with_seq=True), snap,
+                sorted(multi), sum(f.rows for f in f_resolve),
+            ).drop(BUCKET_COL)
             if f_direct:
-                out = out.unionByName(_scan_union(f_direct, attach_seq=False))
+                out = out.unionByName(self._scan(snap, f_direct, cur, with_seq=False))
         if not include_deleted:
             out = out.where(~F.coalesce(F.col(DELETED_COL), F.lit(False))).drop(DELETED_COL)
         return out
 
+    def _scan(
+        self, snap: Snapshot, files: list[DataFileMeta], cur: TableSchema, with_seq: bool
+    ) -> DataFrame:
+        """The raw rows of ``files`` (tombstones included, no resolution),
+        re-projected by field id to ``cur`` (rename/widen are
+        metadata-only). ``with_seq`` tags each row with its file's commit
+        sequence as ``_seq``, the MOR version-tie breaker.
+
+        One reader per SCHEMA VERSION, not per (schema, sequence): an
+        uncompacted MOR bucket set spans many commit sequences, and a
+        per-sequence reader union planned S scan branches (S ~ commits
+        since compaction) — S FileSourceScans to plan, codegen and
+        schedule for the SAME schema (measured: the 8-commit bench table's
+        post-apply read dropped 20-40% collapsing 8 branches to 1). _seq is
+        then derived per row from the commit directory in the file path
+        (data/v{seq}-{uuid8}/, the layout every writer uses) — verified
+        driver-side against the manifest for every file first, with a
+        per-sequence-reader fallback on any mismatch, so resolution order
+        can never silently drift from the manifest's sequence numbers."""
+        by_sv: dict[int, list] = {}
+        for f in files:
+            by_sv.setdefault(f.schema_version, []).append(f)
+        parts = []
+        for sv, metas in by_sv.items():
+            old = snap.schema_at(sv)
+            seqs = sorted({f.sequence for f in metas})
+            one_scan = (
+                not with_seq
+                or len(seqs) == 1
+                or all(_path_sequence(f.path) == f.sequence for f in metas)
+            )
+            groups = (
+                [metas]
+                if one_scan
+                else [[f for f in metas if f.sequence == s] for s in seqs]
+            )
+            for g in groups:
+                df = self.spark.read.schema(old.to_spark()).parquet(
+                    *[os.path.join(self.root, f.path) for f in g]
+                )
+                cols = []
+                old_by_id = old.by_id()
+                for cf in cur.fields:
+                    of = old_by_id.get(cf.id)
+                    if of is None:  # column added after these files were written
+                        cols.append(F.lit(None).cast(cf.type).alias(cf.name))
+                    else:
+                        cols.append(F.col(of.name).cast(cf.type).alias(cf.name))
+                if with_seq:
+                    gseqs = {f.sequence for f in g}
+                    if len(gseqs) == 1:
+                        cols.append(F.lit(next(iter(gseqs))).cast("long").alias("_seq"))
+                    else:
+                        cols.append(_seq_from_file_path().alias("_seq"))
+                parts.append(df.select(*cols))
+        return reduce(lambda a, b: a.unionByName(b), parts)
+
     def _resolve_lww(
         self,
-        df: DataFrame,
-        key: str,
-        order_cols: tuple[str, ...],
-        n_buckets: int,
-        resolve: str,
-        total_rows: int | None = None,
+        raw: DataFrame,
+        snap: Snapshot,
+        bucket_ids: list[int],
+        total_rows: int,
     ) -> DataFrame:
-        """Read-time LWW resolution across a bucket's delta files.
+        """The table's one LWW resolve, shared by ``read`` and ``compact``:
+        ``raw`` is the ``_seq``-tagged scan of the files of ``bucket_ids``
+        (``total_rows`` rows by the manifest); returns each key's newest row
+        by (version_cols, _seq) — tombstones included — with ``_bucket``,
+        bucket-clustered and ready for ``write_data_files_prepartitioned``.
 
-        ``window``: recompute the bucket (a pure key function — no stored
-        column needed), hash-partition on (_bucket[, salt(key)]), sort
-        partition-locally by (key ASC, version DESC), keep each key's first
-        row via the lag trick (cdc/fused.py's winner filter, reused on the
-        read side). ONE exchange of payload bytes, one scan of the delta
-        files — vs the skinny strategy's two scans + skinny-agg exchange +
-        payload fetch-join exchange. Bucket partitioning bounds skew the
-        same way the write does; the in-bucket salt keeps resolution
-        parallelism from capping at n_buckets on big clusters.
-        """
-        if resolve == "skinny":
-            from ..operators.lww import lww_dedup
-
-            # each data file holds at most one row per (key, version) — the
-            # apply wrote LWW winners — and _seq disambiguates across
-            # files, so (key, order) is unique and the dropDuplicates
-            # guard would only re-shuffle payload bytes for nothing
-            return lww_dedup(df, key, order_cols, strategy="skinny",
-                             unique_versions=True)
-        if resolve != "window":
-            raise ValueError(f"resolve must be window|skinny, got {resolve!r}")
-        from pyspark.sql import Window
-
+        Recompute the bucket (a pure key function — no stored column
+        needed), route (bucket, salt(key)) groups to exchange partitions,
+        sort partition-locally by (key ASC, version DESC), keep each key's
+        first row. ONE exchange of payload bytes, one scan of the delta
+        files, no join. The layout is spill-aware (sort_layout: the
+        exchange is sized from manifest row counts so each task's sorter
+        holds a bounded row count) and the route is exact over the DENSE
+        ranks of ``bucket_ids`` (layout_exprs), so a subset of buckets
+        still spreads evenly; the explicit repartition's hashpartitioning
+        satisfies the window's clustering, so no second exchange is
+        planned."""
+        key = snap.properties["key"]
+        order = (*snap.properties["version_cols"], "_seq")
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        src = df.withColumn(BUCKET_COL, bucket_expr(key, n_buckets))
-        # spill-aware layout (sort_layout): the exchange is sized from
-        # manifest row counts so each task's sorter holds a bounded row
-        # count, and the salt lets buckets occupy those partitions; the
-        # exact route (route_expr) balances groups over partitions, and
-        # the explicit repartition's hashpartitioning satisfies the
-        # window's clustering, so exactly ONE exchange is still planned
-        n_parts, n_salts = sort_layout(nparts, n_buckets, total_rows)
-        repart_exprs, part_exprs = layout_exprs(key, n_parts, n_salts)
+        n_parts, n_salts = sort_layout(nparts, len(bucket_ids), total_rows)
+        repart_exprs, part_exprs = layout_exprs(key, n_parts, n_salts, bucket_ids)
+        src = raw.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
         src = src.repartition(n_parts, *repart_exprs)
         w = Window.partitionBy(*part_exprs).orderBy(
-            F.col(key).asc(), *[F.col(c).desc() for c in order_cols]
-        )
-        prev_key = F.lag(F.col(key)).over(w)
-        is_first = (F.row_number().over(w) == 1) | (
-            ~prev_key.eqNullSafe(F.col(key))
+            F.col(key).asc(), *[F.col(c).desc() for c in order]
         )
         return (
-            src.withColumn("_first", is_first)
+            src.withColumn("_first", first_row_of_key(key, w))
             .where(F.col("_first"))
-            .drop("_first", BUCKET_COL)
+            .drop("_first", "_seq")
         )
 
     def lookup(self, key_value: str, version: int | None = None) -> DataFrame:

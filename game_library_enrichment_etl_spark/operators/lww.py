@@ -1,21 +1,17 @@
-"""Last-writer-wins per-key dedup — the per-batch CDC dedup core.
+"""Last-writer-wins per-key dedup — the apply's hot-key pre-reduce.
 
 Semantics: for each key keep exactly the row with the maximum
 (warc_ts, lsn) — the Spark rendition of the reference's deterministic
 per-group winner selection (/root/reference/src/how_long_to_beat.py:299-339)
 and "latest timestamped extract wins" (:287-296).
 
-Two physically distinct but semantically identical strategies:
-
-- ``salted``: explicit two-phase reduce — phase 1 groups by
-  (key, salt=pmod(xxhash64(version), S)) with ``max_by(struct(*),
-  version)``, phase 2 re-reduces per key. Exact because max over a total
-  order is associative + commutative (SURVEY.md §4 custom-2); both phases
-  aggregate map-side, so a hot key is split across S groups before it
-  concentrates in one task. The apply's hot-key pre-reduce.
-- ``skinny``: max version over the (key, version) projection, then a
-  payload fetch join — never sorts payload bytes. The read-time
-  ``resolve='skinny'`` strategy (lake/table.py).
+An explicit two-phase reduce: phase 1 groups by (key,
+salt=pmod(xxhash64(version), N_SALTS)) with ``max_by(struct(*),
+version)``, phase 2 re-reduces per key. Exact because max over a total
+order is associative + commutative (SURVEY.md §4 custom-2); both phases
+aggregate map-side, so a hot key is split across N_SALTS groups before it
+concentrates in one task. The table-side LWW resolve (read and
+compaction) is the window in lake/table.py, not this reduce.
 """
 
 from __future__ import annotations
@@ -23,90 +19,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-STRATEGIES = ("salted", "skinny")
+N_SALTS = 16
 
 
 def lww_dedup(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = ("warc_ts", "lsn"),
-    strategy: str = "salted",
-    n_salts: int = 16,
-    unique_versions: bool = False,
 ) -> DataFrame:
-    """One row per ``key``: the max-(order_cols) row. Column set preserved.
-
-    ``unique_versions`` (skinny strategy only): declare that (key,
-    order_cols) is unique in ``df`` — true for any WAL where the last order
-    column is a log sequence number (the north-star contract). Skips the
-    full-row dropDuplicates guard, which would otherwise shuffle + hash-agg
-    every payload byte a second time; callers that can't guarantee
-    uniqueness keep the default False.
-    """
-    if strategy == "salted":
-        return _lww_salted(df, key, order_cols, n_salts)
-    if strategy == "skinny":
-        return _lww_skinny(df, key, order_cols, unique_versions)
-    raise ValueError(f"unknown strategy {strategy!r}; want one of {STRATEGIES}")
-
-
-def _lww_skinny(
-    df: DataFrame, key: str, order_cols: tuple[str, ...], unique_versions: bool = False
-) -> DataFrame:
-    """Two-phase fat-payload dedup: (1) aggregate the max version over the
-    SKINNY (key, order) projection — column pruning keeps payload bytes out
-    of the sort-aggregate buffers entirely; (2) SHUFFLE_HASH-join the
-    winning versions back against the full rows to fetch payloads. The
-    shuffled hash join is pinned deliberately: AQE would broadcast the
-    skinny build side, but a broadcast's collect-and-build is SERIAL driver
-    work (~seconds per million keys) that Amdahls the whole apply loop —
-    measured 0.67 scaling efficiency (2->8 cores) for broadcast vs 0.89 for
-    shuffle-hash on 1M-event batches. Hash, not sort-merge, so multi-KB
-    payload rows are never sorted.
-
-    For web-page-sized payloads: max_by over a
-    struct containing a binary column falls back to SortAggregate (hash
-    aggregation needs mutable primitive buffers), which sorts every payload
-    byte twice (partial + final). Equivalent output to every other
-    strategy; the final dropDuplicates guards the pathological case of the
-    exact same (key, version) delivered twice in one batch, and is skipped
-    when the caller declares versions unique (WAL lsn contract).
-    """
-    ver = _ver(order_cols)
-    keys = df.groupBy(key).agg(F.max(ver).alias("_v"))
-    # eqNullSafe throughout: groupBy treats NULL as a regular grouping value
-    # (and max(struct) can surface NULL version components), so the fetch
-    # join must too — plain equality would silently drop any key whose
-    # winning row has a NULL version column, diverging from salted.
-    fetched = (
-        df.alias("l")
-        .join(
-            keys.hint("SHUFFLE_HASH").alias("r"),
-            on=[F.col(f"l.{key}").eqNullSafe(F.col(f"r.{key}"))]
-            + [
-                F.col(f"l.{c}").eqNullSafe(F.col(f"r._v.{c}")) for c in order_cols
-            ],
-        )
-        .select("l.*")
-    )
-    if unique_versions:
-        return fetched
-    return fetched.dropDuplicates([key])
-
-
-def _ver(order_cols: tuple[str, ...]):
-    return F.struct(*[F.col(c) for c in order_cols])
-
-
-def _lww_salted(
-    df: DataFrame, key: str, order_cols: tuple[str, ...], n_salts: int
-) -> DataFrame:
+    """One row per ``key``: the max-(order_cols) row. Column set preserved."""
     cols = df.columns
+    ver = F.struct(*[F.col(c) for c in order_cols])
     salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(n_salts))
+        "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in order_cols]), F.lit(N_SALTS))
     )
     phase1 = salted.groupBy(key, "_salt").agg(
-        F.max_by(F.struct(*[F.col(c) for c in cols]), _ver(order_cols)).alias("_w")
+        F.max_by(F.struct(*[F.col(c) for c in cols]), ver).alias("_w")
     )
     phase2 = phase1.groupBy(key).agg(
         F.max_by(F.col("_w"), F.struct(*[F.col(f"_w.{c}") for c in order_cols])).alias("_w")

@@ -1,5 +1,5 @@
 """End-to-end CDC apply tests: replay equivalence, idempotence, tombstones,
-time travel, LWW strategy equivalence, extractor determinism, and the
+time travel, the LWW pre-reduce, extractor determinism, and the
 apply schedule matrix."""
 
 from __future__ import annotations
@@ -132,22 +132,21 @@ def test_time_travel(spark, tmp_path, stream):
     assert list(got["lsn"]) == list(want["lsn"])
 
 
-def test_lww_strategies_agree(spark, stream):
+def test_lww_dedup_matches_max_version(spark, stream):
     ev, _ = stream
     df = spark.createDataFrame(ev.drop(columns=["title"]))
     want = (
         ev.sort_values(["warc_ts", "lsn"]).groupby("url").tail(1)[["url", "lsn"]]
         .sort_values("url").reset_index(drop=True)
     )
-    for s in ("salted", "skinny"):
-        got = (
-            lww_dedup(df, "url", ("warc_ts", "lsn"), strategy=s)
-            .select("url", "lsn")
-            .toPandas()
-            .sort_values("url")
-            .reset_index(drop=True)
-        )
-        pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    got = (
+        lww_dedup(df, "url", ("warc_ts", "lsn"))
+        .select("url", "lsn")
+        .toPandas()
+        .sort_values("url")
+        .reset_index(drop=True)
+    )
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
 def test_extractor_deterministic_and_correct():

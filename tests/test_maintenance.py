@@ -70,36 +70,64 @@ def test_auto_compaction_bounds_read_amplification(spark, tmp_path):
     pd.testing.assert_frame_equal(s_mor, s_cow)
 
 
-def test_fused_compaction_equals_legacy(spark, tmp_path):
-    """Round-4 fused compaction (one payload exchange + one sort, winners
-    selected by the window lag filter, spill-bounded salt shards) must
-    produce exactly the state and metrics of the legacy two-exchange path."""
+def test_compaction_preserves_read_and_matches_cow(spark, tmp_path):
+    """Compaction (one payload exchange + one sort, winners selected by the
+    table's LWW resolve, spill-bounded salt shards) must leave the MOR
+    table reading exactly as before it ran and as a copy-on-write replay
+    of the same segments, while expiring tombstones and folding every
+    bucket to one commit sequence."""
     ev = gen_change_events(2000, 250, seed=71, delete_frac=0.12)
     paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 4)
-    roots = {}
-    for variant in ("fused", "legacy"):
-        t = create_pages_table(
-            spark, str(tmp_path / variant), n_buckets=4, merge_strategy="mor"
-        )
-        for p in paths:
-            apply_batch(t, spark.read.parquet(p), lateness_s=600)
-        roots[variant] = t
+    mor = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=4, merge_strategy="mor")
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=4)
+    for p in paths:
+        apply_batch(mor, spark.read.parquet(p), lateness_s=600)
+        apply_batch(cow, spark.read.parquet(p), lateness_s=600)
 
-    mf = compact(roots["fused"], fused=True)
-    ml = compact(roots["legacy"], fused=False)
-    assert mf["rows_before"] == ml["rows_before"]
-    assert mf["rows_after"] == ml["rows_after"]
-    assert mf["tombstones_expired"] == ml["tombstones_expired"] > 0
+    def state(t):
+        return t.read().toPandas().sort_values("url").reset_index(drop=True).sort_index(axis=1)
 
-    sf = roots["fused"].read().toPandas().sort_values("url").reset_index(drop=True)
-    sl = roots["legacy"].read().toPandas().sort_values("url").reset_index(drop=True)
-    pd.testing.assert_frame_equal(sf, sl)
-    # post-compaction reads are resolution-free under both variants
-    for t in roots.values():
-        seqs = {}
-        for f in t.snapshot().files:
-            seqs.setdefault(f.bucket, set()).add(f.sequence)
-        assert max(len(s) for s in seqs.values()) == 1
+    before = state(mor)
+    rows_before = mor.snapshot().total_rows()
+    m = compact(mor)
+    assert m["rows_before"] == rows_before
+    assert m["tombstones_expired"] > 0
+    assert m["rows_after"] == mor.snapshot().total_rows()
+
+    after = state(mor)
+    pd.testing.assert_frame_equal(after, before)
+    pd.testing.assert_frame_equal(after, state(cow))
+    # post-compaction reads are resolution-free
+    seqs = {}
+    for f in mor.snapshot().files:
+        seqs.setdefault(f.bucket, set()).add(f.sequence)
+    assert max(len(s) for s in seqs.values()) == 1
+
+
+def test_compaction_plan_one_exchange_no_join(spark, tmp_path, monkeypatch):
+    """The DataFrame compaction writes resolves and rewrites through ONE
+    payload exchange (the bucket route) and no join."""
+    from game_library_enrichment_etl_spark.lake.table import IceletTable
+
+    ev = gen_change_events(1200, 150, seed=73, delete_frac=0.1)
+    paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 3)
+    t = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=4, merge_strategy="mor")
+    for p in paths:
+        apply_batch(t, spark.read.parquet(p), lateness_s=600)
+
+    written = []
+    orig = IceletTable.write_data_files_prepartitioned
+
+    def spy(self, df, *a, **k):
+        written.append(df)
+        return orig(self, df, *a, **k)
+
+    monkeypatch.setattr(IceletTable, "write_data_files_prepartitioned", spy)
+    compact(t)
+    assert len(written) == 1
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert "Join" not in plan, plan
 
 
 def test_selective_resolve_shuffles_only_multi_sequence_buckets(spark, tmp_path):

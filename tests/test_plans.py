@@ -38,8 +38,8 @@ def test_broadcast_join_for_small_dim(spark):
 
 
 def test_lww_agg_is_partially_aggregated(spark):
-    """The apply's hot-key pre-reduce (the salted LWW strategy) must do
-    map-side combine (skew resistance)."""
+    """The apply's hot-key pre-reduce (the salted two-phase LWW reduce)
+    must do map-side combine (skew resistance)."""
     from game_library_enrichment_etl_spark.operators.lww import lww_dedup
 
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
@@ -47,9 +47,7 @@ def test_lww_agg_is_partially_aggregated(spark):
         F.col("ts").cast("timestamp").alias("warc_ts"),
         F.col("event_id").alias("lsn"),
     )
-    assert_partial_agg(
-        lww_dedup(ev, "url", ("warc_ts", "lsn"), strategy="salted"), "partial_max_by"
-    )
+    assert_partial_agg(lww_dedup(ev, "url", ("warc_ts", "lsn")), "partial_max_by")
 
 
 def test_semi_anti_joins_planned(spark):
