@@ -69,7 +69,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
 from urllib.parse import unquote, urlparse
 
@@ -82,6 +82,7 @@ from pyspark.sql import functions as F
 from ..functions.extract import EXTRACTOR_VERSION
 from ..lake.table import DELETED_COL, MIN_ROWS_PER_SHARD, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
+from ..session import scoped_conf
 from .fused import fused_cow_merge, fused_mor_winners
 
 META_COLS = ("op", "batch_id")
@@ -125,12 +126,13 @@ def apply_batch(
     salted two-phase reduce (operators/lww.py), so no single key's rows
     land in one task. WAL integrity (duplicate (key, warc_ts, lsn)
     delivery) raises before anything is committed."""
-    t0 = time.monotonic()
-    phase_t: dict[str, float] = {}
+    t0 = t_last = time.monotonic()
+    phase_t: dict[str, float] = {}  # unrounded; rounded once into metrics
 
     def _mark(name: str) -> None:
+        nonlocal t_last
         now = time.monotonic()
-        phase_t[name] = round(now - (t0 + sum(phase_t.values())), 3)
+        phase_t[name], t_last = now - t_last, now
 
     narrow, src_rows_bound = _source_footprint(batch)
     with _persisted(batch, narrow) as batch:
@@ -294,20 +296,17 @@ def apply_batch(
         # read parity-with-downside for AQE-off at scale). Plan building is
         # lazy, so the conf takes effect at the write's execution.
         aqe_off = use_mor or overlapped
-        spark = table.spark
-        if aqe_off:
-            prev_aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with (
+            scoped_conf(table.spark, "spark.sql.adaptive.enabled", "false")
+            if aqe_off
+            else nullcontext()
+        ):
             # the MOR tombstone count rides along in the footer harvest's
             # threaded file pass (one open per file)
             written = table.write_data_files_prepartitioned(
                 out, snap.version + 1, cur.version,
                 sum_col=DELETED_COL if use_mor else None,
             )
-        finally:
-            if aqe_off:
-                spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
         files, n_tombstones = written if use_mor else (written, None)
         _mark("t_merge_write")
 
@@ -368,7 +367,7 @@ def apply_batch(
         metrics["hot_key_routed"] = hot
         metrics["winner_stats_path"] = "exact" if exact is not None else "manifest"
         metrics["stats_overlapped"] = overlapped
-        metrics["phases_s"] = phase_t
+        metrics["phases_s"] = {k: round(v, 3) for k, v in phase_t.items()}
         _append_lineage(table.root, st.segments, metrics, new_snap.version)
         return ApplyResult(False, new_snap.version, metrics, st.segments)
 

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import scoped_conf
 from .schema import Field, TableSchema, evolve
 from .snapshot import (
     DataFileMeta,
@@ -498,7 +499,15 @@ class IceletTable:
         (data/v{seq}-{uuid8}/, the layout every writer uses) — verified
         driver-side against the manifest for every file first, with a
         per-sequence-reader fallback on any mismatch, so resolution order
-        can never silently drift from the manifest's sequence numbers."""
+        can never silently drift from the manifest's sequence numbers.
+
+        The scan is planned from the manifest alone: it names every file
+        as an explicit path, and the session lists those paths on the
+        driver whatever their count (``session.get_spark`` sets
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold``). At
+        Spark's default of 32, a scan of more than 32 files (an uncompacted
+        16-bucket MOR table after 3 batches) submitted a one-task-per-file
+        listing job before the DataFrame even existed."""
         by_sv: dict[int, list] = {}
         for f in files:
             by_sv.setdefault(f.schema_version, []).append(f)
@@ -656,13 +665,10 @@ class IceletTable:
         instead of two, and the return becomes ``(files, total)``."""
         rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.root, rel_dir)
-        with _WRITER_CONF_LOCK:
-            prev = self.spark.conf.get("spark.sql.maxConcurrentOutputFileWriters", "0")
-            self.spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", "128")
-            try:
-                df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
-            finally:
-                self.spark.conf.set("spark.sql.maxConcurrentOutputFileWriters", prev)
+        with _WRITER_CONF_LOCK, scoped_conf(
+            self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"
+        ):
+            df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
         return self._harvest_manifest_entries(
             out, schema_version, version, sum_col=sum_col
         )

@@ -14,8 +14,8 @@
                      (/root/reference/src/how_long_to_beat.py:68-122)
 - JobConfig          S12: config bootstrap (YAML-dict analog,
                      /root/reference/src/utils.py:15-46)
-- read_change_batch  WAL micro-batch read with input splits sized to the
-                     cluster's parallelism (see its docstring)
+- read_change_batch  WAL micro-batch read; leaves the session conf untouched
+                     (see its docstring)
 """
 
 from __future__ import annotations
@@ -48,57 +48,19 @@ def csv_scan(
     return df
 
 
-def split_target_bytes(total_bytes: int, parallelism: int) -> int:
-    """Input-split size that gives a batch scan at least ``parallelism``
-    splits when the data allows, clamped to [4MB, 128MB].
-
-    Spark packs files into splits of ``spark.sql.files.maxPartitionBytes``
-    (default 128MB) regardless of cluster size, so a small-to-medium
-    micro-batch (a catch-up segment, a low-traffic hour) can plan FEWER map
-    tasks than the cluster has slots — and every downstream per-batch job
-    (stats scan, winner scan, the fused exchange's scan + shuffle write)
-    inherits that cap. Measured on the scaling harness: a 120MB/8-file WAL
-    segment packed into 2 splits, pinning the map side of all three
-    per-batch jobs to 2 tasks at local[2] AND local[8] (~21s of the 28s
-    non-scaling component in t_merge_write). At the 100TB design point the
-    clamp is a no-op: total/parallelism for any real batch exceeds 128MB,
-    so the default split size (and split count ~ data size) is preserved;
-    the adaptation only engages when a batch is small relative to the
-    cluster, exactly when the default serializes it.
-
-    The 2x factor targets ~two task waves: with splits sized to exactly
-    one wave, file-boundary quantization leaves a lone straggler task
-    (measured: 9x42MB WAL files at parallelism 8 packed into 9 splits —
-    8 run, 1 runs alone, +~25% on the scan stage wall). Two waves of
-    half-size splits let the scheduler pack around the remainder.
-    """
-    return max(min(total_bytes // (2 * max(parallelism, 1)), 128 << 20), 4 << 20)
-
-
 def read_change_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Read one WAL/micro-batch parquet file-or-directory with
-    ``spark.sql.files.maxPartitionBytes`` set from ``split_target_bytes``.
+    """Read one WAL/micro-batch parquet file-or-directory.
 
-    The conf is session-scoped and read at each action's planning time, so
-    setting it per batch re-sizes this batch's scans only (the next batch
-    sets its own). Single-applier-per-session is assumed, same as the
-    table maintenance lock. Non-local paths (size unknowable cheaply) keep
-    the session default untouched.
+    The read sets no session conf: a split size written to the session
+    outlives the batch and re-plans every later scan on it (lake reads,
+    lookups, compaction). Spark's default split sizing already spreads a
+    segment over the cluster: ``FilePartition.maxSplitBytes`` caps a split
+    at the segment's bytes (plus a 4 MB open cost per file) divided by the
+    default parallelism, so a segment of files above the open cost plans at
+    least min(files, parallelism) splits. On Spark 4.1.2 an 8 x 15 MB
+    segment at ``local[8]`` plans 8 splits. Files far below the open cost
+    pack two or more to a split; such a scan is latency-bound either way.
     """
-    total = 0
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            for fn in files:
-                if fn.endswith(".parquet"):
-                    total += os.path.getsize(os.path.join(root, fn))
-    elif os.path.isfile(path):
-        total = os.path.getsize(path)
-    if total > 0:
-        par = spark.sparkContext.defaultParallelism
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            str(split_target_bytes(total, par)),
-        )
     return spark.read.parquet(path)
 
 

@@ -176,8 +176,8 @@ def tail_segments(
     results = []
     n = 0
     for p in segs:
-        # splits sized to the cluster so a small segment doesn't cap every
-        # per-batch job's map parallelism (sources/readers.py)
+        # Spark's default split sizing spreads the segment over the cluster;
+        # the read leaves the session conf untouched (sources/readers.py)
         df = read_change_batch(spark, p)
         res = apply_batch(
             table, df, mode=mode, rename_hints=rename_hints, lateness_s=lateness_s

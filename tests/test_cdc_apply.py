@@ -413,3 +413,20 @@ def test_apply_schedule_matrix(spark, tmp_path, schedule_stream, strategy, way):
     assert [bytes(b) if b is not None else None for b in got["html"]] == list(want["html"])
     lin = read_lineage(spark, table.root).toPandas()
     assert int(lin["events_in"].sum()) == SCHEDULE_EVENTS
+
+
+@pytest.mark.parametrize("strategy", ["cow", "mor"])
+def test_phase_timings_nonnegative_within_wall(spark, tmp_path, stream, strategy):
+    """Each apply phase is timed between unrounded monotonic stamps and
+    rounded only when stored: no phase is negative (not even -0.0), and the
+    phases sum to no more than the batch wall."""
+    import math
+
+    _ev, paths = stream
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=8, merge_strategy=strategy)
+    for p in paths:
+        m = apply_batch(t, spark.read.parquet(p)).metrics
+        phases = m["phases_s"]
+        assert {"t_stats", "t_merge_write", "t_winner_stats"} <= set(phases)
+        assert all(v >= 0 and math.copysign(1.0, v) == 1.0 for v in phases.values()), phases
+        assert sum(phases.values()) <= m["wall_ms"] / 1000, (phases, m["wall_ms"])

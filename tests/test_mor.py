@@ -5,6 +5,7 @@ CREATE OR REPLACE full-replay verb (SURVEY.md §4 custom-3; VERDICT r1 #2/#9).""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 
 from game_library_enrichment_etl_spark.cdc.apply import apply_batch
 from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA, create_pages_table
@@ -257,3 +258,46 @@ def _check_seq_from_path(t, lake_table):
         )
         slow = slow_df.toPandas().sort_values("url").reset_index(drop=True)
     pd.testing.assert_frame_equal(fast, slow)
+
+
+def test_scan_planning_submits_no_job(spark, tmp_path):
+    """A lake scan is planned from the manifest alone: building ``read()``
+    and building ``compact()``'s scan on a table of more than 32 live files
+    (Spark's default threshold for a file-listing job) submits no job."""
+    ev = gen_change_events(3000, 600, seed=41, delete_frac=0.1)
+    paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 3)
+    t = create_pages_table(spark, str(tmp_path / "t"), n_buckets=16, merge_strategy="mor")
+    _apply_all(spark, t, paths)
+    assert len(t.snapshot().files) > 32
+
+    sc = spark.sparkContext
+
+    def job_ids() -> set[int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    before = job_ids()
+    df = t.read()
+    assert job_ids() == before
+
+    class Planned(Exception):
+        pass
+
+    def stop_before_write(out, *args, **kwargs):
+        out._jdf.queryExecution().sparkPlan()  # plan fully, run nothing
+        raise Planned
+
+    before = job_ids()
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(t, "write_data_files_prepartitioned", stop_before_write)
+        with pytest.raises(Planned):
+            compact(t, expire_tombstones=False)
+    assert job_ids() == before
+
+    want = model_final_state(ev)
+    assert compact(t, expire_tombstones=False)["buckets"] == 16
+    for read in (df, t.read()):  # before and after the compaction
+        got = read.toPandas().sort_values("url").reset_index(drop=True)
+        assert list(got["url"]) == list(want["url"])
+        assert list(got["lsn"]) == list(want["lsn"])
+        assert list(got["text"]) == list(want["text"])

@@ -14,7 +14,6 @@ from game_library_enrichment_etl_spark.sources.readers import (
     latest_landing,
     raw_landing,
     read_change_batch,
-    split_target_bytes,
 )
 
 
@@ -74,36 +73,43 @@ def test_job_config(tmp_path):
     assert os.path.isdir(cfg.wal_dir) and os.path.isdir(cfg.checkpoint_dir)
 
 
-def test_split_target_bytes_bounds():
-    mb = 1 << 20
-    # small batch on a big cluster: splits shrink so the scan can use the
-    # slots twice over (~2 waves; the 120MB/8-slot case that pinned every
-    # per-batch map stage to 2 tasks on the scaling harness)
-    assert split_target_bytes(120 * mb, 8) == 7 * mb + (mb // 2)
-    # 100TB design point: total/(2*parallelism) >> 128MB -> default preserved
-    assert split_target_bytes(100 * (1 << 40), 4000) == 128 * mb
-    # floor: never below 4MB even for tiny batches (split overhead)
-    assert split_target_bytes(1 * mb, 32) == 4 * mb
-    # degenerate parallelism
-    assert split_target_bytes(64 * mb, 0) == 32 * mb
+def test_tail_segments_leaves_session_conf_unchanged(spark, tmp_path):
+    """Applying a segment must not leave session state behind: a split
+    size written by the source read would re-plan every later lake scan."""
+    from game_library_enrichment_etl_spark.cdc.tables import create_pages_table
+    from game_library_enrichment_etl_spark.datagen import (
+        gen_change_events,
+        write_change_segments,
+    )
+    from game_library_enrichment_etl_spark.streaming.runner import tail_segments
+
+    wal = str(tmp_path / "wal")
+    write_change_segments(wal, gen_change_events(400, 80, seed=3), 1)
+    table = create_pages_table(spark, str(tmp_path / "t"), n_buckets=4, merge_strategy="mor")
+    split_before = spark.conf.get("spark.sql.files.maxPartitionBytes")
+    before = dict(spark.conf.getAll)
+    results = tail_segments(table, wal)
+    assert len(results) == 1 and not results[0].skipped
+    assert spark.conf.get("spark.sql.files.maxPartitionBytes") == split_before
+    assert dict(spark.conf.getAll) == before
 
 
-def test_read_change_batch_sets_split_conf(spark, tmp_path):
-    seg = str(tmp_path / "seg-0")
-    spark.range(0, 10_000).withColumn("v", F.col("id") * 2).repartition(
-        4
-    ).write.parquet(seg)
-    before = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    try:
-        df = read_change_batch(spark, seg)
-        assert df.count() == 10_000
-        total = sum(
-            f.stat().st_size
-            for f in (tmp_path / "seg-0").iterdir()
-            if f.name.endswith(".parquet")
-        )
-        par = spark.sparkContext.defaultParallelism
-        expect = split_target_bytes(total, par)
-        assert int(spark.conf.get("spark.sql.files.maxPartitionBytes")) == expect
-    finally:
-        spark.conf.set("spark.sql.files.maxPartitionBytes", before)
+@pytest.mark.parametrize("n_files", [2, 6])
+def test_read_change_batch_splits_span_parallelism(spark, tmp_path, n_files):
+    """Spark's default split sizing gives a multi-file segment at least
+    min(files, defaultParallelism) splits, with no conf written: a split is
+    capped at the segment's bytes over the parallelism. The files here are
+    above Spark's 4 MB per-file open cost; files far below it pack two or
+    more to a split, a scan that is latency-bound either way."""
+    seg = tmp_path / "seg-0"
+    rows = 40_000 * n_files
+    spark.range(0, rows).select(
+        F.col("id"),
+        F.concat(F.sha2(F.col("id").cast("string"), 256), F.sha2(F.hex("id"), 256)).alias("v"),
+    ).repartition(n_files).write.parquet(str(seg))
+    sizes = [f.stat().st_size for f in seg.iterdir() if f.name.endswith(".parquet")]
+    assert len(sizes) == n_files and min(sizes) > 4 << 20
+    df = read_change_batch(spark, str(seg))
+    par = spark.sparkContext.defaultParallelism
+    assert df.rdd.getNumPartitions() >= min(n_files, par)
+    assert df.count() == rows
