@@ -39,26 +39,31 @@ Arrow-vectorized extraction on winner rows (functions/extract.py).
 
 Schedule
 --------
-Around the write run up to two skinny, column-pruned actions:
-(1) per-(segment, bucket) stats — offsets, late counts, touched buckets
-and a sound hot-key bound (a key's rows never exceed its bucket's rows);
-(2) the exact per-key winner pass — WAL integrity (duplicate (key, version)
-delivery), exact hot-key counts and per-segment winner attribution. (2)
-runs only when load-bearing: every copy-on-write merge, multi-segment
-batches and batches whose bucket bound admits a hot key. On the fused-MOR
-fast path winners and deletes come from the written files instead
-(manifest row counts + the tombstone sum folded into the footer harvest),
-and integrity from the fused pass's partition-wide duplicate check.
+One sequential schedule. Before the write, the batch's per-segment facts
+are known — offsets, late counts, touched buckets and a sound hot-key bound
+(a key's rows never exceed its bucket's rows) — from one of two sources:
+- the FOOTER path: a single segment applied to a merge-on-read table in
+  overwrite mode takes its facts from the source's parquet footers, which
+  ``_source_footprint`` opens anyway, so the write is the apply's only
+  Spark job (Delta Lake keeps the same per-file min/max statistics in its
+  log so that writers skip this pass). The conditions, and why each is
+  needed, are in ``_source_footprint`` and ``apply_batch``;
+- the JOB path, everywhere else: action (1), a skinny per-(segment,
+  bucket) stats job, runs first; its replay/late/bucket outputs prune the
+  merge.
+Action (2), the exact per-key winner pass — WAL integrity (duplicate (key,
+version) delivery), exact hot-key counts and per-segment winner
+attribution — runs only when load-bearing: every copy-on-write merge,
+multi-segment batches and batches whose bucket bound admits a hot key. It
+runs before the write when it routes a hot key or the fused-MOR write
+needs its counts, else after the write. On a single-segment MOR write
+winners and deletes come from the written files instead (manifest row
+counts + the tombstone sum folded into the footer harvest), and integrity
+from the fused pass's partition-wide duplicate check.
 
-The schedule decides WHEN those actions are joined:
-- sequential: (1) runs first; its replay/late/bucket outputs prune the
-  merge. (2) is joined before the write when it routes a hot key or the
-  fused-MOR write needs its counts, else after the write;
-- overlapped (micro-batch regime, see ``apply_batch``): (1) and (2) are
-  submitted from driver threads before the write and joined after it, so
-  the batch pays about one job latency instead of two or three.
-Either way every join — and so the WAL-integrity raise — lands strictly
-before the commit. A ``DataFrame.observe`` design was rejected:
+Every action runs on the caller's thread, so it carries the caller's job
+group, and joins strictly before the commit, so the WAL-integrity raise
+does too. A ``DataFrame.observe`` design was rejected:
 ``Observation.get`` deadlocks when the apply runs inside a Structured
 Streaming ``foreachBatch`` callback (the py4j callback thread can't
 re-enter the JVM while the streaming engine waits on it).
@@ -68,9 +73,9 @@ from __future__ import annotations
 
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager, nullcontext
 from dataclasses import dataclass, field
+from datetime import datetime, timedelta, timezone
 from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
@@ -80,22 +85,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extract import EXTRACTOR_VERSION
-from ..lake.table import DELETED_COL, MIN_ROWS_PER_SHARD, IceletTable, bucket_expr
+from ..lake.table import DELETED_COL, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
 from ..session import scoped_conf
 from .fused import fused_cow_merge, fused_mor_winners
 
 META_COLS = ("op", "batch_id")
 OP_COL = "op"
-
-# the micro-batch regime the overlapped schedule is gated to: at most four
-# sort shards of rows, so a loose footer bound can neither overshoot the
-# write layout nor hide a hot key
-MICRO_BATCH_ROWS = 4 * MIN_ROWS_PER_SHARD
-# the replay filter is inlined as isin() over the applied-marker set when
-# the stats are not known yet; past this size the literal list bloats the
-# plan and the sequential schedule costs one small job's latency instead
-MAX_INLINED_MARKERS = 10_000
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
 @dataclass
@@ -134,14 +131,39 @@ def apply_batch(
         now = time.monotonic()
         phase_t[name], t_last = now - t_last, now
 
-    narrow, src_rows_bound = _source_footprint(batch)
-    with _persisted(batch, narrow) as batch:
-        snap = table.snapshot()
-        key = snap.properties["key"]
-        order_cols = tuple(snap.properties["version_cols"])
-        applied = set(snap.applied_batch_ids)
-        wm_us = snap.properties.get("watermark_us")  # event-time watermark, epoch micros
+    snap = table.snapshot()
+    key = snap.properties["key"]
+    order_cols = tuple(snap.properties["version_cols"])
+    applied = set(snap.applied_batch_ids)
+    wm_us = snap.properties.get("watermark_us")  # event-time watermark, epoch micros
+    use_mor = table.merge_strategy == "mor" and mode == "overwrite"
 
+    # the footer path (module docstring, "Schedule"). Beyond the source
+    # conditions _source_footprint checks, it needs: a fused-MOR write (the
+    # only merge whose winners and deletes come from its own files); a row
+    # count within hot_key_threshold (the count bounds every key's rows, so
+    # no key can be hot and the exact pass is not load-bearing); and, when
+    # lateness is set, warc_ts statistics whose min is at or above the
+    # watermark (no row is late, and their max advances the watermark).
+    # Spark's default INT96 timestamps carry no statistics and fall back.
+    narrow, foot = _source_footprint(batch, order_cols)
+    ts_min = foot.pop("ts_min") if foot else None
+    if foot is not None and not (
+        use_mor
+        and foot["events_in"] <= hot_key_threshold
+        and (
+            lateness_s is None
+            or ts_min is not None
+            and (wm_us is None or ts_min >= _EPOCH + timedelta(microseconds=int(wm_us)))
+        )
+    ):
+        foot = None
+    if foot is not None and foot["batch_id"] in applied:
+        return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
+
+    # persisting pays off only across actions; a footer-path write is the
+    # batch's one action
+    with _persisted(batch, narrow and foot is None) as batch:
         if "batch_id" not in batch.columns:
             if default_batch_id is None:
                 raise ValueError("batch needs a batch_id column or default_batch_id")
@@ -153,9 +175,6 @@ def apply_batch(
             if drop_late
             else F.lit(False)
         )
-
-        def _live(df: DataFrame) -> DataFrame:
-            return df.where(~late_pred) if drop_late else df
 
         # schema evolution resolved up front (driver-side only: schema +
         # snapshot metadata, no action), so the normalized projection
@@ -175,91 +194,38 @@ def apply_batch(
             )
         sel.append(F.col("batch_id"))
 
-        use_mor = table.merge_strategy == "mor" and mode == "overwrite"
-        table_rows = sum(f.rows for f in snap.files)
-        # ---- schedule. A narrow source is persisted (see _source_footprint)
-        # and latency-bound, so the skinny actions are submitted from
-        # driver threads up front, with the replay filter taken from the
-        # full applied-marker set (a superset of the replayed ids the stats
-        # would name — identical surviving rows). The write itself needs
-        # nothing from the stats when three facts hold driver-side: the
-        # replay filter is that marker filter, the late filter is a pure
-        # predicate of the snapshot watermark, and the footer row bound is
-        # <= hot_key_threshold (no key can be hot). Then the write starts
-        # immediately (overlapped). A copy-on-write merge additionally
-        # reads every bucket, which only costs nothing while the whole
-        # table (manifest row count) is itself micro-batch sized.
-        early = narrow and len(applied) <= MAX_INLINED_MARKERS
-        overlapped = (
-            early
-            and src_rows_bound is not None
-            and 0 < src_rows_bound <= min(hot_key_threshold, MICRO_BATCH_ROWS)
-            and (use_mor or table_rows <= MICRO_BATCH_ROWS)
+        st = _BatchStats([foot], []) if foot else _BatchStats.fold(
+            _segment_stats(batch, key, snap.n_buckets, order_cols, late_pred), applied
         )
-        stats_future = exact_future = None
-        if early:
-            pre = batch
-            if applied:
-                pre = pre.where(~F.col("batch_id").isin(*sorted(int(x) for x in applied)))
-            live = _live(pre)
-            pool = ThreadPoolExecutor(max_workers=2)
-            if overlapped:
-                stats_future = pool.submit(
-                    _segment_stats, pre, key, snap.n_buckets, order_cols, late_pred
-                )
-            if not use_mor:
-                exact_future = pool.submit(
-                    _exact_winner_stats, live.select(*sel), key, order_cols
-                )
-            pool.shutdown(wait=False)
-
-        def _nothing_to_merge(st: _BatchStats) -> ApplyResult | None:
-            """Result for a batch that is wholly replayed (skip) or wholly
-            late (commit its markers only); None when there is work."""
-            if st.ids and st.touched:
-                return None
-            if exact_future is not None:
-                exact_future.result()  # drain: its input is empty after the filters
+        _mark("t_stats")
+        if foot is None:
             if not st.ids:
                 return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
-            new_snap = table.commit([], set(), st.ids, cur if evo.changed else None,
-                                    _wm_update(wm_us, st.max_ts, lateness_s),
-                                    expected_version=snap.version)
-            metrics = _metrics(st, 0, 0, new_snap)
-            _append_lineage(table.root, st.segments, metrics, new_snap.version)
-            return ApplyResult(False, new_snap.version, metrics, st.segments)
-
-        st: _BatchStats | None = None
-        exact: tuple[int, int, int, bool] | None = None
-        hot = False
-        if not overlapped:
-            st = _BatchStats.fold(
-                _segment_stats(batch, key, snap.n_buckets, order_cols, late_pred), applied
-            )
-            _mark("t_stats")
-            done = _nothing_to_merge(st)
-            if done is not None:
-                return done
+            if not st.touched:
+                # wholly late: commit the markers (and watermark) only
+                for d in st.segments:
+                    st.attribute(d, 0, 0)
+                new_snap = table.commit([], set(), st.ids, cur if evo.changed else None,
+                                        _wm_update(wm_us, st.max_ts, lateness_s),
+                                        expected_version=snap.version)
+                metrics = _metrics(st, 0, 0, new_snap)
+                _append_lineage(table.root, st.segments, metrics, new_snap.version)
+                return ApplyResult(False, new_snap.version, metrics, st.segments)
             if st.replayed:
                 batch = batch.where(~F.col("batch_id").isin(st.replayed))
-            live = _live(batch)
-        norm_bid = live.select(*sel)
+        norm_bid = (batch.where(~late_pred) if drop_late else batch).select(*sel)
         normalized = norm_bid.drop("batch_id")
 
-        def _exact(threshold: int) -> tuple[int, int, int, bool]:
-            rows = (
-                exact_future.result()
-                if exact_future is not None
-                else _exact_winner_stats(norm_bid, key, order_cols)
-            )
-            return _absorb_exact(rows, st.segments, order_cols, threshold)
+        def _exact() -> tuple[int, int, int, bool]:
+            rows = _exact_winner_stats(norm_bid, key, order_cols)
+            return _absorb_exact(rows, st.segments, order_cols, hot_key_threshold)
 
         # exact pass BEFORE the write: it routes a possible hot key, and a
         # fused-MOR multi-segment write is checked against its winner count
-        if st is not None and (
-            st.max_bucket_live > hot_key_threshold or (use_mor and len(st.ids) > 1)
-        ):
-            exact = _exact(hot_key_threshold)
+        exact: tuple[int, int, int, bool] | None = None
+        hot = False
+        if st.max_bucket_live > hot_key_threshold or (use_mor and len(st.ids) > 1):
+            exact = _exact()
             # a salted LWW pre-reduce would drop coalesce-mode partial cells
             hot = exact[3] and mode == "overwrite"
             _mark("t_winner_stats")
@@ -268,37 +234,27 @@ def apply_batch(
         if use_mor:
             out = fused_mor_winners(
                 merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
-                snap.n_buckets,
-                batch_rows=src_rows_bound if overlapped else st.live_rows,
+                snap.n_buckets, batch_rows=st.live_rows,
             )
         else:
-            # the overlapped schedule reads every bucket (touched buckets
-            # are not known yet); its layout input is clamped to the gate's
-            # bound — the footer bound is loose, and an inflated estimate
-            # would tip sort_layout into a second salt shard for nothing
-            if overlapped:
-                target = table.read(include_deleted=True, as_schema=cur)
-                total_rows = min(table_rows + src_rows_bound, MICRO_BATCH_ROWS)
-            else:
-                target = table.read(buckets=st.touched, include_deleted=True, as_schema=cur)
-                touched = set(st.touched)
-                total_rows = (
-                    sum(f.rows for f in snap.files if f.bucket in touched) + st.live_rows
-                )
+            target = table.read(buckets=st.touched, include_deleted=True, as_schema=cur)
+            touched = set(st.touched)
             out = fused_cow_merge(
                 target, merge_src, key, OP_COL, order_cols, cur.to_spark(),
-                computed, snap.n_buckets, total_rows=total_rows, mode=mode,
+                computed, snap.n_buckets,
+                total_rows=sum(f.rows for f in snap.files if f.bucket in touched)
+                + st.live_rows,
+                mode=mode,
             )
         # AQE adds nothing to a join-free, explicitly-partitioned write but
         # stage-by-stage materialization latency: measured -18% apply wall
-        # at sf0.1 for the fused MOR write and -6% for the micro-batch COW
-        # write with it off. A large COW merge keeps it (the 1M-event A/B
-        # read parity-with-downside for AQE-off at scale). Plan building is
-        # lazy, so the conf takes effect at the write's execution.
-        aqe_off = use_mor or overlapped
+        # at sf0.1 for the fused MOR write with it off. A COW merge keeps it
+        # (the 1M-event A/B read parity-with-downside for AQE-off at scale).
+        # Plan building is lazy, so the conf takes effect at the write's
+        # execution.
         with (
             scoped_conf(table.spark, "spark.sql.adaptive.enabled", "false")
-            if aqe_off
+            if use_mor
             else nullcontext()
         ):
             # the MOR tombstone count rides along in the footer harvest's
@@ -309,18 +265,16 @@ def apply_batch(
             )
         files, n_tombstones = written if use_mor else (written, None)
         _mark("t_merge_write")
+        if foot is not None:
+            # one written row per surviving key, so the written files'
+            # buckets are the surviving events' buckets
+            foot["buckets"] = {f.bucket for f in files}
 
-        if overlapped:
-            st = _BatchStats.fold(stats_future.result(), applied)
-            _mark("t_stats")
-            done = _nothing_to_merge(st)  # the written files stay uncommitted
-            if done is not None:
-                return done
         if exact is None and (not use_mor or len(st.ids) > 1):
             # after the write: integrity + per-segment attribution, still
             # strictly before the commit (a poisoned batch wastes one write
             # into an uncommitted directory no snapshot references)
-            exact = _exact(hot_key_threshold)
+            exact = _exact()
         n_rows = sum(f.rows for f in files)
         if exact is not None:
             n_winners, n_deletes, max_key_rows, _ = exact
@@ -336,25 +290,18 @@ def apply_batch(
             # fused-MOR fast path, single segment by construction: winners
             # are the written delta rows (one per key), deletes the
             # harvested tombstone sum; max_key_rows is reported as its sound
-            # per-bucket upper bound
+            # per-bucket upper bound (the segment's row count on the footer
+            # path)
             n_winners, n_deletes, max_key_rows = n_rows, n_tombstones, st.max_bucket_live
             st.attribute(st.segments[0], n_winners, n_deletes)
         if "t_winner_stats" not in phase_t:
             _mark("t_winner_stats")
 
-        if use_mor:
-            replaced: set[int] = set()
-        elif overlapped:
-            # every bucket was read: replace every bucket that held or
-            # gained a file (a superset rewrite of byte-identical rows)
-            replaced = {f.bucket for f in snap.files} | {f.bucket for f in files}
-        else:
-            replaced = set(st.touched)
         # CAS on the base snapshot: a concurrent commit since this apply's
         # read raises CommitConflictError (lake/locking.py) — the caller
         # replays the batch against the new snapshot (idempotent by markers)
         new_snap = table.commit(
-            files, replaced, st.ids,
+            files, set() if use_mor else set(st.touched), st.ids,
             cur if evo.changed else None,
             _wm_update(wm_us, st.max_ts, lateness_s),
             expected_version=snap.version,
@@ -366,25 +313,41 @@ def apply_batch(
         metrics["max_key_rows"] = max_key_rows
         metrics["hot_key_routed"] = hot
         metrics["winner_stats_path"] = "exact" if exact is not None else "manifest"
-        metrics["stats_overlapped"] = overlapped
+        metrics["stats_path"] = "footer" if foot is not None else "job"
         metrics["phases_s"] = {k: round(v, 3) for k, v in phase_t.items()}
         _append_lineage(table.root, st.segments, metrics, new_snap.version)
         return ApplyResult(False, new_snap.version, metrics, st.segments)
 
 
-def _source_footprint(batch: DataFrame) -> tuple[bool, int | None]:
-    """(narrow, footer row bound) of the batch's source scan.
+def _source_footprint(batch: DataFrame, order_cols) -> tuple[bool, dict | None]:
+    """(narrow, footer segment) of the batch's source scan.
 
     A NARROW source (a few files) re-scans and re-derives serially per
-    action, so the apply persists it: measured -1s/batch at 12.5k-event
-    batches over a one-split source. Over an already-parallel source the
-    re-scan is cheap and caching payload bytes is pure overhead (+5-15%
-    apply wall at 250k-event batches over 32 splits). inputFiles() is
-    metadata-only (getNumPartitions() would pay a physical planning, ~0.1s).
+    action, so the apply persists it when it runs more than one action:
+    measured -1s/batch at 12.5k-event batches over a one-split source. Over
+    an already-parallel source the re-scan is cheap and caching payload
+    bytes is pure overhead (+5-15% apply wall at 250k-event batches over 32
+    splits). inputFiles() is metadata-only (getNumPartitions() would pay a
+    physical planning, ~0.1s).
 
-    The bound sums the narrow source files' parquet footer row counts: the
-    batch is a filtered projection of those files, so its rows never
-    exceed it. None when the source is wide or not parquet files."""
+    The footer segment is a narrow source's per-segment facts read from its
+    parquet footers alone, in the shape ``_BatchStats`` folds the stats job
+    into, plus ``ts_min``. It is None — the facts need the stats job —
+    unless:
+    - the analyzed plan is one bare ``LogicalRelation``: a ``Filter`` or
+      ``Project`` over it (``.where``, ``.withColumn``) changes which rows
+      or which ``batch_id`` the batch holds, so the footers would describe
+      other rows;
+    - the relation exposes ``batch_id`` and every footer has its
+      statistics with min == max and no nulls: the files hold exactly one
+      segment, so the footers' row count is its ``events_in``. A batch
+      without the column takes ``default_batch_id`` instead;
+    - ``lsn`` statistics exist with no nulls, for the lineage offsets.
+    ``warc_ts`` min/max are included when their statistics exist with no
+    nulls and decode to timezone-aware datetimes; they are needed only when
+    lateness is set (see ``apply_batch``). The touched buckets are left
+    empty (they come from the written files), and the hot-key bound is the
+    row count: a key never has more rows than the segment."""
     try:
         src_files = batch.inputFiles()
         cores = batch.sparkSession.sparkContext.defaultParallelism
@@ -393,14 +356,49 @@ def _source_footprint(batch: DataFrame) -> tuple[bool, int | None]:
     if not 0 < len(src_files) <= max(2, cores // 8):
         return False, None
     try:
-        return True, sum(
+        plan = batch._jdf.queryExecution().analyzed().nodeName()
+        if plan != "LogicalRelation" or "batch_id" not in batch.columns:
+            return True, None
+        mds = [
             pq.ParquetFile(
                 unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p
-            ).metadata.num_rows
+            ).metadata
             for p in src_files
-        )
+        ]
     except Exception:
         return True, None
+    ts_col, lsn_col = order_cols
+    bid, lsn, ts = (_footer_range(mds, c) for c in ("batch_id", lsn_col, ts_col))
+    if bid is None or bid[0] != bid[1] or lsn is None:
+        return True, None
+    if ts is not None and not all(isinstance(v, datetime) and v.tzinfo for v in ts):
+        ts = None
+    rows = sum(md.num_rows for md in mds)
+    return True, {
+        "batch_id": int(bid[0]), "events_in": rows, "lsn_min": lsn[0], "lsn_max": lsn[1],
+        "ts_min": ts and ts[0], "ts_max": ts and ts[1], "late_dropped": 0,
+        "buckets": set(), "max_bucket_live": rows,
+    }
+
+
+def _footer_range(mds: list, col: str) -> tuple | None:
+    """(min, max) of ``col`` over every row group of the footers ``mds``;
+    None unless every row group has min/max statistics and a zero null
+    count for it."""
+    lo = hi = None
+    for md in mds:
+        for rg in range(md.num_row_groups):
+            g = md.row_group(rg)
+            st = next(
+                (g.column(i).statistics for i in range(g.num_columns)
+                 if g.column(i).path_in_schema == col),
+                None,
+            )
+            if st is None or not st.has_min_max or not st.has_null_count or st.null_count:
+                return None
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+    return None if lo is None else (lo, hi)
 
 
 @contextmanager
@@ -629,36 +627,24 @@ def _append_lineage(root: str, seg_stats: list[dict], metrics: dict, version: in
     (/root/reference/src/how_long_to_beat.py:401-558)."""
     ldir = os.path.join(root, "lineage")
     os.makedirs(ldir, exist_ok=True)
-    rows = []
-    for d in seg_stats:
-        # winners/conflicts/deletes are PER-SEGMENT (attributed to the
-        # winning row's batch_id by the skinny stats pass) — lineage rows
-        # of a multi-segment batch sum to the batch totals instead of each
-        # duplicating them. rows_after stays batch-level: it is table
-        # state after the commit, not attributable to one segment.
-        rows.append(
-            {
-                "snapshot_version": version,
-                "batch_id": int(d["batch_id"]),
-                "events_in": int(d["events_in"]),
-                "late_dropped": int(d["late_dropped"] or 0),
-                "lsn_min": int(d["lsn_min"]) if d["lsn_min"] is not None else None,
-                "lsn_max": int(d["lsn_max"]) if d["lsn_max"] is not None else None,
-                "winners": d.get("winners", metrics.get("winners")),
-                "conflicts_resolved": d.get(
-                    "conflicts_resolved", metrics.get("conflicts_resolved")
-                ),
-                "delete_winners": d.get(
-                    "delete_winners", metrics.get("delete_winners")
-                ),
-                "buckets_touched": d.get(
-                    "buckets_touched", metrics.get("buckets_touched")
-                ),
-                "rows_after": metrics.get("rows_after"),
-                "batch_wall_ms": metrics.get("wall_ms", 0),
-                "extractor_version": EXTRACTOR_VERSION,
-            }
-        )
+    # winners/conflicts/deletes/buckets are PER-SEGMENT (attributed to the
+    # winning row's batch_id) — lineage rows of a multi-segment batch sum to
+    # the batch totals instead of each duplicating them. rows_after stays
+    # batch-level: it is table state after the commit, not attributable to
+    # one segment.
+    per_seg = ("events_in", "late_dropped", "lsn_min", "lsn_max", "winners",
+               "conflicts_resolved", "delete_winners", "buckets_touched")
+    rows = [
+        {
+            "snapshot_version": version,
+            "batch_id": int(d["batch_id"]),
+            **{c: None if d[c] is None else int(d[c]) for c in per_seg},
+            "rows_after": metrics.get("rows_after"),
+            "batch_wall_ms": metrics.get("wall_ms", 0),
+            "extractor_version": EXTRACTOR_VERSION,
+        }
+        for d in seg_stats
+    ]
     tbl = pa.Table.from_pylist(rows, schema=LINEAGE_SCHEMA)
     pq.write_table(tbl, os.path.join(ldir, f"lineage-v{version:08d}.parquet"))
 

@@ -390,10 +390,10 @@ def schedule_stream(spark, tmp_path_factory):
 @pytest.mark.parametrize("way", ["segment-narrow", "segment-wide", "whole-narrow", "whole-wide"])
 @pytest.mark.parametrize("strategy", ["cow", "mor"])
 def test_apply_schedule_matrix(spark, tmp_path, schedule_stream, strategy, way):
-    """Both schedules of the one apply orchestrator stay reachable: a narrow
-    micro-batch source overlaps the stats (and exact) jobs with the write,
-    a wide source runs them sequentially. Every way reaches the model's
-    final state; a multi-segment batch always takes the exact pass."""
+    """Both fact sources of the one apply schedule stay reachable: a narrow
+    single-segment source into a MOR table takes its stats from the parquet
+    footer, every other way runs the stats job. Every way reaches the
+    model's final state; a multi-segment batch always takes the exact pass."""
     want, ways = schedule_stream
     table = create_pages_table(
         spark, str(tmp_path / "pages"), n_buckets=8, merge_strategy=strategy
@@ -401,7 +401,8 @@ def test_apply_schedule_matrix(spark, tmp_path, schedule_stream, strategy, way):
     for p in ways[way]:
         res = apply_batch(table, spark.read.parquet(p))
         assert not res.skipped
-        assert res.metrics["stats_overlapped"] == way.endswith("narrow")
+        footer = way == "segment-narrow" and strategy == "mor"
+        assert res.metrics["stats_path"] == ("footer" if footer else "job")
         whole = way.startswith("whole")
         assert len(res.per_segment) == (3 if whole else 1)
         exact = strategy == "cow" or whole
@@ -413,6 +414,171 @@ def test_apply_schedule_matrix(spark, tmp_path, schedule_stream, strategy, way):
     assert [bytes(b) if b is not None else None for b in got["html"]] == list(want["html"])
     lin = read_lineage(spark, table.root).toPandas()
     assert int(lin["events_in"].sum()) == SCHEDULE_EVENTS
+
+
+REFUSAL_EVENTS = 600
+
+
+@pytest.fixture(scope="module")
+def refusal_sources(spark, tmp_path_factory):
+    """One seeded event frame landed as the sources the footer path must
+    refuse: a one-segment file, the same rows as one 3-segment file, as a
+    file without batch_id, and as a Spark-written file whose default INT96
+    timestamps carry no statistics."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = tmp_path_factory.mktemp("refusals")
+    ev = gen_change_events(REFUSAL_EVENTS, 80, seed=61, delete_frac=0.1).drop(columns=["title"])
+    (one,) = write_change_segments(str(d / "one"), ev, 1)
+    whole = str(d / "whole.parquet")
+    pq.write_table(
+        pa.concat_tables(
+            [pq.read_table(p) for p in write_change_segments(str(d / "three"), ev, 3)]
+        ),
+        whole,
+    )
+    no_bid = str(d / "no_bid.parquet")
+    pq.write_table(pq.read_table(one).drop_columns(["batch_id"]), no_bid)
+    int96 = str(d / "int96")
+    spark.read.parquet(one).coalesce(1).write.parquet(int96)
+    return ev, {"one": one, "whole": whole, "no_bid": no_bid, "int96": int96}
+
+
+@pytest.mark.parametrize(
+    "case",
+    ["filtered", "projected", "three-segments", "default-batch-id", "schema-without-batch-id",
+     "int96-lateness"],
+)
+def test_footer_path_refusals(spark, tmp_path, refusal_sources, case):
+    """Each source whose footers do not describe the batch's rows takes the
+    stats job, reaches the model's state for the rows it holds, and records
+    exactly those rows in lineage: a filter or projection over the scan, a
+    file of several segments, a batch_id that is not in the file or not in
+    the read schema, and possibly-late rows whose timestamps have no
+    statistics."""
+    from pyspark.sql import functions as F
+
+    ev, src = refusal_sources
+    rows, kwargs = ev, {}
+    if case == "filtered":
+        batch = spark.read.parquet(src["one"]).where(F.col("lsn") % 2 == 0)
+        rows = ev[ev["lsn"] % 2 == 0]
+    elif case == "projected":
+        batch = spark.read.parquet(src["one"]).withColumn("batch_id", F.lit(7).cast("bigint"))
+    elif case == "three-segments":
+        batch = spark.read.parquet(src["whole"])
+    elif case == "default-batch-id":
+        batch, kwargs = spark.read.parquet(src["no_bid"]), {"default_batch_id": 5}
+    elif case == "schema-without-batch-id":
+        schema = spark.read.parquet(src["one"]).drop("batch_id").schema
+        batch, kwargs = spark.read.schema(schema).parquet(src["one"]), {"default_batch_id": 5}
+    else:
+        batch, kwargs = spark.read.parquet(src["int96"]), {"lateness_s": 10**9}
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=8, merge_strategy="mor")
+    res = apply_batch(t, batch, **kwargs)
+    assert not res.skipped
+    assert res.metrics["stats_path"] == "job"
+    want = model_final_state(rows)
+    got = _read_table_pdf(t)
+    assert list(got["url"]) == list(want["url"])
+    assert list(got["lsn"]) == list(want["lsn"])
+    assert list(got["text"]) == list(want["text"])
+    lin = read_lineage(spark, t.root).toPandas()
+    assert int(lin["events_in"].sum()) == len(rows)
+    if "default_batch_id" in kwargs:
+        assert list(lin["batch_id"]) == [kwargs["default_batch_id"]]
+
+
+def test_footer_path_lateness_matches_job_path(spark, tmp_path):
+    """With a lateness bound, a MOR segment whose footer min warc_ts is at
+    or above the watermark takes the footer path and advances the watermark
+    from its footer max, and a segment holding late rows runs the stats
+    job. Watermark, lineage and rows equal a COW replay, which runs the
+    stats job for every segment."""
+    ev = gen_change_events(1500, 200, seed=25, late_frac=0.1, late_by_s=100_000)
+    paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 5)
+    mor = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=8, merge_strategy="mor")
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=8)
+    routes = []
+    for p in paths:
+        routes.append(apply_batch(mor, spark.read.parquet(p), lateness_s=600).metrics["stats_path"])
+        assert apply_batch(cow, spark.read.parquet(p), lateness_s=600).metrics["stats_path"] == "job"
+    assert {"footer", "job"} <= set(routes), routes
+    wm = [t.snapshot().properties["watermark_us"] for t in (mor, cow)]
+    assert wm[0] == wm[1]
+    lin_mor, lin_cow = (
+        read_lineage(spark, t.root).toPandas().sort_values("batch_id").reset_index(drop=True)
+        for t in (mor, cow)
+    )
+    for col in ("batch_id", "events_in", "late_dropped", "lsn_min", "lsn_max", "winners"):
+        assert list(lin_mor[col]) == list(lin_cow[col]), col
+    assert lin_mor["late_dropped"].sum() > 0
+    got, want = _read_table_pdf(mor), _read_table_pdf(cow)
+    for col in ("url", "lsn", "text"):
+        assert list(got[col]) == list(want[col]), col
+
+
+def _jobs_added(sc, group: str, action) -> tuple[set, set]:
+    """Job ids that ``action`` adds under ``group`` and under no group."""
+    tracker = sc.statusTracker()
+    grouped, ungrouped = set(tracker.getJobIdsForGroup(group)), set(tracker.getJobIdsForGroup())
+    action()
+    return (
+        set(tracker.getJobIdsForGroup(group)) - grouped,
+        set(tracker.getJobIdsForGroup()) - ungrouped,
+    )
+
+
+@pytest.fixture
+def job_group(spark):
+    """A fresh job group set on the calling thread for the test's span."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"apply-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "apply job-count test")
+    yield sc, group
+    for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(prop, None)
+
+
+def test_single_segment_mor_apply_is_one_labelled_job(spark, tmp_path, stream, job_group):
+    """A single-segment MOR apply submits exactly one Spark job, the write,
+    on the caller's thread: it carries the caller's job group, and no job
+    runs outside it."""
+    from game_library_enrichment_etl_spark.sources.readers import read_change_batch
+
+    sc, group = job_group
+    _ev, paths = stream
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=8, merge_strategy="mor")
+    batch = read_change_batch(spark, paths[0])
+    out = {}
+    grouped, ungrouped = _jobs_added(sc, group, lambda: out.update(res=apply_batch(t, batch)))
+    assert not ungrouped, ungrouped
+    assert len(grouped) == 1, grouped
+    assert out["res"].metrics["stats_path"] == "footer"
+
+
+def test_footer_path_past_ten_thousand_markers(spark, tmp_path, stream, job_group):
+    """More than 10,000 applied markers change nothing: the next segment
+    still takes its facts from the footer, and its replay is skipped
+    without submitting a job."""
+    sc, group = job_group
+    _ev, paths = stream
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=8, merge_strategy="mor")
+    t.commit([], set(), list(range(1_000, 11_001)))
+    assert len(t.snapshot().applied_batch_ids) > 10_000
+    res = apply_batch(t, spark.read.parquet(paths[0]))
+    assert not res.skipped
+    assert res.metrics["stats_path"] == "footer"
+    version = t.snapshot().version
+    batch = spark.read.parquet(paths[0])
+    out = {}
+    grouped, ungrouped = _jobs_added(sc, group, lambda: out.update(res=apply_batch(t, batch)))
+    assert out["res"].skipped
+    assert not grouped and not ungrouped, (grouped, ungrouped)
+    assert t.snapshot().version == version
 
 
 @pytest.mark.parametrize("strategy", ["cow", "mor"])
