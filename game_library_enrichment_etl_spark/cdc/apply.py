@@ -19,20 +19,20 @@ Merge modes
   a key's reset point is its latest I/D version, and each payload column
   takes its last non-null value from the non-D rows at or after it.
 
-One orchestrator, two merge formulations
-----------------------------------------
-``apply_batch`` is the only apply path. Both merge formulations live in
-cdc/fused.py and share one shape — union, ONE route exchange, a
-partition-local sort, a first-of-key filter ("change propagation without
-joins"):
-- ``fused_mor_winners`` for merge-on-read tables in overwrite mode: the
-  batch's winners (deletes as tombstone rows) are APPENDED as delta
-  files — per-batch write cost is O(batch), never O(table); reads resolve
-  LWW by (version, file sequence) and ``lake.maintenance.compact`` folds
-  buckets back to one file.
-- ``fused_cow_merge`` for everything else (copy-on-write tables, and
-  coalesce mode on either strategy): stored rows of the touched buckets
-  union the raw batch rows and the merged row per key is rewritten.
+One orchestrator, one merge
+---------------------------
+``apply_batch`` is the only apply path, and ``fused_merge`` (cdc/fused.py)
+its only merge: union, ONE route exchange, a partition-local sort, a
+first-of-key filter ("change propagation without joins"). What it folds
+depends on the table:
+- merge-on-read tables in overwrite mode fold the batch over no stored
+  rows: the batch's winners (deletes as tombstone rows) are APPENDED as
+  delta files — per-batch write cost is O(batch), never O(table); reads
+  resolve LWW by (version, file sequence) and ``lake.maintenance.compact``
+  folds buckets back to one file.
+- everything else (copy-on-write tables, and coalesce mode on either
+  strategy) folds the stored rows of the touched buckets with the raw
+  batch rows, and the merged row per key is rewritten.
 Hot keys pre-reduce through the ``salted`` two-phase strategy
 (operators/lww.py) in overwrite mode. The only Python execution is the
 Arrow-vectorized extraction on winner rows (functions/extract.py).
@@ -55,11 +55,10 @@ Action (2), the exact per-key winner pass — WAL integrity (duplicate (key,
 version) delivery), exact hot-key counts and per-segment winner
 attribution — runs only when load-bearing: every copy-on-write merge,
 multi-segment batches and batches whose bucket bound admits a hot key. It
-runs before the write when it routes a hot key or the fused-MOR write
-needs its counts, else after the write. On a single-segment MOR write
-winners and deletes come from the written files instead (manifest row
-counts + the tombstone sum folded into the footer harvest), and integrity
-from the fused pass's partition-wide duplicate check.
+runs before the write, so a batch it rejects writes no file. On a
+single-segment MOR write winners and deletes come from the written files
+instead (manifest row counts + the tombstone sum folded into the footer
+harvest), and integrity from the merge's per-key duplicate check.
 
 Every action runs on the caller's thread, so it carries the caller's job
 group, and joins strictly before the commit, so the WAL-integrity raise
@@ -88,7 +87,7 @@ from ..functions.extract import EXTRACTOR_VERSION
 from ..lake.table import DELETED_COL, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
 from ..session import scoped_conf
-from .fused import fused_cow_merge, fused_mor_winners
+from .fused import fused_merge
 
 META_COLS = ("op", "batch_id")
 OP_COL = "op"
@@ -139,7 +138,7 @@ def apply_batch(
     use_mor = table.merge_strategy == "mor" and mode == "overwrite"
 
     # the footer path (module docstring, "Schedule"). Beyond the source
-    # conditions _source_footprint checks, it needs: a fused-MOR write (the
+    # conditions _source_footprint checks, it needs: a MOR write (the
     # only merge whose winners and deletes come from its own files); a row
     # count within hot_key_threshold (the count bounds every key's rows, so
     # no key can be hot and the exact pass is not load-bearing); and, when
@@ -216,36 +215,32 @@ def apply_batch(
         norm_bid = (batch.where(~late_pred) if drop_late else batch).select(*sel)
         normalized = norm_bid.drop("batch_id")
 
-        def _exact() -> tuple[int, int, int, bool]:
-            rows = _exact_winner_stats(norm_bid, key, order_cols)
-            return _absorb_exact(rows, st.segments, order_cols, hot_key_threshold)
-
-        # exact pass BEFORE the write: it routes a possible hot key, and a
-        # fused-MOR multi-segment write is checked against its winner count
+        # the exact pass, when load-bearing, runs BEFORE the write, so a
+        # WAL-integrity violation raises before any file is written: every
+        # COW or coalesce merge (per-segment attribution), a multi-segment
+        # MOR write (checked against its winner count) and a bucket bound
+        # that admits a hot key (it routes the key)
         exact: tuple[int, int, int, bool] | None = None
-        hot = False
-        if st.max_bucket_live > hot_key_threshold or (use_mor and len(st.ids) > 1):
-            exact = _exact()
-            # a salted LWW pre-reduce would drop coalesce-mode partial cells
-            hot = exact[3] and mode == "overwrite"
-            _mark("t_winner_stats")
+        if not use_mor or len(st.ids) > 1 or st.max_bucket_live > hot_key_threshold:
+            exact = _absorb_exact(
+                _exact_winner_stats(norm_bid, key, order_cols), st.segments,
+                order_cols, hot_key_threshold,
+            )
+        # a salted LWW pre-reduce would drop coalesce-mode partial cells
+        hot = exact is not None and exact[3] and mode == "overwrite"
+        _mark("t_winner_stats")
 
         merge_src = lww_dedup(normalized, key, order_cols) if hot else normalized
-        if use_mor:
-            out = fused_mor_winners(
-                merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
-                snap.n_buckets, batch_rows=st.live_rows,
-            )
-        else:
+        # a MOR write is the same fold over no stored rows
+        target, stored_rows = None, 0
+        if not use_mor:
             target = table.read(buckets=st.touched, include_deleted=True, as_schema=cur)
             touched = set(st.touched)
-            out = fused_cow_merge(
-                target, merge_src, key, OP_COL, order_cols, cur.to_spark(),
-                computed, snap.n_buckets,
-                total_rows=sum(f.rows for f in snap.files if f.bucket in touched)
-                + st.live_rows,
-                mode=mode,
-            )
+            stored_rows = sum(f.rows for f in snap.files if f.bucket in touched)
+        out = fused_merge(
+            target, merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
+            snap.n_buckets, total_rows=stored_rows + st.live_rows, mode=mode,
+        )
         # AQE adds nothing to a join-free, explicitly-partitioned write but
         # stage-by-stage materialization latency: measured -18% apply wall
         # at sf0.1 for the fused MOR write with it off. A COW merge keeps it
@@ -270,11 +265,6 @@ def apply_batch(
             # buckets are the surviving events' buckets
             foot["buckets"] = {f.bucket for f in files}
 
-        if exact is None and (not use_mor or len(st.ids) > 1):
-            # after the write: integrity + per-segment attribution, still
-            # strictly before the commit (a poisoned batch wastes one write
-            # into an uncommitted directory no snapshot references)
-            exact = _exact()
         n_rows = sum(f.rows for f in files)
         if exact is not None:
             n_winners, n_deletes, max_key_rows, _ = exact
@@ -287,15 +277,13 @@ def apply_batch(
                     f"for {n_winners} winner keys"
                 )
         else:
-            # fused-MOR fast path, single segment by construction: winners
+            # MOR fast path, single segment by construction: winners
             # are the written delta rows (one per key), deletes the
             # harvested tombstone sum; max_key_rows is reported as its sound
             # per-bucket upper bound (the segment's row count on the footer
             # path)
             n_winners, n_deletes, max_key_rows = n_rows, n_tombstones, st.max_bucket_live
             st.attribute(st.segments[0], n_winners, n_deletes)
-        if "t_winner_stats" not in phase_t:
-            _mark("t_winner_stats")
 
         # CAS on the base snapshot: a concurrent commit since this apply's
         # read raises CommitConflictError (lake/locking.py) — the caller

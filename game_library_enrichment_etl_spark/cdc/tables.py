@@ -47,10 +47,3 @@ def create_pages_table(
         merge_strategy=merge_strategy,
     )
 
-
-def get_or_create_pages_table(
-    spark: SparkSession, root: str, n_buckets: int = 16, merge_strategy: str = "cow"
-) -> IceletTable:
-    if IceletTable.exists(root):
-        return IceletTable(spark, root)
-    return create_pages_table(spark, root, n_buckets, merge_strategy)

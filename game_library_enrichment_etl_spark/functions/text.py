@@ -68,12 +68,6 @@ def punct_ratio(col: Column) -> Column:
     return F.when(n > 0, p.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
 
 
-def upper_ratio(col: Column) -> Column:
-    n = F.length(col)
-    u = n - F.length(F.regexp_replace(col, "[A-Z]", ""))
-    return F.when(n > 0, u.cast("double") / n.cast("double")).otherwise(F.lit(0.0))
-
-
 def stopword_ratio(col: Column, lang: str = "en") -> Column:
     toks = tokens(col)
     sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])

@@ -21,8 +21,6 @@ round6() implements half-up explicitly (inputs are non-negative here).
 
 from __future__ import annotations
 
-import re
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
@@ -40,21 +38,12 @@ def _normalize(s: pd.Series) -> pd.Series:
     return s.str.lower().str.replace(r"\s+", " ", regex=True).str.strip()
 
 
-def _stopword_pattern(words: list[str]) -> str:
-    # token == stopword  <=>  preceded by start-or-space and followed by
-    # space-or-end in single-space-normalized text. The leading group
-    # consumes the boundary space, which is safe for adjacent stopwords
-    # because the trailing boundary is a non-consuming lookahead.
-    alt = "|".join(re.escape(w) for w in words)
-    return rf"(?:^| )(?:{alt})(?= |$)"
-
-
 # token -> indices of the (sorted) languages whose stopword list holds it.
 # In single-space-normalized text, counting ``tok == word`` over split(' ')
-# tokens equals counting the boundary-anchored regex above (the regex
-# consumes the leading boundary and looks ahead at the trailing one), but a
-# dict probe per token replaces a 10-way alternation scan per language —
-# the regex path's backtracking was ~70% of lang_id_np's wall (r6).
+# tokens equals counting the boundary-anchored matches of the module
+# docstring, but a dict probe per token replaces a 10-way alternation scan
+# per language: the regex path's backtracking was ~70% of lang_id_np's wall
+# (r6).
 _SORTED_LANGS = sorted(LANG_STOPWORDS)
 _STOPWORD_LUT: dict[str, tuple[int, ...]] = {}
 for _i, _lang in enumerate(_SORTED_LANGS):

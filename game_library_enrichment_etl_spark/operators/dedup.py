@@ -115,27 +115,6 @@ def minhash_params(n_hashes: int) -> list[tuple[int, int]]:
     return out
 
 
-def minhash_signature(col: Column, n_hashes: int = 12, shingle_n: int = 3) -> Column:
-    """Array of ``n_hashes`` minhashes over word shingles.
-
-    One md5 per shingle (base hash reduced to 31 bits), then an affine
-    family h_i = (a_i * h0 + b_i) mod (2^31 - 1): a_i*h0 < 2^62 so every
-    intermediate fits int64 exactly in both Spark and DuckDB — 12x less
-    hashing CPU than an md5-per-(shingle, i) family at identical
-    reproducibility."""
-    sh = word_shingles(col, shingle_n)
-    h0s = F.transform(sh, lambda s: F.pmod(token_hash(s), F.lit(2**31)))
-    return minhash_from_hashes(h0s, n_hashes)
-
-
-def shingle_hashes(col: Column, shingle_n: int = 3) -> Column:
-    """31-bit base hashes of the word shingles (the md5-heavy part —
-    materialize this once as its own column; higher-order functions are
-    interpreted, so letting Catalyst inline it N times costs N scans)."""
-    sh = word_shingles(col, shingle_n)
-    return F.transform(sh, lambda s: F.pmod(token_hash(s), F.lit(2**31)))
-
-
 def minhash_from_hashes(h0s: Column, n_hashes: int = 12) -> Column:
     def _affine(a: int, b: int):
         return lambda h: F.pmod(F.lit(a) * h + F.lit(b), F.lit(MINHASH_P))
@@ -262,15 +241,6 @@ def minhash_lsh_pairs(
 
 
 # --------------------------------------------------------------- simhash
-def simhash32(col: Column) -> Column:
-    """32-bit SimHash of the whitespace tokens (signed-bit-sum sketch).
-
-    Stays in 32 bits so every intermediate fits comfortably in int64 in
-    both engines; per-token hash is the shared 60-bit md5 hash.
-    """
-    return simhash_from_hashes(F.transform(tokens(col), token_hash))
-
-
 def token_hashes(col: Column) -> Column:
     """60-bit md5 hashes of the whitespace tokens (materialize once)."""
     return F.transform(tokens(col), token_hash)

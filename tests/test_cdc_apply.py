@@ -236,7 +236,7 @@ def test_duplicate_lsn_delivery_fails_loudly(spark, tmp_path):
 def test_duplicate_nonwinning_lsn_fails_loudly(spark, tmp_path):
     """VERDICT r5 next #3: a duplicated NON-winning (key, warc_ts, lsn) on
     a single-segment fused batch used to pass silently (only the winner's
-    own successor was checked); the partition-wide max(_dup) guard must
+    own successor was checked); the per-key max(_dup) guard must
     raise pre-commit, and the plan must still carry exactly one
     exchange."""
     import pandas as pd
@@ -324,6 +324,32 @@ def test_duplicate_lsn_raises_on_both_merge_paths(spark, tmp_path, strategy):
     with pytest.raises(Exception, match="(?i)duplicate"):
         apply_batch(t, spark.read.parquet(paths[0]), hot_key_threshold=1)
     assert t.snapshot().version == v0
+
+
+def test_cow_duplicate_lsn_raises_before_writing(spark, tmp_path):
+    """A COW batch with a duplicated (key, warc_ts, lsn) is rejected by the
+    exact pass, which runs before the merge write: no new data/v* directory
+    is left under the table root."""
+    import glob
+    import os
+
+    ev = gen_change_events(200, 40, seed=33).drop(columns=["title"])
+    first, second = ev.iloc[:100], ev.iloc[100:]
+    dup = second.iloc[[-1]].copy()
+    dup["html"] = [b"<p>divergent payload</p>"]
+    p0 = write_change_segments(str(tmp_path / "s0"), first, 1)
+    p1 = write_change_segments(
+        str(tmp_path / "s1"), pd.concat([second, dup], ignore_index=True), 1, first_batch_id=1
+    )
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4, merge_strategy="cow")
+    apply_batch(t, spark.read.parquet(p0[0]))
+    v0 = t.snapshot().version
+    dirs = sorted(glob.glob(os.path.join(t.root, "data", "v*")))
+    assert dirs, "the clean batch wrote data"
+    with pytest.raises(Exception, match="(?i)duplicate"):
+        apply_batch(t, spark.read.parquet(p1[0]))
+    assert t.snapshot().version == v0, "nothing may be committed"
+    assert sorted(glob.glob(os.path.join(t.root, "data", "v*"))) == dirs
 
 
 def test_per_segment_lineage_sums_not_duplicates(spark, tmp_path):

@@ -1,4 +1,4 @@
-"""Focused tests for the r6 COW union-merge (cdc/fused.fused_cow_merge):
+"""Focused tests for the union-merge (cdc/fused.fused_merge):
 
 1. Equivalence: the union + window formulation produces exactly the rows
    a full-outer-join merge of the batch LWW winners produces, derived by
@@ -7,7 +7,11 @@
    newer than target, batch STALE (older than target), exact version tie
    (source must win), and multiple batch rows per key (in-batch LWW).
 2. Plan shape: exactly ONE exchange, and extraction sits above the winner
-   filter (losers and target-won rows never feed Python real html).
+   filter (losers and target-won rows never feed Python real html), with
+   a stored target and with none (the MOR write).
+3. WAL integrity: two batch rows at one (key, version) raise; a stored
+   row tied with a batch row is a replay, not a duplicate.
+4. The expression memo keeps one application id's entries.
 """
 
 from __future__ import annotations
@@ -15,9 +19,10 @@ from __future__ import annotations
 import datetime as dt
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
-from game_library_enrichment_etl_spark.cdc.fused import fused_cow_merge
+from game_library_enrichment_etl_spark.cdc.fused import _EXPR_CACHE, _merge_exprs, fused_merge
 from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA
 from game_library_enrichment_etl_spark.functions.extract import extract_text_one
 from game_library_enrichment_etl_spark.lake.schema import TableSchema
@@ -79,8 +84,8 @@ def _tombstone(url: str, lsn: int) -> tuple:
 
 def test_cow_union_merge_equals_join_merge(spark):
     cur, target, batch = _frames(spark)
-    fused = fused_cow_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
-                            cur.to_spark(), {"text": "html"}, 8, total_rows=16)
+    fused = fused_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
+                        cur.to_spark(), {"text": "html"}, 8, total_rows=16)
 
     # the full-outer-join merge of the batch LWW winners, case by case:
     # take the batch winner iff its version >= the target's, tombstone it
@@ -108,15 +113,46 @@ def test_cow_union_merge_equals_join_merge(spark):
 
 def test_cow_union_merge_plan_shape(spark):
     cur, target, batch = _frames(spark)
-    # coalesce mode folds over the same union, exchange and sort
-    for mode in ("overwrite", "coalesce"):
-        fused = fused_cow_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
+    # coalesce mode folds over the same union, exchange and sort; without
+    # a target (the MOR write) the union is skipped
+    for tgt in (target, None):
+        for mode in ("overwrite", "coalesce"):
+            fused = fused_merge(tgt, batch, "url", "op", ("warc_ts", "lsn"),
                                 cur.to_spark(), {"text": "html"}, 8, total_rows=16,
                                 mode=mode)
-        plan = fused._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 1, f"{mode}: expected exactly one exchange:\n{plan}"
-        n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
-        assert n_sorts == 1, f"{mode}: expected exactly one sort:\n{plan}"
-        # extraction above the winner filter: losers never reach Python
-        i_filt, i_py = plan.index("Filter"), plan.index("ArrowEvalPython")
-        assert i_py < i_filt, f"{mode}: extraction must sit above the winner filter:\n{plan}"
+            case = f"{mode}, target={tgt is not None}"
+            plan = fused._jdf.queryExecution().executedPlan().toString()
+            assert plan.count("Exchange") == 1, f"{case}: expected exactly one exchange:\n{plan}"
+            n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
+            assert n_sorts == 1, f"{case}: expected exactly one sort:\n{plan}"
+            # extraction above the winner filter: losers never reach Python
+            i_filt, i_py = plan.index("Filter"), plan.index("ArrowEvalPython")
+            assert i_py < i_filt, f"{case}: extraction must sit above the winner filter:\n{plan}"
+
+
+@pytest.mark.parametrize("lsn", [62, 60], ids=["winning", "non-winning"])
+def test_duplicate_batch_version_raises_stored_tie_does_not(spark, lsn):
+    cur, target, batch = _frames(spark)
+    # the stored row tied with a batch row (u/tie) is a replay the source
+    # wins: it merges without raising
+    assert len(fused_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
+                           cur.to_spark(), {"text": "html"}, 8).collect()) == 8
+    # a second batch row at one of u/multi's versions, with another payload
+    dup = spark.createDataFrame(
+        [("U", "u/multi", _ts(lsn), lsn, b"<p>divergent</p>", "en")], batch.schema
+    )
+    for tgt in (target, None):
+        out = fused_merge(tgt, batch.unionByName(dup), "url", "op", ("warc_ts", "lsn"),
+                          cur.to_spark(), {"text": "html"}, 8)
+        with pytest.raises(Exception, match="(?i)duplicate"):
+            out.collect()
+
+
+def test_expr_memo_keeps_one_application(spark):
+    args = ("url", "op", ("warc_ts", "lsn"), PAGES_SCHEMA, (("text", "html"),), 8, 4, 1,
+            "overwrite")
+    _merge_exprs("a", *args)
+    assert any(k[0] == "a" for k in _EXPR_CACHE)
+    _merge_exprs("b", *args)
+    assert not any(k[0] == "a" for k in _EXPR_CACHE)
+    assert any(k[0] == "b" for k in _EXPR_CACHE)

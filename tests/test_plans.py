@@ -71,11 +71,11 @@ def test_cosine_topk_broadcasts_queries(spark):
 
 
 def test_fused_mor_plan_shape(spark):
-    """The fused MOR path's scale contract (cdc/fused.py): exactly ONE
-    exchange (the bucket repartition the window requires), one sort, the
-    winner filter BELOW the Arrow extraction (losers never reach Python),
-    and no extra shuffle after the window."""
-    from game_library_enrichment_etl_spark.cdc.fused import fused_mor_winners
+    """The MOR write's scale contract (cdc/fused.py, the merge over no
+    stored rows): exactly ONE exchange (the bucket repartition the window
+    requires), one sort, the winner filter BELOW the Arrow extraction
+    (losers never reach Python), and no extra shuffle after the window."""
+    from game_library_enrichment_etl_spark.cdc.fused import fused_merge
     from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA
     from game_library_enrichment_etl_spark.plans.asserts import executed_plan
     from pyspark.sql import functions as F
@@ -88,8 +88,8 @@ def test_fused_mor_plan_shape(spark):
         F.encode(F.concat(F.lit("<p>v"), F.col("id").cast("string"), F.lit("</p>")), "utf-8").alias("html"),
         F.lit("en").alias("lang"),
     )
-    out = fused_mor_winners(df, "url", "op", ("warc_ts", "lsn"), PAGES_SCHEMA,
-                            {"text": "html"}, 32)
+    out = fused_merge(None, df, "url", "op", ("warc_ts", "lsn"), PAGES_SCHEMA,
+                      {"text": "html"}, 32)
     plan = executed_plan(out)
     assert plan.count("Exchange") == 1, f"expected exactly one exchange:\n{plan}"
     # count Sort NODES: the node renders as "+- Sort [..." or, when it heads
