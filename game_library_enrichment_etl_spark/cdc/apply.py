@@ -23,16 +23,17 @@ One orchestrator, one merge
 ---------------------------
 ``apply_batch`` is the only apply path, and ``fused_merge`` (cdc/fused.py)
 its only merge: union, ONE route exchange, a partition-local sort, a
-first-of-key filter ("change propagation without joins"). What it folds
-depends on the table:
+first-of-key filter ("change propagation without joins") — the table's
+one LWW fold (``lake.table.LwwFold``). What it folds depends on the table:
 - merge-on-read tables in overwrite mode fold the batch over no stored
   rows: the batch's winners (deletes as tombstone rows) are APPENDED as
   delta files — per-batch write cost is O(batch), never O(table); reads
   resolve LWW by (version, file sequence) and ``lake.maintenance.compact``
   folds buckets back to one file.
 - everything else (copy-on-write tables, and coalesce mode on either
-  strategy) folds the stored rows of the touched buckets with the raw
-  batch rows, and the merged row per key is rewritten.
+  strategy) folds the raw stored rows of the touched buckets, tagged with
+  their commit sequence, with the raw batch rows, and the merged row per
+  key is rewritten.
 Hot keys pre-reduce through the ``salted`` two-phase strategy
 (operators/lww.py) in overwrite mode. The only Python execution is the
 Arrow-vectorized extraction on winner rows (functions/extract.py).
@@ -84,6 +85,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.extract import EXTRACTOR_VERSION
+from ..lake.schema import evolve
 from ..lake.table import DELETED_COL, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
 from ..session import scoped_conf
@@ -135,7 +137,7 @@ def apply_batch(
     order_cols = tuple(snap.properties["version_cols"])
     applied = set(snap.applied_batch_ids)
     wm_us = snap.properties.get("watermark_us")  # event-time watermark, epoch micros
-    use_mor = table.merge_strategy == "mor" and mode == "overwrite"
+    use_mor = snap.properties.get("merge_strategy", "cow") == "mor" and mode == "overwrite"
 
     # the footer path (module docstring, "Schedule"). Beyond the source
     # conditions _source_footprint checks, it needs: a MOR write (the
@@ -179,7 +181,7 @@ def apply_batch(
         # snapshot metadata, no action), so the normalized projection
         # exists before any job is submitted
         payload_struct = batch.drop(*[c for c in META_COLS if c in batch.columns]).schema
-        evo = table.resolve_schema(payload_struct, rename_hints)
+        evo = evolve(snap.schema, payload_struct, rename_hints)
         cur = evo.schema
         rev = {v: k for k, v in evo.batch_to_current.items()}  # current -> batch name
         computed = _computed_cols(cur.names())
@@ -231,12 +233,13 @@ def apply_batch(
         _mark("t_winner_stats")
 
         merge_src = lww_dedup(normalized, key, order_cols) if hot else normalized
-        # a MOR write is the same fold over no stored rows
-        target, stored_rows = None, 0
-        if not use_mor:
-            target = table.read(buckets=st.touched, include_deleted=True, as_schema=cur)
-            touched = set(st.touched)
-            stored_rows = sum(f.rows for f in snap.files if f.bucket in touched)
+        # a MOR write is the same fold over no stored rows; every other
+        # merge folds the raw _seq-tagged rows of the touched buckets, so
+        # the merge resolves them in its own sort
+        touched = set(st.touched)
+        stored = [] if use_mor else [f for f in snap.files if f.bucket in touched]
+        target = table._scan(snap, stored, cur, with_seq=True) if stored else None
+        stored_rows = sum(f.rows for f in stored)
         out = fused_merge(
             target, merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
             snap.n_buckets, total_rows=stored_rows + st.live_rows, mode=mode,

@@ -4,16 +4,21 @@
 decision per key — "the batch winner replaces the stored row iff its
 (warc_ts, lsn) is >= the stored row's; op='D' tombstones; otherwise the
 stored row carries forward" — is an LWW fold over the UNION of the stored
-rows and the raw batch rows with a source-wins tie break. A merge-on-read
+rows and the raw batch rows: the table's one fold (``lake.table.LwwFold``,
+which ``read`` and ``compact`` run with no batch side). Every row carries
+the commit sequence ``_seq`` that breaks a version tie; batch rows carry
+one above every stored row's, so the source wins. The stored side is the
+raw ``_seq``-tagged scan of the touched buckets, not a resolved read, so a
+merge onto a merge-on-read table pays one exchange too. A merge-on-read
 batch in overwrite mode is the same fold over no stored rows
 (``target=None``): every winner is a batch row, appended as a delta file.
 
-    stored rows (_pref=0) UNION batch rows (_pref=1)    -- no shuffle
-      -> exact-routed partitioning of (_bucket[, _salt]) groups
+    stored rows (_seq: commit) UNION batch rows (_seq: _BATCH_SEQ)  -- no shuffle
+      -> LwwFold: exact-routed partitioning of (_bucket[, _salt]) groups
          (lake/table.route_expr)                        -- the ONLY exchange
-      -> partition-local sort (key ASC, version DESC, _pref DESC)
-      -> "first row of key group" filter (lake/table.first_row_of_key)
-                                                        == LWW winner
+      -> partition-local sort (key ASC, version DESC, _seq DESC)
+      -> "first row of key group" filter                == LWW winner
+      -> duplicate guard [+ coalesce fold] over the same window
       -> delete tombstoning + winners-only html->text Arrow UDF
       -> parquet write partitionBy(_bucket), concurrent writers (no sort)
 
@@ -26,7 +31,7 @@ Correctness hinges on one invariant: ``_bucket = pmod(xxhash64(key),
 n_buckets)`` (and the optional in-bucket ``_salt``) is a pure function of
 the key, so hash-partitioning on it colocates every row of a key in
 exactly one partition, where the sort makes the key's rows contiguous
-with the max-(warc_ts, lsn) row first. Catalyst accepts the bucket
+with the max-(warc_ts, lsn, _seq) row first. Catalyst accepts the bucket
 partitioning as every window's required clustering, so NO second exchange
 or sort is planned — winner selection, tombstoning, extraction and the
 file write all run inside the single post-shuffle stage (``lag``/``lead``
@@ -44,9 +49,10 @@ Scale properties (the 100-TB design):
 - the writer runs with spark.sql.maxConcurrentOutputFileWriters set so the
   planner does NOT re-sort the output by partition column.
 
-Contract: ``lsn`` is a unique sequence number (the WAL/LSN contract). Two
-batch rows with the same (key, version) are adjacent after the sort, so
-each batch row checks its successor via ``lead``; a ``max`` over the key's
+Contract: ``lsn`` is a unique sequence number (the WAL/LSN contract).
+Within one stored commit a key has one row, so two adjacent rows with
+equal (key, version, _seq) can only be two batch rows at one version:
+each row checks its successor via ``lead``, and a ``max`` over the key's
 rows folds the flag — winning AND non-winning duplicates — into the
 winner's tombstone column, which raises (``raise_error``) before the
 commit. A stored row at a batch row's version is a replay the source
@@ -59,19 +65,14 @@ partition-local vectorized scan instead of a per-row Python loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.extract import extract_text_udf
-from ..lake.table import (
-    BUCKET_COL,
-    DELETED_COL,
-    bucket_expr,
-    first_row_of_key,
-    layout_exprs,
-    sort_layout,
-)
+from ..lake.table import BUCKET_COL, DELETED_COL, SEQ_COL, LwwFold, sort_layout
 
 
 # Column-expression memo (r6, guide §1.2 "per-task work" applied to the
@@ -81,12 +82,18 @@ from ..lake.table import (
 # steady stream rebuilds byte-identical expressions — only the source
 # DataFrames differ. Columns are unresolved expression trees (no bound
 # attribute ids), so one built set applies to any DataFrame with the
-# right column names; cache them per (gateway app, shape) and reuse.
+# right column names; cache them per (gateway app, shape) and reuse. The
+# key holds no per-batch value, so a steady stream hits one entry.
 # Keyed on the JVM application id so a restarted SparkContext in the
 # same Python process never sees stale py4j handles; an insert drops the
 # entries of every other application id, so dead contexts' handles are
 # not kept alive.
 _EXPR_CACHE: dict[tuple, dict] = {}
+
+# The batch rows' _seq: above every commit sequence, so the source wins a
+# version tie. A constant, not the batch's own sequence number, so the
+# memoized expressions hold no per-batch value.
+_BATCH_SEQ = (1 << 63) - 1
 
 
 def fused_merge(
@@ -102,14 +109,14 @@ def fused_merge(
     mode: str = "overwrite",
 ) -> DataFrame:
     """MERGE ``batch`` into ``target`` as union + one route exchange +
-    partition-local fold. Stored rows are tagged pref=0 and batch rows
-    pref=1; each key's first row in (version DESC, pref DESC) order
-    decides the key:
+    partition-local fold. Each key's first row in (version DESC, _seq
+    DESC) order decides the key:
 
     - batch row first and batch version > stored (or no stored row): the
       batch winner replaces the row; ``op='D'`` tombstones it.
-    - version tie: pref DESC puts the batch row first — source wins.
-    - stored row first (its version is higher): the stored row carries
+    - version tie: batch rows carry the highest ``_seq`` — source wins.
+    - stored row first (its version is higher, or its commit is the later
+      one at a version tie between stored rows): the stored row carries
       forward verbatim, including an existing tombstone (its op is
       re-derived as 'D' from the stored flag).
     - batch rows are never deduped up front: the sort orders a key's batch
@@ -120,9 +127,9 @@ def fused_merge(
 
     ``mode='coalesce'`` (reference M2, ``pandas.DataFrame.update``) folds
     the same sorted union per key instead of keeping one row verbatim.
-    The stored row counts as a reset (op ``I``, or ``D`` if tombstoned) at
+    Each stored row counts as a reset (op ``I``, or ``D`` if tombstoned) at
     its own version; the key's reset point is its latest I/D row by
-    (version, pref); each payload column takes its last non-null value
+    (version, _seq); each payload column takes its last non-null value
     from the non-D rows at or after the reset point. The first-sorted row
     still decides the key, the version and whether the key is deleted.
 
@@ -130,11 +137,12 @@ def fused_merge(
     the winning html came from a batch row, so per-batch Python cost stays
     O(batch winners), never O(touched buckets).
 
-    ``target`` is the bucket-pruned read with tombstones included,
-    projected to ``cur_schema`` (computed columns present); ``batch`` is
-    the normalized projection (op + payload columns, computed absent);
-    ``total_rows`` sizes the sort layout (lake/table.sort_layout). Output
-    is bucket-clustered and key-sorted within buckets, ready for
+    ``target`` is the raw ``_seq``-tagged scan of the touched buckets
+    (``IceletTable._scan(with_seq=True)``: every stored row, tombstones
+    included, projected to ``cur_schema`` with computed columns present);
+    ``batch`` is the normalized projection (op + payload columns, computed
+    absent); ``total_rows`` sizes the sort layout (lake/table.sort_layout).
+    Output is bucket-clustered and key-sorted within buckets, ready for
     ``write_data_files_prepartitioned``."""
     spark = batch.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -147,11 +155,7 @@ def fused_merge(
     src = batch.select(*x["b_side"])
     if target is not None:
         src = target.select(*x["t_side"]).unionByName(src)
-    src = src.select(F.col("*"), *x["pw_aliased"])
-    src = src.repartition(n_parts, x["pw0"])
-    for stage in x["stages"]:
-        src = src.select(F.col("*"), *stage)
-    return src.where(F.col("_first")).select(*x["out_cols"])
+    return x["fold"].apply(src, x["out_cols"], x["stages"])
 
 
 def _merge_exprs(
@@ -188,41 +192,26 @@ def _merge_exprs(
         ).otherwise(F.lit("I")).alias(op_col),
         *[F.col(c) for c in payload],
         *[F.col(c) for c in computed],
-        F.lit(0).alias("_pref"),
+        F.col(SEQ_COL),
     ]
     b_side = [
         F.col(op_col),
         *[F.col(c) for c in payload],
         *[F.lit(None).cast(types[c]).alias(c) for c in computed],
-        F.lit(1).alias("_pref"),
+        F.lit(_BATCH_SEQ).alias(SEQ_COL),
     ]
+    fold = LwwFold(key, order_cols, n_buckets, n_parts, n_salts)
 
-    _, part_exprs = layout_exprs(key, n_parts, n_salts)
-    pw = [f"_pw{i}" for i in range(len(part_exprs))]
-    # bucket must exist before the layout exprs reference it
-    t_side.append(bucket_expr(key, n_buckets).alias(BUCKET_COL))
-    b_side.append(bucket_expr(key, n_buckets).alias(BUCKET_COL))
-    desc = [*[F.col(c).desc() for c in order_cols], F.col("_pref").desc()]
-    w = Window.partitionBy(*[F.col(a) for a in pw]).orderBy(F.col(key).asc(), *desc)
-    # per-key frame over the same sort order (route, bucket[, salt] and key
-    # ascending, then version and pref descending): no new exchange or
-    # sort, and only one key's rows are buffered
-    wk = (
-        Window.partitionBy(*[F.col(a) for a in pw], F.col(key))
-        .orderBy(*desc)
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-
-    # WAL integrity: a batch row whose successor is a batch row with the
-    # SAME (key, version) means duplicate lsn delivery with potentially
-    # divergent payloads. The key's max folds every row's flag into the
-    # winner's guard.
-    dup = (F.col("_pref") == 1) & F.lead(F.col("_pref")).over(w).eqNullSafe(F.lit(1))
-    for c in (key, *order_cols):
-        dup = dup & F.lead(F.col(c)).over(w).eqNullSafe(F.col(c))
+    # WAL integrity: a row whose successor has the SAME (key, version,
+    # _seq) is one of two batch rows at one version (a stored commit holds
+    # one row per key) — duplicate lsn delivery with potentially divergent
+    # payloads. The key's max folds every row's flag into the winner's
+    # guard.
+    same = [F.lead(F.col(c)).over(fold.w).eqNullSafe(F.col(c)) for c in (key, *order_cols, SEQ_COL)]
+    dup = reduce(lambda a, b: a & b, same)
     stages = [
-        [first_row_of_key(key, w).alias("_first"), dup.alias("_dup")],
-        [F.max(F.col("_dup").cast("int")).over(wk).alias("_dup_any")],
+        [dup.alias("_dup")],
+        [F.max(F.col("_dup").cast("int")).over(fold.per_key).alias("_dup_any")],
     ]
 
     is_del = F.col(op_col) == "D"
@@ -230,24 +219,24 @@ def _merge_exprs(
     if mode == "coalesce":
         # first-with-ignorenulls over the per-key frame is "latest" in
         # version order
-        vp = F.struct(*[F.col(c) for c in order_cols], F.col("_pref"))
-        reset = F.first(F.when(F.col(op_col).isin("I", "D"), vp), ignorenulls=True)
-        stages[0].append(reset.over(wk).alias("_reset"))
-        live_after = ~is_del & (F.col("_reset").isNull() | (vp >= F.col("_reset")))
+        vs = F.struct(*[F.col(c) for c in order_cols], F.col(SEQ_COL))
+        reset = F.first(F.when(F.col(op_col).isin("I", "D"), vs), ignorenulls=True)
+        stages[0].append(reset.over(fold.per_key).alias("_reset"))
+        live_after = ~is_del & (F.col("_reset").isNull() | (vs >= F.col("_reset")))
         text_of = {src: name for name, src in computed.items()}
         for c in payload:
             if c in (key, *order_cols):
                 continue
-            # the supplying row's pref (and stored text, for an extraction
+            # the supplying row's _seq (and stored text, for an extraction
             # source) ride along so extraction runs only on batch-won html
-            parts = [F.col("_pref").alias("p"), F.col(c).alias("v")]
+            parts = [F.col(SEQ_COL).alias("s"), F.col(c).alias("v")]
             if c in text_of:
                 parts.append(F.col(text_of[c]).alias("t"))
-            fold = F.first(
+            fold_c = F.first(
                 F.when(live_after & F.col(c).isNotNull(), F.struct(*parts)),
                 ignorenulls=True,
             )
-            stages[1].append(fold.over(wk).alias(f"_f_{c}"))
+            stages[1].append(fold_c.over(fold.per_key).alias(f"_f_{c}"))
             folded[c] = F.col(f"_f_{c}")
 
     # the integrity raise is folded into the tombstone column so every
@@ -269,11 +258,11 @@ def _merge_exprs(
         elif f.name in computed:
             src_col = computed[f.name]
             if src_col in folded:
-                from_batch = folded[src_col].getField("p") == 1
+                from_batch = folded[src_col].getField("s") == _BATCH_SEQ
                 html = folded[src_col].getField("v")
                 stored = folded[src_col].getField("t")
             else:
-                from_batch = F.col("_pref") == 1
+                from_batch = F.col(SEQ_COL) == _BATCH_SEQ
                 html, stored = F.col(src_col), F.col(f.name)
             # batch-won live rows extract; stored-won rows pass their
             # stored value through. The UDF is evaluated eagerly for
@@ -296,8 +285,7 @@ def _merge_exprs(
     built = {
         "t_side": t_side,
         "b_side": b_side,
-        "pw_aliased": [e.alias(a) for e, a in zip(part_exprs, pw)],
-        "pw0": F.col(pw[0]),
+        "fold": fold,
         "stages": stages,
         "out_cols": out_cols,
     }

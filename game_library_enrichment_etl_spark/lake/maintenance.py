@@ -26,7 +26,7 @@ import time
 from pyspark.sql import functions as F
 
 from .snapshot import read_current_version, read_snapshot, snapshot_path
-from .table import DELETED_COL, IceletTable
+from .table import BUCKET_COL, DELETED_COL, IceletTable, LwwFold
 
 
 def maybe_compact(
@@ -74,7 +74,7 @@ def compact(
 
     Resolution and rewrite share ONE payload exchange and ONE sort: the raw
     delta rows (with their commit sequence) go through the table's LWW
-    resolve (``IceletTable._resolve_lww``, the one ``read`` runs) —
+    fold (``lake.table.LwwFold``, the one ``read`` and the merge run) —
     routed on (_bucket, spill-bounded salt(key)), sorted (key ASC,
     version DESC, seq DESC) once, each key's newest row kept — tombstones
     are expired, and the stream is written pre-partitioned with
@@ -112,7 +112,8 @@ def compact(
         )
 
     raw = table._scan(snap, files, snap.schema, with_seq=True)
-    out = table._resolve_lww(raw, snap, todo, rows_before).where(~dead)
+    fold = LwwFold.of_table(table.spark, snap, todo, rows_before)
+    out = fold.apply(raw, [*snap.schema.names(), BUCKET_COL]).where(~dead)
     new_files = table.write_data_files_prepartitioned(
         out, snap.version + 1, snap.schema.version
     )

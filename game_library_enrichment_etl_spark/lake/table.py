@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import threading
 import uuid
 from functools import lru_cache, reduce
@@ -28,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..session import scoped_conf
-from .schema import Field, TableSchema, evolve
+from .schema import Field, TableSchema
 from .snapshot import (
     DataFileMeta,
     Snapshot,
@@ -38,6 +39,7 @@ from .snapshot import (
 
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
+SEQ_COL = "_seq"
 
 # spark.sql.maxConcurrentOutputFileWriters is a session-global SQL conf with
 # no per-write DataFrameWriter option; the set/write/restore window is
@@ -82,7 +84,7 @@ def _seq_from_file_path():
     hits = F.regexp_extract_all(
         F.input_file_name(), F.lit(r"/data/v(\d+)-[0-9a-f]{8}(?=/)"), F.lit(1)
     )
-    return F.element_at(hits, -1).cast("long")
+    return F.element_at(hits, -1)
 
 
 # sort shards are kept at/under this many rows so partition-local sorts of
@@ -281,13 +283,78 @@ def layout_exprs(
     return [route], [route, *cluster]
 
 
-def first_row_of_key(key_col: str, w):
-    """True on the first row of each key group of window ``w`` (partitioned
-    by a bucket layout, ordered key ASC then version DESC): the LWW winner.
-    ``row_number()==1`` guards the partition's very first row, where lag is
-    NULL and eqNullSafe would mis-read a NULL key as a repeat."""
-    prev_key = F.lag(F.col(key_col)).over(w)
-    return (F.row_number().over(w) == 1) | (~prev_key.eqNullSafe(F.col(key_col)))
+class LwwFold:
+    """The table's one last-writer-wins fold, shared by ``read``,
+    ``compact`` and the CDC merge (cdc/fused.py): each key's newest row by
+    (version_cols, ``_seq``), ``_seq`` being the commit sequence that
+    breaks a version tie (``_scan(with_seq=True)``; the merge's batch rows
+    carry one above every commit's).
+
+    Recompute the bucket (a pure key function: no stored column needed),
+    route (bucket, salt(key)) groups to exchange partitions, sort
+    partition-locally by (key ASC, version DESC, _seq DESC), keep each
+    key's first row. ONE exchange of payload bytes, no join: the explicit
+    repartition's hashpartitioning satisfies the window's clustering, so
+    no second exchange or sort is planned. Over a subset of buckets the
+    route is exact over their DENSE ranks (layout_exprs), so the subset
+    still spreads evenly.
+
+    The fold itself emits only the winner filter; the merge layers its
+    own window columns on ``w`` and ``per_key`` (the same sort order: no
+    new exchange or sort)."""
+
+    def __init__(
+        self,
+        key: str,
+        version_cols: tuple[str, ...],
+        n_buckets: int,
+        n_parts: int,
+        n_salts: int,
+        bucket_ids: list[int] | None = None,
+    ):
+        (self.part,), cluster = layout_exprs(key, n_parts, n_salts, bucket_ids)
+        pw = [F.col(f"_pw{i}") for i in range(len(cluster))]
+        newest_first = [F.col(c).desc() for c in (*version_cols, SEQ_COL)]
+        self.n_parts = n_parts
+        self.bucket = bucket_expr(key, n_buckets).alias(BUCKET_COL)
+        self.route = [e.alias(f"_pw{i}") for i, e in enumerate(cluster)]
+        self.w = Window.partitionBy(*pw).orderBy(F.col(key).asc(), *newest_first)
+        # every row of one key: only that key's rows are buffered
+        self.per_key = (
+            Window.partitionBy(*pw, F.col(key)).orderBy(*newest_first)
+            .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+        )
+        # the first row of each key group: row_number()==1 guards the
+        # partition's very first row, where lag is NULL and eqNullSafe
+        # would mis-read a NULL key as a repeat
+        prev_key = F.lag(F.col(key)).over(self.w)
+        self.first = (
+            (F.row_number().over(self.w) == 1) | ~prev_key.eqNullSafe(F.col(key))
+        ).alias("_first")
+
+    @classmethod
+    def of_table(cls, spark, snap: Snapshot, bucket_ids: list[int], total_rows: int):
+        """The fold of the stored rows of ``bucket_ids`` (``total_rows``
+        rows by the manifest), laid out spill-aware by ``sort_layout``."""
+        nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        layout = sort_layout(nparts, len(bucket_ids), total_rows)
+        key, vcols = snap.properties["key"], tuple(snap.properties["version_cols"])
+        return cls(key, vcols, snap.n_buckets, *layout, bucket_ids)
+
+    def apply(self, src: DataFrame, out: list, stages: tuple = ()) -> DataFrame:
+        """``out`` over each key's first row of the ``_seq``-tagged
+        ``src``, bucket-clustered and ready for
+        ``write_data_files_prepartitioned``. Each of ``stages`` (lists of
+        window columns) is selected over the previous one."""
+        # route columns are computed after the exchange, not shuffled: its
+        # partitioning carries over to their alias, so one sort serves all
+        df = src.select("*", self.bucket).repartition(self.n_parts, self.part)
+        df = df.select("*", *self.route)
+        first, *rest = stages or ([],)
+        df = df.select("*", self.first, *first)
+        for stage in rest:
+            df = df.select("*", *stage)
+        return df.where(F.col("_first")).select(*out)
 
 
 def _table_schema(schema: T.StructType | TableSchema) -> TableSchema:
@@ -408,21 +475,17 @@ class IceletTable:
         buckets: list[int] | None = None,
         key_range: tuple[str, str] | None = None,
         include_deleted: bool = False,
-        as_schema: "TableSchema | None" = None,
     ) -> DataFrame:
         """Read the table at a snapshot (time travel), optionally pruned to a
         bucket set and/or key range using manifest stats — no file listing,
         no footer reads for skipped files. Tombstone rows (``_deleted``)
-        are filtered out unless ``include_deleted``. ``as_schema`` projects
-        to a not-yet-committed evolved schema (fields matched by id; new
-        fields read as null) — used by the merge when the incoming batch
-        evolves the schema.
+        are filtered out unless ``include_deleted``.
 
         Under merge-on-read, a key may appear in several delta files of its
         bucket; the read resolves last-writer-wins per key by
-        (version_cols, file sequence) through ``_resolve_lww`` — ONE payload
+        (version_cols, file sequence) through ``LwwFold`` — ONE payload
         exchange on the bucket route, a partition-local sort and the
-        first-of-key filter, the same resolve compaction runs. Resolution
+        first-of-key filter, the fold compaction and the merge run. Resolution
         is applied PER BUCKET: only buckets whose files span more than one
         commit sequence go through the resolve exchange; single-sequence
         buckets (COW tables, compacted buckets of a MOR table) are unioned
@@ -430,7 +493,7 @@ class IceletTable:
         construction, so at steady state the shuffle is proportional to the
         uncompacted delta, not the table."""
         snap = self.snapshot(version)
-        cur = as_schema if as_schema is not None else snap.schema
+        cur = snap.schema
         files = snap.files
         if buckets is not None:
             bset = set(buckets)
@@ -471,10 +534,10 @@ class IceletTable:
             # the uncompacted delta, not the table.
             f_resolve = [f for f in files if f.bucket in multi]
             f_direct = [f for f in files if f.bucket not in multi]
-            out = self._resolve_lww(
-                self._scan(snap, f_resolve, cur, with_seq=True), snap,
-                sorted(multi), sum(f.rows for f in f_resolve),
-            ).drop(BUCKET_COL)
+            fold = LwwFold.of_table(
+                self.spark, snap, sorted(multi), sum(f.rows for f in f_resolve)
+            )
+            out = fold.apply(self._scan(snap, f_resolve, cur, with_seq=True), cur.names())
             if f_direct:
                 out = out.unionByName(self._scan(snap, f_direct, cur, with_seq=False))
         if not include_deleted:
@@ -486,8 +549,11 @@ class IceletTable:
     ) -> DataFrame:
         """The raw rows of ``files`` (tombstones included, no resolution),
         re-projected by field id to ``cur`` (rename/widen are
-        metadata-only). ``with_seq`` tags each row with its file's commit
-        sequence as ``_seq``, the MOR version-tie breaker.
+        metadata-only). ``with_seq`` tags each row with ``_seq``, the
+        version-tie breaker of ``LwwFold``: its file's commit sequence where
+        its bucket holds files of several commits, and 0 where the bucket
+        holds one commit's files among ``files`` — a key has at most one row
+        there, so no sequence is needed and no path is parsed.
 
         One reader per SCHEMA VERSION, not per (schema, sequence): an
         uncompacted MOR bucket set spans many commit sequences, and a
@@ -508,24 +574,28 @@ class IceletTable:
         Spark's default of 32, a scan of more than 32 files (an uncompacted
         16-bucket MOR table after 3 batches) submitted a one-task-per-file
         listing job before the DataFrame even existed."""
+        bucket_seqs: dict[int, set[int]] = {}
         by_sv: dict[int, list] = {}
         for f in files:
+            bucket_seqs.setdefault(f.bucket, set()).add(f.sequence)
             by_sv.setdefault(f.schema_version, []).append(f)
         parts = []
         for sv, metas in by_sv.items():
             old = snap.schema_at(sv)
-            seqs = sorted({f.sequence for f in metas})
-            one_scan = (
-                not with_seq
-                or len(seqs) == 1
-                or all(_path_sequence(f.path) == f.sequence for f in metas)
-            )
-            groups = (
-                [metas]
-                if one_scan
-                else [[f for f in metas if f.sequence == s] for s in seqs]
-            )
-            for g in groups:
+            if not with_seq:
+                groups = [(metas, None)]
+            else:
+                single = [f for f in metas if len(bucket_seqs[f.bucket]) == 1]
+                multi = [f for f in metas if len(bucket_seqs[f.bucket]) > 1]
+                seqs = sorted({f.sequence for f in multi})
+                groups = [(single, F.lit(0))] if single else []
+                if len(seqs) == 1:
+                    groups.append((multi, F.lit(seqs[0])))
+                elif seqs and all(_path_sequence(f.path) == f.sequence for f in multi):
+                    groups.append((multi, _seq_from_file_path()))
+                else:
+                    groups += [([f for f in multi if f.sequence == s], F.lit(s)) for s in seqs]
+            for g, seq in groups:
                 df = self.spark.read.schema(old.to_spark()).parquet(
                     *[os.path.join(self.root, f.path) for f in g]
                 )
@@ -537,54 +607,10 @@ class IceletTable:
                         cols.append(F.lit(None).cast(cf.type).alias(cf.name))
                     else:
                         cols.append(F.col(of.name).cast(cf.type).alias(cf.name))
-                if with_seq:
-                    gseqs = {f.sequence for f in g}
-                    if len(gseqs) == 1:
-                        cols.append(F.lit(next(iter(gseqs))).cast("long").alias("_seq"))
-                    else:
-                        cols.append(_seq_from_file_path().alias("_seq"))
+                if seq is not None:
+                    cols.append(seq.cast("long").alias(SEQ_COL))
                 parts.append(df.select(*cols))
         return reduce(lambda a, b: a.unionByName(b), parts)
-
-    def _resolve_lww(
-        self,
-        raw: DataFrame,
-        snap: Snapshot,
-        bucket_ids: list[int],
-        total_rows: int,
-    ) -> DataFrame:
-        """The table's one LWW resolve, shared by ``read`` and ``compact``:
-        ``raw`` is the ``_seq``-tagged scan of the files of ``bucket_ids``
-        (``total_rows`` rows by the manifest); returns each key's newest row
-        by (version_cols, _seq) — tombstones included — with ``_bucket``,
-        bucket-clustered and ready for ``write_data_files_prepartitioned``.
-
-        Recompute the bucket (a pure key function — no stored column
-        needed), route (bucket, salt(key)) groups to exchange partitions,
-        sort partition-locally by (key ASC, version DESC), keep each key's
-        first row. ONE exchange of payload bytes, one scan of the delta
-        files, no join. The layout is spill-aware (sort_layout: the
-        exchange is sized from manifest row counts so each task's sorter
-        holds a bounded row count) and the route is exact over the DENSE
-        ranks of ``bucket_ids`` (layout_exprs), so a subset of buckets
-        still spreads evenly; the explicit repartition's hashpartitioning
-        satisfies the window's clustering, so no second exchange is
-        planned."""
-        key = snap.properties["key"]
-        order = (*snap.properties["version_cols"], "_seq")
-        nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        n_parts, n_salts = sort_layout(nparts, len(bucket_ids), total_rows)
-        repart_exprs, part_exprs = layout_exprs(key, n_parts, n_salts, bucket_ids)
-        src = raw.withColumn(BUCKET_COL, bucket_expr(key, snap.n_buckets))
-        src = src.repartition(n_parts, *repart_exprs)
-        w = Window.partitionBy(*part_exprs).orderBy(
-            F.col(key).asc(), *[F.col(c).desc() for c in order]
-        )
-        return (
-            src.withColumn("_first", first_row_of_key(key, w))
-            .where(F.col("_first"))
-            .drop("_first", "_seq")
-        )
 
     def lookup(self, key_value: str, version: int | None = None) -> DataFrame:
         """Point lookup: prune to the key's single bucket via the pure-Python
@@ -665,10 +691,17 @@ class IceletTable:
         instead of two, and the return becomes ``(files, total)``."""
         rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.root, rel_dir)
-        with _WRITER_CONF_LOCK, scoped_conf(
-            self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"
-        ):
-            df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
+        try:
+            with _WRITER_CONF_LOCK, scoped_conf(
+                self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"
+            ):
+                df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
+        except BaseException:
+            # a write the plan rejects (the merge's WAL-integrity raise)
+            # commits nothing: its attempt directory is garbage now, not an
+            # orphan for the retention sweep to find later
+            shutil.rmtree(out, ignore_errors=True)
+            raise
         return self._harvest_manifest_entries(
             out, schema_version, version, sum_col=sum_col
         )
@@ -759,12 +792,6 @@ class IceletTable:
             )
             write_snapshot(self.root, new_snap)
         return new_snap
-
-    # ------------------------------------------------------------- evolution
-    def resolve_schema(
-        self, incoming: T.StructType, rename_hints: dict[str, str] | None = None
-    ):
-        return evolve(self.snapshot().schema, incoming, rename_hints)
 
 
 def _footer_stats(

@@ -146,23 +146,3 @@ def blocked_similarity_join(
             "similarity",
         )
     )
-
-
-def match_quality_report(matched: DataFrame, threshold_low: float = 75.0) -> DataFrame:
-    """Single-row match-quality metrics (reference A11:
-    /root/reference/src/how_long_to_beat.py:543-557): totals, matched,
-    low-similarity, match rate."""
-    return matched.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.col("match_key").isNotNull().cast("bigint")).alias("matched"),
-        F.sum(
-            (F.col("match_key").isNotNull() & (F.col("similarity") < threshold_low)).cast(
-                "bigint"
-            )
-        ).alias("low_similarity"),
-        F.round(
-            F.sum(F.col("match_key").isNotNull().cast("bigint")).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            6,
-        ).alias("match_rate"),
-    )

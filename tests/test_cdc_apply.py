@@ -330,6 +330,17 @@ def test_cow_duplicate_lsn_raises_before_writing(spark, tmp_path):
     """A COW batch with a duplicated (key, warc_ts, lsn) is rejected by the
     exact pass, which runs before the merge write: no new data/v* directory
     is left under the table root."""
+    _duplicate_lsn_leaves_no_data_dir(spark, tmp_path, "cow")
+
+
+def test_mor_duplicate_lsn_removes_its_data_dir(spark, tmp_path):
+    """A single-segment MOR batch with a duplicated (key, warc_ts, lsn) is
+    rejected by the merge's per-key guard while it writes: the write
+    removes its own data/v* directory before the raise propagates."""
+    _duplicate_lsn_leaves_no_data_dir(spark, tmp_path, "mor")
+
+
+def _duplicate_lsn_leaves_no_data_dir(spark, tmp_path, strategy):
     import glob
     import os
 
@@ -341,7 +352,7 @@ def test_cow_duplicate_lsn_raises_before_writing(spark, tmp_path):
     p1 = write_change_segments(
         str(tmp_path / "s1"), pd.concat([second, dup], ignore_index=True), 1, first_batch_id=1
     )
-    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4, merge_strategy="cow")
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4, merge_strategy=strategy)
     apply_batch(t, spark.read.parquet(p0[0]))
     v0 = t.snapshot().version
     dirs = sorted(glob.glob(os.path.join(t.root, "data", "v*")))
@@ -622,3 +633,46 @@ def test_phase_timings_nonnegative_within_wall(spark, tmp_path, stream, strategy
         assert {"t_stats", "t_merge_write", "t_winner_stats"} <= set(phases)
         assert all(v >= 0 and math.copysign(1.0, v) == 1.0 for v in phases.values()), phases
         assert sum(phases.values()) <= m["wall_ms"] / 1000, (phases, m["wall_ms"])
+
+
+def test_cow_merge_parses_no_file_path(spark, tmp_path, monkeypatch):
+    """A COW merge's stored rows sit in buckets that each hold one commit's
+    files, so they take a constant _seq below the batch's: the write plan
+    parses no file path per row, even when the touched buckets were last
+    written by different commits."""
+    from game_library_enrichment_etl_spark.lake.table import IceletTable
+    from game_library_enrichment_etl_spark.lake.xxhash import bucket_of
+
+    ev = gen_change_events(900, 120, seed=23).drop(columns=["title"])
+    mid = ev.iloc[300:600]
+    segs = [
+        ev.iloc[:300],
+        mid[[bucket_of(u, 4) == 0 for u in mid["url"]]],
+        ev.iloc[600:],
+    ]
+    paths = [
+        write_change_segments(str(tmp_path / f"s{i}"), seg, 1, first_batch_id=i)[0]
+        for i, seg in enumerate(segs)
+    ]
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4)
+    for p in paths[:2]:
+        apply_batch(t, spark.read.parquet(p))
+    assert len({f.sequence for f in t.snapshot().files}) == 2, "buckets of two commits"
+
+    written = []
+    orig = IceletTable.write_data_files_prepartitioned
+
+    def spy(self, df, *a, **k):
+        written.append(df)
+        return orig(self, df, *a, **k)
+
+    monkeypatch.setattr(IceletTable, "write_data_files_prepartitioned", spy)
+    apply_batch(t, spark.read.parquet(paths[2]))
+    monkeypatch.undo()
+
+    plan = written[0]._jdf.queryExecution().executedPlan().toString()
+    assert "regexp_extract_all" not in plan, plan
+    want = model_final_state(pd.concat(segs, ignore_index=True))
+    got = _read_table_pdf(t)
+    assert list(got["url"]) == list(want["url"])
+    assert list(got["lsn"]) == list(want["lsn"])

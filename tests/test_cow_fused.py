@@ -11,7 +11,8 @@
    a stored target and with none (the MOR write).
 3. WAL integrity: two batch rows at one (key, version) raise; a stored
    row tied with a batch row is a replay, not a duplicate.
-4. The expression memo keeps one application id's entries.
+4. The expression memo keeps one application id's entries, and one entry
+   across the batches of one shape.
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ def _ts(s: int):
 
 def _frames(spark):
     cur = TableSchema.from_spark(PAGES_SCHEMA, 0)
-    # target: (url, warc_ts, lsn, html, text, lang, _deleted)
+    # target: (url, warc_ts, lsn, html, text, lang, _deleted, _seq)
     target = spark.createDataFrame(
         [
             ("u/target-only", _ts(10), 10, b"<p>t1</p>", "t1", "en", False),
@@ -44,7 +45,7 @@ def _frames(spark):
             ("u/tie", _ts(20), 20, b"<p>t-tie</p>", "t-tie", "en", False),
         ],
         PAGES_SCHEMA,
-    )
+    ).withColumn("_seq", F.lit(1).cast("long"))  # the stored rows' commit
     batch_schema = "op string, url string, warc_ts timestamp, lsn long, html binary, lang string"
     batch = spark.createDataFrame(
         [
@@ -156,3 +157,24 @@ def test_expr_memo_keeps_one_application(spark):
     _merge_exprs("b", *args)
     assert not any(k[0] == "a" for k in _EXPR_CACHE)
     assert any(k[0] == "b" for k in _EXPR_CACHE)
+
+
+def test_expr_memo_one_entry_across_batches(spark, tmp_path):
+    """Consecutive applies of one shape to one table reuse one memo entry:
+    no per-batch value (such as the batch's commit sequence) is part of the
+    memoized expressions, so a steady stream never misses the memo and the
+    memo does not grow with the stream."""
+    from game_library_enrichment_etl_spark.cdc.apply import apply_batch
+    from game_library_enrichment_etl_spark.cdc.tables import create_pages_table
+    from game_library_enrichment_etl_spark.datagen import (
+        gen_change_events,
+        write_change_segments,
+    )
+
+    ev = gen_change_events(400, 60, seed=5).drop(columns=["title"])
+    paths = write_change_segments(str(tmp_path / "wal"), ev, 2)
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4)
+    _EXPR_CACHE.clear()
+    for p in paths:
+        assert not apply_batch(t, spark.read.parquet(p)).skipped
+    assert len(_EXPR_CACHE) == 1, list(_EXPR_CACHE)

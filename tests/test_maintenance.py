@@ -130,7 +130,7 @@ def test_compaction_plan_one_exchange_no_join(spark, tmp_path, monkeypatch):
     assert "Join" not in plan, plan
 
 
-def test_selective_resolve_shuffles_only_multi_sequence_buckets(spark, tmp_path):
+def test_selective_resolve_shuffles_only_multi_sequence_buckets(spark, tmp_path, monkeypatch):
     """Round-5: read() resolves PER BUCKET. After a partial compaction the
     compacted (single-sequence) buckets' rows must bypass the resolve
     exchange entirely — only still-multi-sequence buckets feed it — and
@@ -154,16 +154,18 @@ def test_selective_resolve_shuffles_only_multi_sequence_buckets(spark, tmp_path)
         "fixture must yield a mix of compacted and delta buckets"
     )
 
+    from game_library_enrichment_etl_spark.lake.table import LwwFold
+
     seen: dict[str, int] = {}
-    orig = t._resolve_lww
+    orig = LwwFold.apply
 
-    def spy(df, *a, **k):
+    def spy(self, df, *a, **k):
         seen["resolve_input_rows"] = df.count()
-        return orig(df, *a, **k)
+        return orig(self, df, *a, **k)
 
-    t._resolve_lww = spy
+    monkeypatch.setattr(LwwFold, "apply", spy)
     got = t.read().toPandas().sort_values("url").reset_index(drop=True).sort_index(axis=1)
-    del t._resolve_lww
+    monkeypatch.undo()
 
     # only the uncompacted buckets' stored rows entered the exchange
     assert seen["resolve_input_rows"] == sum(rows_per_bucket[b] for b in multi)

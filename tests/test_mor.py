@@ -198,6 +198,8 @@ def test_read_resolve_matches_model(spark, tmp_path):
     plan = t.read()._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange") == 1, plan
     assert "Join" not in plan, plan
+    # the fold with no batch side: no extraction, no Python at all
+    assert "ArrowEvalPython" not in plan, plan
 
 
 def test_single_reader_resolve_seq_from_path(spark, tmp_path):
@@ -301,3 +303,34 @@ def test_scan_planning_submits_no_job(spark, tmp_path):
         assert list(got["url"]) == list(want["url"])
         assert list(got["lsn"]) == list(want["lsn"])
         assert list(got["text"]) == list(want["text"])
+
+
+def test_coalesce_onto_mor_folds_in_one_exchange(spark, tmp_path, monkeypatch):
+    """A coalesce merge onto a merge-on-read table folds the raw rows of
+    its touched buckets, each tagged with its commit sequence, together
+    with the batch: the write plan has the merge's one Exchange, not a
+    resolving read's exchange under it. The final state equals a
+    copy-on-write table fed the same segments in the same modes."""
+    ev = gen_change_events(1500, 200, seed=61, delete_frac=0.1)
+    paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 3)
+    modes = ("overwrite", "overwrite", "coalesce")
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=4)
+    mor = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=4, merge_strategy="mor")
+    for p, mode in zip(paths, modes):
+        apply_batch(cow, spark.read.parquet(p), mode=mode)
+
+    written = []
+    orig = IceletTable.write_data_files_prepartitioned
+
+    def spy(self, df, *a, **k):
+        written.append(df)
+        return orig(self, df, *a, **k)
+
+    monkeypatch.setattr(IceletTable, "write_data_files_prepartitioned", spy)
+    for p, mode in zip(paths, modes):
+        apply_batch(mor, spark.read.parquet(p), mode=mode)
+    monkeypatch.undo()
+
+    plan = written[-1]._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    pd.testing.assert_frame_equal(_state(mor), _state(cow))
