@@ -17,7 +17,7 @@ cannot exceed n_buckets/hi; with it, the whole rewrite scales.
 Usage: python BENCH/compact_scaling.py [n_events] [lo] [hi] [n_buckets]
 Prints one JSON line per run + a summary line; samples host CPU steal
 around every run (shared-host bursts would otherwise masquerade as
-scaling results — see BENCH/hunt.py).
+scaling results — see the r5 hunt logs, BENCH/hunt_r5*_attempts.jsonl).
 """
 
 from __future__ import annotations

@@ -248,8 +248,9 @@ def _busy_jiffies() -> int:
 class _TreeCpuSampler(threading.Thread):
     """Live sampler attributing host CPU to the worker tree vs everything else.
 
-    The r5 watcher's first protocol judged tree membership from a single
-    snapshot taken AFTER subprocess.run returned — by which point the worker
+    The r5 scaling watcher's first protocol (logs: BENCH/watcher_r5*.log)
+    judged tree membership from a single snapshot taken AFTER
+    subprocess.run returned — by which point the worker
     python had exited and its JVM had reparented to init, so the JVM's entire
     run CPU was misattributed as same-VM foreign load (measured: "other" ==
     the JVM, 6.98 cores, while claude+process_api idled at 0.03 cores —
@@ -401,7 +402,7 @@ def run_level_once(cpus: int, wal: str, n_seg: int, strategy: str) -> dict:
     Noise telemetry per run: host CPU-steal (hypervisor neighbors) and
     other_cpu_pct = (host busy CPU-seconds minus this worker tree's own
     CPU-seconds) / wall, i.e. same-VM contention invisible to steal — the
-    r5 watcher's one fired attempt was 6x degraded at only 4.9% steal,
+    r5 scaling watcher's one fired attempt was 6x degraded at only 4.9% steal,
     which only this second probe can adjudicate.
 
     CPU pinning: unless SCALING_PIN=0, the worker is pinned with taskset to

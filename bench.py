@@ -51,8 +51,8 @@ def _probe_alu_mops(sample_s: float = 4.0) -> float:
     pinned module-global ``_PROBE_SRC`` (healthy 5.3-5.9, degraded
     4.3-5.1); measured side by side in-process: 7.1-7.5 vs 5.2-5.4 at the
     same instant. Hence exec() into a fresh globals dict, and the calling
-    thread is pinned to the probe core (31, matching the watcher) for the
-    sample, restoring affinity after."""
+    thread is pinned to the probe core (31) for the sample, restoring
+    affinity after."""
     src = (
         "t0 = time.perf_counter()\n"
         "acc = 0\n"

@@ -63,7 +63,11 @@ harvest), and integrity from the merge's per-key duplicate check.
 
 Every action runs on the caller's thread, so it carries the caller's job
 group, and joins strictly before the commit, so the WAL-integrity raise
-does too. A ``DataFrame.observe`` design was rejected:
+does too. Each phase that can submit a job — ``stats``, ``exact`` and
+``merge_write`` (``PHASES``) — runs inside ``session.job_tag``, so its jobs
+are also tagged ``icelet:<table>:v<seq>:<phase>`` with the sequence the
+apply commits; the same phases are timed into ``metrics["phases_s"]``. A
+``DataFrame.observe`` design was rejected:
 ``Observation.get`` deadlocks when the apply runs inside a Structured
 Streaming ``foreachBatch`` callback (the py4j callback thread can't
 re-enter the JVM while the streaming engine waits on it).
@@ -88,11 +92,14 @@ from ..functions.extract import EXTRACTOR_VERSION
 from ..lake.schema import evolve
 from ..lake.table import DELETED_COL, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
-from ..session import scoped_conf
+from ..session import job_tag, scoped_conf
 from .fused import fused_merge
 
 META_COLS = ("op", "batch_id")
 OP_COL = "op"
+# the apply's job-tag phases and the ``metrics["phases_s"]`` key each one's
+# wall is stored under
+PHASES = {"stats": "t_stats", "exact": "t_winner_stats", "merge_write": "t_merge_write"}
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
 
@@ -126,13 +133,18 @@ def apply_batch(
     delivery) raises before anything is committed."""
     t0 = t_last = time.monotonic()
     phase_t: dict[str, float] = {}  # unrounded; rounded once into metrics
-
-    def _mark(name: str) -> None:
-        nonlocal t_last
-        now = time.monotonic()
-        phase_t[name], t_last = now - t_last, now
-
     snap = table.snapshot()
+
+    @contextmanager
+    def _phase(name: str):
+        """Tag the block's jobs with this apply's commit and ``name``; on
+        a normal exit, time everything since the previous phase ended."""
+        nonlocal t_last
+        with job_tag(table.spark, table.root, name, snap.version + 1):
+            yield
+        now = time.monotonic()
+        phase_t[PHASES[name]], t_last = now - t_last, now
+
     key = snap.properties["key"]
     order_cols = tuple(snap.properties["version_cols"])
     applied = set(snap.applied_batch_ids)
@@ -195,10 +207,10 @@ def apply_batch(
             )
         sel.append(F.col("batch_id"))
 
-        st = _BatchStats([foot], []) if foot else _BatchStats.fold(
-            _segment_stats(batch, key, snap.n_buckets, order_cols, late_pred), applied
-        )
-        _mark("t_stats")
+        with _phase("stats"):
+            st = _BatchStats([foot], []) if foot else _BatchStats.fold(
+                _segment_stats(batch, key, snap.n_buckets, order_cols, late_pred), applied
+            )
         if foot is None:
             if not st.ids:
                 return ApplyResult(True, snap.version, {"reason": "all batch_ids already applied"})
@@ -223,14 +235,14 @@ def apply_batch(
         # MOR write (checked against its winner count) and a bucket bound
         # that admits a hot key (it routes the key)
         exact: tuple[int, int, int, bool] | None = None
-        if not use_mor or len(st.ids) > 1 or st.max_bucket_live > hot_key_threshold:
-            exact = _absorb_exact(
-                _exact_winner_stats(norm_bid, key, order_cols), st.segments,
-                order_cols, hot_key_threshold,
-            )
+        with _phase("exact"):
+            if not use_mor or len(st.ids) > 1 or st.max_bucket_live > hot_key_threshold:
+                exact = _absorb_exact(
+                    _exact_winner_stats(norm_bid, key, order_cols), st.segments,
+                    order_cols, hot_key_threshold,
+                )
         # a salted LWW pre-reduce would drop coalesce-mode partial cells
         hot = exact is not None and exact[3] and mode == "overwrite"
-        _mark("t_winner_stats")
 
         merge_src = lww_dedup(normalized, key, order_cols) if hot else normalized
         # a MOR write is the same fold over no stored rows; every other
@@ -250,7 +262,7 @@ def apply_batch(
         # (the 1M-event A/B read parity-with-downside for AQE-off at scale).
         # Plan building is lazy, so the conf takes effect at the write's
         # execution.
-        with (
+        with _phase("merge_write"), (
             scoped_conf(table.spark, "spark.sql.adaptive.enabled", "false")
             if use_mor
             else nullcontext()
@@ -258,11 +270,10 @@ def apply_batch(
             # the MOR tombstone count rides along in the footer harvest's
             # threaded file pass (one open per file)
             written = table.write_data_files_prepartitioned(
-                out, snap.version + 1, cur.version,
+                out, snap.version + 1, cur.version, key,
                 sum_col=DELETED_COL if use_mor else None,
             )
         files, n_tombstones = written if use_mor else (written, None)
-        _mark("t_merge_write")
         if foot is not None:
             # one written row per surviving key, so the written files'
             # buckets are the surviving events' buckets

@@ -25,6 +25,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from ..session import job_tag
 from .snapshot import read_current_version, read_snapshot, snapshot_path
 from .table import BUCKET_COL, DELETED_COL, IceletTable, LwwFold
 
@@ -84,6 +85,9 @@ def compact(
     4.5M-row 4-bucket compaction at local[2] external-sorted into 24x
     super-linear wall time.
 
+    The write's jobs are tagged ``icelet:<table>:v<seq>:compact``
+    (``session.job_tag``) with the sequence the compaction commits.
+
     Returns metrics: buckets compacted, rows before/after, tombstones
     expired (estimated from manifest row counts).
     """
@@ -114,9 +118,10 @@ def compact(
     raw = table._scan(snap, files, snap.schema, with_seq=True)
     fold = LwwFold.of_table(table.spark, snap, todo, rows_before)
     out = fold.apply(raw, [*snap.schema.names(), BUCKET_COL]).where(~dead)
-    new_files = table.write_data_files_prepartitioned(
-        out, snap.version + 1, snap.schema.version
-    )
+    with job_tag(table.spark, table.root, "compact", snap.version + 1):
+        new_files = table.write_data_files_prepartitioned(
+            out, snap.version + 1, snap.schema.version, snap.properties["key"]
+        )
     # CAS: the rewrite resolved data as of snap.version — a concurrent
     # apply's commit in between would make this compaction a lost-update
     # (its output lacks that apply's rows for the compacted buckets), so

@@ -19,7 +19,6 @@ from __future__ import annotations
 import os
 import re
 import shutil
-import threading
 import uuid
 from functools import lru_cache, reduce
 
@@ -40,13 +39,6 @@ from .snapshot import (
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
 SEQ_COL = "_seq"
-
-# spark.sql.maxConcurrentOutputFileWriters is a session-global SQL conf with
-# no per-write DataFrameWriter option; the set/write/restore window is
-# guarded so a concurrent apply/compaction sharing the SparkSession can
-# neither observe nor clobber the temporary value.
-_WRITER_CONF_LOCK = threading.Lock()
-
 
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic bucket id for a key — the explicit repartition target
@@ -89,8 +81,7 @@ def _seq_from_file_path():
 
 # sort shards are kept at/under this many rows so partition-local sorts of
 # multi-KB payload rows stay in memory instead of external-sorting; tuned
-# for web-page rows (~1-4 KB) against multi-GB task memory — override per
-# call where payloads differ
+# for web-page rows (~1-4 KB) against multi-GB task memory
 ROWS_PER_SORT_SHARD = 250_000
 # layout granularity (see sort_layout): never shard finer than this many
 # rows, target ~TASK_WAVES tasks per slot, and keep at least
@@ -111,7 +102,6 @@ def sort_layout(
     nparts: int,
     n_buckets: int,
     total_rows: int | None = None,
-    rows_per_shard: int = ROWS_PER_SORT_SHARD,
 ) -> tuple[int, int]:
     """(exchange partitions, in-bucket salts) for a bucket-clustered SORT
     stage (the fused write, the LWW resolve of read and compaction).
@@ -123,7 +113,7 @@ def sort_layout(
       payload rows into one task's sorter and external-sorts (measured:
       8M-event 4-bucket compaction at local[2] went 24x super-linear).
       The exchange is therefore sized so a partition holds
-      ~rows_per_shard rows. Extra partitions beyond the core count just
+      ~ROWS_PER_SORT_SHARD rows. Extra partitions beyond the core count just
       queue — cheap; partitions beyond memory spill — ruinous.
     - TASK WAVES absorb stragglers: a stage with exactly one task per
       slot (the r5 8M bench planned 8 merge tasks on 8 slots) makes the
@@ -147,7 +137,7 @@ def sort_layout(
     explicitly-numbered repartition, so the layout holds as planned."""
     n_parts = nparts
     if total_rows:
-        by_spill = -(-total_rows // rows_per_shard)  # ceil: sorter bound
+        by_spill = -(-total_rows // ROWS_PER_SORT_SHARD)  # ceil: sorter bound
         fine_cap = max(1, -(-total_rows // MIN_ROWS_PER_SHARD))
         n_parts = max(by_spill, min(TASK_WAVES * nparts, fine_cap))
         # Latency-regime refinement (r6, measured): a bucketed write emits
@@ -384,7 +374,6 @@ class IceletTable:
         version_cols: tuple[str, str] = ("warc_ts", "lsn"),
         n_buckets: int = 16,
         merge_strategy: str = "cow",
-        properties: dict | None = None,
     ) -> "IceletTable":
         """``merge_strategy``:
 
@@ -403,8 +392,7 @@ class IceletTable:
         if read_snapshot(root) is not None:
             raise FileExistsError(f"table already exists at {root}")
         return IceletTable.create_or_replace(
-            spark, root, schema, key_col, version_cols, n_buckets,
-            merge_strategy, properties,
+            spark, root, schema, key_col, version_cols, n_buckets, merge_strategy
         )
 
     @staticmethod
@@ -420,7 +408,6 @@ class IceletTable:
         version_cols: tuple[str, str] = ("warc_ts", "lsn"),
         n_buckets: int = 16,
         merge_strategy: str = "cow",
-        properties: dict | None = None,
     ) -> "IceletTable":
         """CREATE OR REPLACE: the destructive full-replay reset verb
         (reference: the ``full_run`` rebuild flag,
@@ -435,12 +422,6 @@ class IceletTable:
         if merge_strategy not in ("cow", "mor"):
             raise ValueError(f"merge_strategy must be cow|mor, got {merge_strategy!r}")
         prev = read_snapshot(root)
-        props = {
-            "key": key_col,
-            "version_cols": list(version_cols),
-            "merge_strategy": merge_strategy,
-        }
-        props.update(properties or {})
         snap = Snapshot(
             version=0 if prev is None else prev.version + 1,
             parent=None if prev is None else prev.version,
@@ -448,7 +429,11 @@ class IceletTable:
             schemas=[_table_schema(schema)],
             files=[],
             applied_batch_ids=[],
-            properties=props,
+            properties={
+                "key": key_col,
+                "version_cols": list(version_cols),
+                "merge_strategy": merge_strategy,
+            },
         )
         os.makedirs(os.path.join(root, "data"), exist_ok=True)
         write_snapshot(root, snap)
@@ -459,10 +444,6 @@ class IceletTable:
         if snap is None:
             raise FileNotFoundError(f"no icelet table at {self.root}")
         return snap
-
-    @property
-    def key_col(self) -> str:
-        return self.snapshot().properties["key"]
 
     @property
     def merge_strategy(self) -> str:
@@ -492,7 +473,16 @@ class IceletTable:
         straight from the scan — their files are key-disjoint by
         construction, so at steady state the shuffle is proportional to the
         uncompacted delta, not the table."""
-        snap = self.snapshot(version)
+        return self._read(self.snapshot(version), buckets, key_range, include_deleted)
+
+    def _read(
+        self,
+        snap: Snapshot,
+        buckets: list[int] | None,
+        key_range: tuple[str, str] | None,
+        include_deleted: bool,
+    ) -> DataFrame:
+        """``read``'s body over a snapshot the caller already holds."""
         cur = snap.schema
         files = snap.files
         if buckets is not None:
@@ -621,8 +611,8 @@ class IceletTable:
 
         snap = self.snapshot(version)
         b = bucket_of(key_value, snap.n_buckets)
-        df = self.read(version=version, buckets=[b], key_range=(key_value, key_value))
-        return df.where(F.col(self.key_col) == key_value)
+        df = self._read(snap, [b], (key_value, key_value), include_deleted=False)
+        return df.where(F.col(snap.properties["key"]) == key_value)
 
     # ----------------------------------------------------------------- write
     def write_data_files(
@@ -630,8 +620,11 @@ class IceletTable:
         df: DataFrame,
         version: int,
         schema_version: int,
+        key: str,
+        n_buckets: int,
     ) -> list[DataFileMeta]:
-        """Write ``df`` (current-schema columns + ``_bucket``) as immutable
+        """Write ``df`` (current-schema columns + ``_bucket``, keyed by
+        ``key`` over ``n_buckets`` buckets) as immutable
         per-bucket parquet files under a per-attempt unique directory
         data/v{version}-{uuid}; return their manifest entries with key bounds
         harvested from parquet footers (no data scan).
@@ -642,7 +635,6 @@ class IceletTable:
         colliding with the orphan (manifest entries record exact paths, so
         readers never glob).
         """
-        key = self.key_col
         rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.root, rel_dir)
         # hash-repartition on (_bucket, in-bucket salt(key)): each
@@ -657,7 +649,6 @@ class IceletTable:
         # one file per bucket per task and parquet row-group stats enable
         # key-range skipping on point lookups.
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
-        n_buckets = self.snapshot().n_buckets
         n_parts, n_salts = sort_layout(nparts, n_buckets)
         repart_cols, _ = layout_exprs(key, n_parts, n_salts)
         staged = df.repartition(n_parts, *repart_cols).sortWithinPartitions(BUCKET_COL, key)
@@ -666,13 +657,14 @@ class IceletTable:
             .partitionBy(BUCKET_COL)
             .parquet(out)
         )
-        return self._harvest_manifest_entries(out, schema_version, version)
+        return self._harvest_manifest_entries(out, schema_version, version, key)
 
     def write_data_files_prepartitioned(
         self,
         df: DataFrame,
         version: int,
         schema_version: int,
+        key: str,
         sum_col: str | None = None,
     ) -> "list[DataFileMeta] | tuple[list[DataFileMeta], int]":
         """Write ``df`` that is ALREADY partitioned so that no bucket spans
@@ -683,7 +675,8 @@ class IceletTable:
         bucket-clustered) rows by partition column — at most
         salts-per-bucket files per bucket per commit, and write parallelism
         equals the upstream partition count instead of being capped at
-        n_buckets.
+        n_buckets. ``key`` is the table's key column, whose per-file bounds
+        the manifest entries record.
 
         ``sum_col``: when given, each file's harvest ALSO sums that boolean
         column (the fused MOR path's tombstone count) in the same threaded
@@ -692,9 +685,7 @@ class IceletTable:
         rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.root, rel_dir)
         try:
-            with _WRITER_CONF_LOCK, scoped_conf(
-                self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"
-            ):
+            with scoped_conf(self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"):
                 df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
         except BaseException:
             # a write the plan rejects (the merge's WAL-integrity raise)
@@ -703,13 +694,13 @@ class IceletTable:
             shutil.rmtree(out, ignore_errors=True)
             raise
         return self._harvest_manifest_entries(
-            out, schema_version, version, sum_col=sum_col
+            out, schema_version, version, key, sum_col=sum_col
         )
 
     def _harvest_manifest_entries(
-        self, out: str, schema_version: int, version: int, sum_col: str | None = None
+        self, out: str, schema_version: int, version: int, key: str,
+        sum_col: str | None = None,
     ) -> "list[DataFileMeta] | tuple[list[DataFileMeta], int]":
-        key = self.key_col
         entries = [
             (int(e.split("=")[1]), os.path.join(out, e))
             for e in sorted(os.listdir(out))

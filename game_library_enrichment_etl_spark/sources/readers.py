@@ -35,7 +35,6 @@ def csv_scan(
     path: str,
     schema: T.StructType | None = None,
     rename: dict[str, str] | None = None,
-    skip_rows_header: bool = True,
 ) -> DataFrame:
     """CSV scan with optional explicit schema (kills inference instability)
     and bulk header remap."""

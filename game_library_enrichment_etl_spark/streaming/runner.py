@@ -29,12 +29,12 @@ from __future__ import annotations
 import glob
 import os
 import re
-from collections.abc import Callable
 
 from pyspark.sql import types as T
 
 from ..cdc.apply import ApplyResult, apply_batch
 from ..lake.table import IceletTable
+from ..session import job_tag
 from ..sources.readers import read_change_batch
 
 
@@ -46,7 +46,6 @@ def run_stream(
     mode: str = "overwrite",
     lateness_s: int | None = None,
     max_files_per_trigger: int = 1,
-    on_batch: Callable[[int, ApplyResult], None] | None = None,
     fail_after_batches: int | None = None,
     auto_compact: int | None = 8,
     expire_keep_last: int | None = None,
@@ -62,13 +61,17 @@ def run_stream(
     ``auto_compact``: under merge-on-read, compact any bucket whose
     delta-file count exceeds this after each applied batch, bounding read
     amplification over a sustained stream (None disables).
+
+    Reading the first segment's schema runs a Spark job, tagged
+    ``icelet:<table>:schema``; each apply tags its own jobs.
     """
     spark = table.spark
     if schema is None:
         first = sorted(glob.glob(os.path.join(wal_dir, "*.parquet")))
         if not first:
             raise FileNotFoundError(f"no segment files in {wal_dir}")
-        schema = spark.read.parquet(first[0]).schema
+        with job_tag(spark, table.root, "schema"):
+            schema = spark.read.parquet(first[0]).schema
 
     results: list[ApplyResult] = []
 
@@ -76,8 +79,6 @@ def run_stream(
         res = apply_batch(table, df, mode=mode, lateness_s=lateness_s)
         results.append(res)
         _maybe_auto_compact(table, res, auto_compact, expire_keep_last, orphan_grace_s)
-        if on_batch is not None:
-            on_batch(epoch_id, res)
         if fail_after_batches is not None and len(results) >= fail_after_batches:
             raise RuntimeError("injected failure after table commit")
 
@@ -159,7 +160,6 @@ def tail_segments(
     rename_hints: dict[str, str] | None = None,
     mode: str = "overwrite",
     lateness_s: int | None = None,
-    max_segments: int | None = None,
     auto_compact: int | None = 8,
     expire_keep_last: int | None = None,
     orphan_grace_s: float = 3600.0,
@@ -169,23 +169,20 @@ def tail_segments(
     Each segment is read with its own (possibly evolved) schema; already
     applied batch_ids no-op inside apply_batch, so this is safe to call
     repeatedly (cron-style incremental runs) and after a crash.
-    ``auto_compact``: see run_stream.
+    ``auto_compact``: see run_stream. Each segment's schema read runs a
+    Spark job, tagged ``icelet:<table>:schema``.
     """
     spark = table.spark
     segs = sorted(glob.glob(os.path.join(wal_dir, pattern)), key=_natural_key)
     results = []
-    n = 0
     for p in segs:
         # Spark's default split sizing spreads the segment over the cluster;
         # the read leaves the session conf untouched (sources/readers.py)
-        df = read_change_batch(spark, p)
+        with job_tag(spark, table.root, "schema"):
+            df = read_change_batch(spark, p)
         res = apply_batch(
             table, df, mode=mode, rename_hints=rename_hints, lateness_s=lateness_s
         )
         results.append(res)
         _maybe_auto_compact(table, res, auto_compact, expire_keep_last, orphan_grace_s)
-        if not res.skipped:
-            n += 1
-            if max_segments is not None and n >= max_segments:
-                break
     return results

@@ -597,6 +597,74 @@ def test_single_segment_mor_apply_is_one_labelled_job(spark, tmp_path, stream, j
     assert out["res"].metrics["stats_path"] == "footer"
 
 
+def _icelet_tags(sc, job_id: int) -> list[str]:
+    tags = sc._jsc.sc().statusStore().job(job_id).jobTags().mkString("\n")
+    return [t for t in tags.split("\n") if t.startswith("icelet:")]
+
+
+def test_engine_jobs_tagged_with_table_commit_and_phase(spark, tmp_path, stream, job_group):
+    """Every job an apply, a compaction or a WAL tail submits under the
+    caller's job group carries exactly one ``icelet:`` tag naming the
+    table, the sequence the operation commits and the phase; no tag
+    outlives its block, not even when an apply raises."""
+    import os
+
+    from game_library_enrichment_etl_spark.lake.maintenance import compact
+    from game_library_enrichment_etl_spark.sources.readers import read_change_batch
+    from game_library_enrichment_etl_spark.streaming.runner import tail_segments
+
+    sc, group = job_group
+    _ev, paths = stream
+
+    def tagged(t, action) -> set[str]:
+        """The phases of the jobs ``action`` submits, each job checked to
+        carry one tag for table ``t`` and the commit ``action`` makes."""
+        seq = t.snapshot().version + 1
+        grouped, ungrouped = _jobs_added(sc, group, action)
+        assert grouped and not ungrouped, (grouped, ungrouped)
+        assert t.snapshot().version == seq
+        phases = set()
+        for job_id in grouped:
+            (tag,) = _icelet_tags(sc, job_id)
+            if tag == f"icelet:{t.root}:schema":
+                phases.add("schema")
+                continue
+            prefix = f"icelet:{t.root}:v{seq}:"
+            assert tag.startswith(prefix), (tag, prefix)
+            phases.add(tag[len(prefix):])
+        assert not sc.getJobTags()
+        return phases
+
+    mor = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=8, merge_strategy="mor")
+    batch = read_change_batch(spark, paths[0])
+    assert tagged(mor, lambda: apply_batch(mor, batch)) == {"merge_write"}
+    two = spark.read.parquet(paths[1], paths[2])
+    assert tagged(mor, lambda: apply_batch(mor, two)) == {"stats", "exact", "merge_write"}
+    assert tagged(mor, lambda: compact(mor)) == {"compact"}
+
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=8, merge_strategy="cow")
+    one = spark.read.parquet(paths[0])
+    assert tagged(cow, lambda: apply_batch(cow, one)) == {"stats", "exact", "merge_write"}
+
+    tail = create_pages_table(spark, str(tmp_path / "tail"), n_buckets=8, merge_strategy="mor")
+    wal, name = os.path.split(paths[3])
+    assert tagged(tail, lambda: tail_segments(tail, wal, pattern=name)) == {
+        "schema", "merge_write"
+    }
+
+    ev = gen_change_events(200, 40, seed=31)
+    dup = ev[ev["url"] == ev.iloc[0]["url"]].sort_values(["warc_ts", "lsn"]).iloc[[-1]].copy()
+    dup["html"] = [b"<p>divergent payload</p>"]
+    bad = write_change_segments(
+        str(tmp_path / "bad"), pd.concat([ev, dup], ignore_index=True).drop(columns=["title"]), 1,
+        first_batch_id=100,
+    )
+    for t in (mor, cow):
+        with pytest.raises(Exception, match="(?i)duplicate"):
+            apply_batch(t, spark.read.parquet(bad[0]))
+        assert not sc.getJobTags()
+
+
 def test_footer_path_past_ten_thousand_markers(spark, tmp_path, stream, job_group):
     """More than 10,000 applied markers change nothing: the next segment
     still takes its facts from the footer, and its replay is skipped

@@ -2,8 +2,9 @@
 
 Usage: python tools/capture_plans.py <suffix> [query ...]
 Writes plans/r06/<query>_<suffix>.txt for each query (default: all except
-cdc_apply_events, whose plan is a loop of applies — captured separately by
-tools/profile_cdc.py). Explain only: no job execution.
+cdc_apply_events, whose plan is a loop of applies: each apply reports its
+phases in ``metrics["phases_s"]`` and tags its Spark jobs
+``icelet:<table>:v<seq>:<phase>``). Explain only: no job execution.
 """
 
 from __future__ import annotations
@@ -31,7 +32,7 @@ def main() -> None:
     qs = E.queries()
     for name, fn in qs.items():
         if name == "cdc_apply_events":
-            continue  # side-effecting loop; profiled via tools/profile_cdc.py
+            continue  # side-effecting loop; its applies tag their own jobs
         if wanted is not None and name not in wanted:
             continue
         df = fn(spark, sf_dir)
