@@ -16,7 +16,8 @@ reference repo ``tkautzman13/game-library-enrichment-etl`` (see SURVEY.md):
   (reference: src/how_long_to_beat.py:401-558)
 
 Everything is DataFrame-API / Catalyst-optimized; the only Python execution
-paths are Arrow-vectorized pandas UDFs (html->text extraction).
+paths are Arrow-batched (the lake writer's one pass per write task, which
+extracts html->text and writes the files).
 """
 
 __version__ = "0.1.0"

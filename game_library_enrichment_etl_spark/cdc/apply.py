@@ -36,7 +36,10 @@ one LWW fold (``lake.table.LwwFold``). What it folds depends on the table:
   key is rewritten.
 Hot keys pre-reduce through the ``salted`` two-phase strategy
 (operators/lww.py) in overwrite mode. The only Python execution is the
-Arrow-vectorized extraction on winner rows (functions/extract.py).
+writer's one Arrow pass per write task (``lake.table.bucket_file_writer``):
+it runs the vectorized extraction (functions/extract.py) on the rows the
+merge flags as live batch winners, and writes each bucket's file with
+pyarrow.
 
 Schedule
 --------
@@ -58,8 +61,8 @@ attribution — runs only when load-bearing: every copy-on-write merge,
 multi-segment batches and batches whose bucket bound admits a hot key. It
 runs before the write, so a batch it rejects writes no file. On a
 single-segment MOR write winners and deletes come from the written files
-instead (manifest row counts + the tombstone sum folded into the footer
-harvest), and integrity from the merge's per-key duplicate check.
+instead (the manifest rows the writer's tasks return: row and tombstone
+counts per file), and integrity from the merge's per-key duplicate check.
 
 Every action runs on the caller's thread, so it carries the caller's job
 group, and joins strictly before the commit, so the WAL-integrity raise
@@ -267,13 +270,9 @@ def apply_batch(
             if use_mor
             else nullcontext()
         ):
-            # the MOR tombstone count rides along in the footer harvest's
-            # threaded file pass (one open per file)
-            written = table.write_data_files_prepartitioned(
-                out, snap.version + 1, cur.version, key,
-                sum_col=DELETED_COL if use_mor else None,
+            files, n_tombstones = table.write_data_files_prepartitioned(
+                out, snap.version + 1, cur.version, key, extract=computed,
             )
-        files, n_tombstones = written if use_mor else (written, None)
         if foot is not None:
             # one written row per surviving key, so the written files'
             # buckets are the surviving events' buckets
@@ -293,7 +292,7 @@ def apply_batch(
         else:
             # MOR fast path, single segment by construction: winners
             # are the written delta rows (one per key), deletes the
-            # harvested tombstone sum; max_key_rows is reported as its sound
+            # written tombstone count; max_key_rows is reported as its sound
             # per-bucket upper bound (the segment's row count on the footer
             # path)
             n_winners, n_deletes, max_key_rows = n_rows, n_tombstones, st.max_bucket_live

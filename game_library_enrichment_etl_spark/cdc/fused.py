@@ -19,8 +19,10 @@ batch in overwrite mode is the same fold over no stored rows
       -> partition-local sort (key ASC, version DESC, _seq DESC)
       -> "first row of key group" filter                == LWW winner
       -> duplicate guard [+ coalesce fold] over the same window
-      -> delete tombstoning + winners-only html->text Arrow UDF
-      -> parquet write partitionBy(_bucket), concurrent writers (no sort)
+      -> delete tombstoning; stored text passed through, and the _extract
+         flag set where the winning html is a live batch row's
+      -> the writer's one MapInArrow pass (lake/table.bucket_file_writer):
+         html->text on flagged rows, one pyarrow file per bucket per task
 
 A join formulation moves the touched payload bytes through THREE
 exchanges (the batch LWW dedup, the join on key, the bucket repartition
@@ -35,19 +37,20 @@ with the max-(warc_ts, lsn, _seq) row first. Catalyst accepts the bucket
 partitioning as every window's required clustering, so NO second exchange
 or sort is planned — winner selection, tombstoning, extraction and the
 file write all run inside the single post-shuffle stage (``lag``/``lead``
-run JVM-side and the pandas UDF sees winner rows only).
+run JVM-side, and the writer's Arrow pass sees winner rows only).
 
 Scale properties (the 100-TB design):
 - one exchange of payload bytes per batch;
-- extraction (the only Python work) runs on winner rows only, and stored
-  text is passed through, never re-extracted;
+- extraction (the only Python work, in the writer's pass) runs on
+  batch-won live rows only, and stored text is passed through, never
+  re-extracted;
 - write parallelism is NOT capped at n_buckets: when the cluster has more
   slots than buckets, an in-bucket salt (also a pure key function) splits
   each bucket across ceil(nparts / n_buckets) writers — the MOR manifest
   supports any files-per-bucket count, and resolution order (version,
   sequence) is unaffected because a key never spans two salt shards;
-- the writer runs with spark.sql.maxConcurrentOutputFileWriters set so the
-  planner does NOT re-sort the output by partition column.
+- the writer consumes the fold's bucket-clustered order as it is: no
+  sort by partition column, no Hadoop output committer.
 
 Contract: ``lsn`` is a unique sequence number (the WAL/LSN contract).
 Within one stored commit a key has one row, so two adjacent rows with
@@ -71,8 +74,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..functions.extract import extract_text_udf
-from ..lake.table import BUCKET_COL, DELETED_COL, SEQ_COL, LwwFold, sort_layout
+from ..lake.table import BUCKET_COL, DELETED_COL, EXTRACT_COL, SEQ_COL, LwwFold, sort_layout
 
 
 # Column-expression memo (r6, guide §1.2 "per-task work" applied to the
@@ -133,9 +135,10 @@ def fused_merge(
     from the non-D rows at or after the reset point. The first-sorted row
     still decides the key, the version and whether the key is deleted.
 
-    Extraction runs AFTER the winner filter and receives NULL html unless
-    the winning html came from a batch row, so per-batch Python cost stays
-    O(batch winners), never O(touched buckets).
+    Extraction is left to the writer: the computed column carries the
+    stored text, or NULL where the winning html came from a live batch
+    row, and ``EXTRACT_COL`` flags those rows, so per-batch Python cost
+    stays O(batch winners), never O(touched buckets).
 
     ``target`` is the raw ``_seq``-tagged scan of the touched buckets
     (``IceletTable._scan(with_seq=True)``: every stored row, tombstones
@@ -143,7 +146,7 @@ def fused_merge(
     ``batch`` is the normalized projection (op + payload columns, computed
     absent); ``total_rows`` sizes the sort layout (lake/table.sort_layout).
     Output is bucket-clustered and key-sorted within buckets, ready for
-    ``write_data_files_prepartitioned``."""
+    ``write_data_files_prepartitioned`` with ``extract=computed``."""
     spark = batch.sparkSession
     nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_parts, n_salts = sort_layout(nparts, n_buckets, total_rows)
@@ -259,21 +262,19 @@ def _merge_exprs(
             src_col = computed[f.name]
             if src_col in folded:
                 from_batch = folded[src_col].getField("s") == _BATCH_SEQ
-                html = folded[src_col].getField("v")
                 stored = folded[src_col].getField("t")
             else:
                 from_batch = F.col(SEQ_COL) == _BATCH_SEQ
-                html, stored = F.col(src_col), F.col(f.name)
-            # batch-won live rows extract; stored-won rows pass their
-            # stored value through. The UDF is evaluated eagerly for
-            # every winner row, so non-extracting rows feed it NULL
-            # (cheap) instead of gating with a CASE around the UDF.
-            extracted = extract_text_udf(F.when(from_batch & ~is_del, html))
+                stored = F.col(f.name)
+            # stored-won rows pass their stored value through; batch-won
+            # live rows are flagged, and the writer extracts their text
+            # from the output html column (the same folded value)
             out_cols.append(
-                F.when(~is_del, F.when(from_batch, extracted).otherwise(stored))
+                F.when(~is_del, F.when(from_batch, F.lit(None)).otherwise(stored))
                 .cast(f.dataType)
                 .alias(f.name)
             )
+            out_cols.append((from_batch & ~is_del).alias(EXTRACT_COL))
         elif f.name in (key, *order_cols):
             out_cols.append(F.col(f.name))
         else:

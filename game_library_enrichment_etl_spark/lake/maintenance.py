@@ -78,8 +78,8 @@ def compact(
     fold (``lake.table.LwwFold``, the one ``read`` and the merge run) —
     routed on (_bucket, spill-bounded salt(key)), sorted (key ASC,
     version DESC, seq DESC) once, each key's newest row kept — tombstones
-    are expired, and the stream is written pre-partitioned with
-    concurrent writers. The salt count is derived from manifest row counts
+    are expired, and the stream is written pre-partitioned by the table's
+    one writer (one Arrow pass per task). The salt count is derived from manifest row counts
     (lake/table.sort_layout), so a huge bucket's sort is sharded to
     bounded memory even when shuffle partitions are few — without it a
     4.5M-row 4-bucket compaction at local[2] external-sorted into 24x
@@ -119,7 +119,7 @@ def compact(
     fold = LwwFold.of_table(table.spark, snap, todo, rows_before)
     out = fold.apply(raw, [*snap.schema.names(), BUCKET_COL]).where(~dead)
     with job_tag(table.spark, table.root, "compact", snap.version + 1):
-        new_files = table.write_data_files_prepartitioned(
+        new_files, _ = table.write_data_files_prepartitioned(
             out, snap.version + 1, snap.schema.version, snap.properties["key"]
         )
     # CAS: the rewrite resolved data as of snap.version — a concurrent
@@ -188,7 +188,9 @@ def expire_snapshots(
 def _is_writer_marker(fn: str) -> bool:
     """Hadoop/Spark writer markers (``_SUCCESS``, ``.*.crc`` checksums) —
     not data, never referenced by a manifest; counted apart from genuine
-    crash orphans so ``orphans_deleted`` means what it says (ADVICE r4)."""
+    crash orphans so ``orphans_deleted`` means what it says (ADVICE r4).
+    The table's writer leaves none; commit directories written by Spark's
+    parquet writer before it still hold them."""
     return fn == "_SUCCESS" or (fn.startswith(".") and fn.endswith(".crc"))
 
 
@@ -276,9 +278,10 @@ def _expire_snapshots_locked(
                 bytes_reclaimed += st.st_size
 
     # empty-dir pruning respects the same grace window as orphan files: a
-    # concurrent Spark write stages through momentarily-EMPTY _temporary/
-    # committer dirs, and an ungraced rmdir here kills that write mid-commit
-    # (caught by tests/test_locking.py's interleaved apply+expire race)
+    # concurrent write's attempt directory is EMPTY until its tasks' first
+    # files land, and an ungraced rmdir here fails that write (older Spark
+    # commit directories staged through empty _temporary/ dirs the same
+    # way; caught by tests/test_locking.py's interleaved apply+expire race)
     dirs_removed = 0
     for base, dirs_, fns in os.walk(datadir, topdown=False):
         if base == datadir or dirs_ or fns:

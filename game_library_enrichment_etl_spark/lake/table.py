@@ -20,14 +20,16 @@ import os
 import re
 import shutil
 import uuid
-from functools import lru_cache, reduce
+from functools import lru_cache, partial, reduce
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..session import scoped_conf
 from .schema import Field, TableSchema
 from .snapshot import (
     DataFileMeta,
@@ -39,6 +41,16 @@ from .snapshot import (
 BUCKET_COL = "_bucket"
 DELETED_COL = "_deleted"
 SEQ_COL = "_seq"
+# the merge's flag on rows whose computed columns the writer derives
+# (bucket_file_writer); never written
+EXTRACT_COL = "_extract"
+# variable-length types the writer keeps no min/max statistics for
+_VARLEN = (pa.types.is_binary, pa.types.is_large_binary,
+           pa.types.is_string, pa.types.is_large_string)
+# the writer's row-group bound, in Arrow bytes: what one write task buffers
+# of a bucket, and the unit a reader skips by key bounds or splits a large
+# file into scan tasks by
+ROW_GROUP_BYTES = 64 << 20
 
 def bucket_expr(key_col: str, n_buckets: int):
     """Deterministic bucket id for a key — the explicit repartition target
@@ -359,6 +371,156 @@ def _table_schema(schema: T.StructType | TableSchema) -> TableSchema:
     return TableSchema(ts.version, [*ts.fields, Field(next_id, DELETED_COL, "boolean")])
 
 
+def bucket_file_writer(
+    df: DataFrame,
+    root: str,
+    rel_dir: str,
+    key: str,
+    extract: dict[str, str] | None = None,
+) -> DataFrame:
+    """The write of bucket-clustered ``df`` under ``root/rel_dir`` as a
+    lazy DataFrame of manifest rows (bucket, path, rows, min_key,
+    max_key, deleted), one per file: collecting it writes the files.
+    ``root/rel_dir`` must exist; the tasks create only its bucket
+    directories.
+
+    One ``mapInArrow`` pass per task, with no Hadoop filesystem under it:
+    no ``.crc`` sidecars, no ``_SUCCESS`` or ``_temporary`` directories,
+    no committer renames. Spark's writer paid a ``chmod`` fork per file,
+    sidecar and directory on a host without native Hadoop, all inside the
+    task. Rows of one bucket arrive contiguously (the fold sorts by route,
+    bucket, salt, key), so each task streams one bucket at a time into one
+    snappy file per bucket it holds, ``_bucket=K/part-{partition
+    id}-{task attempt id}.parquet``, its rows in the order they arrive:
+    key order within each salt shard, as Spark's writer wrote them.
+
+    ``extract`` maps a computed column to its source column: where
+    ``EXTRACT_COL`` is true the column takes ``extract_text_arrow`` of its
+    source, elsewhere it keeps its value. The flag column is not written.
+    The caller's plan evaluates every column in the JVM before a row
+    reaches the pass, so a ``raise_error`` in a column fails the task
+    before Python sees that row's batch."""
+    key_type = df.schema[key].dataType
+    manifest = T.StructType([
+        T.StructField("bucket", T.IntegerType()),
+        T.StructField("path", T.StringType()),
+        T.StructField("rows", T.LongType()),
+        T.StructField("min_key", key_type),
+        T.StructField("max_key", key_type),
+        T.StructField("deleted", T.LongType()),
+    ])
+    return df.mapInArrow(partial(_write_bucket_files, root, rel_dir, key, extract or {}), manifest)
+
+
+class _BucketFile:
+    """One bucket's file of one write task, streamed: slices are buffered
+    until they hold ``ROW_GROUP_BYTES`` of Arrow data, then written as one
+    row group, so a task holds at most about one row group and one Arrow
+    batch of a bucket however large the bucket. Rows, key bounds and the
+    tombstone count are running totals."""
+
+    def __init__(self, root: str, rel_dir: str, bucket: int, name: str, key: str):
+        self.bucket, self.key = bucket, key
+        self.rel_path = os.path.join(rel_dir, f"{BUCKET_COL}={bucket}", name)
+        self.path = os.path.join(root, self.rel_path)
+        self.writer, self.buf, self.buf_bytes = None, [], 0
+        self.rows, self.deleted, self.lo, self.hi = 0, 0, None, None
+
+    def add(self, t: pa.Table) -> None:
+        lo_hi = pc.min_max(t[self.key])
+        lo, hi = lo_hi["min"].as_py(), lo_hi["max"].as_py()
+        if lo is not None:
+            self.lo = lo if self.lo is None else min(self.lo, lo)
+            self.hi = hi if self.hi is None else max(self.hi, hi)
+        self.rows += t.num_rows
+        self.deleted += pc.sum(t[DELETED_COL]).as_py() or 0
+        self.buf.append(t)
+        self.buf_bytes += t.nbytes
+        if self.buf_bytes >= ROW_GROUP_BYTES:
+            self._write_row_group()
+
+    def _write_row_group(self) -> None:
+        t = pa.concat_tables(self.buf)
+        if self.writer is None:
+            try:
+                # not makedirs: once a failed write's attempt directory is
+                # removed, a straggling task must not recreate it
+                os.mkdir(os.path.dirname(self.path))
+            except FileExistsError:
+                pass
+            # statistics only where a reader prunes on them: min/max of
+            # multi-KB payload values cost bytes in every page and footer.
+            # The page index lets a pushed key filter skip pages inside a
+            # row group, as parquet-mr's column indexes did (~120 B a file)
+            stats = [f.name for f in t.schema if f.name == self.key
+                     or not any(is_payload(f.type) for is_payload in _VARLEN)]
+            self.writer = pq.ParquetWriter(self.path, t.schema, compression="snappy",
+                                           store_schema=False, write_statistics=stats,
+                                           write_page_index=True)
+        self.writer.write_table(t)
+        self.buf, self.buf_bytes = [], 0
+
+    def close(self) -> pa.RecordBatch:
+        if self.buf:
+            self._write_row_group()
+        self.writer.close()
+        key_type = self.writer.schema.field(self.key).type
+        return pa.RecordBatch.from_arrays(
+            [
+                pa.array([self.bucket], pa.int32()),
+                pa.array([self.rel_path]),
+                pa.array([self.rows], pa.int64()),
+                pa.array([self.lo], key_type),
+                pa.array([self.hi], key_type),
+                pa.array([self.deleted], pa.int64()),
+            ],
+            ["bucket", "path", "rows", "min_key", "max_key", "deleted"],
+        )
+
+
+def _write_bucket_files(root: str, rel_dir: str, key: str, extract: dict, batches):
+    """``bucket_file_writer``'s task body over its Arrow record batches."""
+    from pyspark import TaskContext
+
+    from ..functions.extract import extract_text_arrow
+
+    ctx = TaskContext.get()
+    name = f"part-{ctx.partitionId():05d}-{ctx.taskAttemptId()}.parquet"
+
+    def written(b: pa.RecordBatch) -> pa.Table:
+        t = pa.Table.from_batches([b])
+        if extract:
+            flag = pc.fill_null(t[EXTRACT_COL], False).combine_chunks()
+            for col, src in extract.items():
+                vals = t[col].combine_chunks()
+                new = extract_text_arrow(pc.filter(t[src].combine_chunks(), flag))
+                t = t.set_column(t.schema.get_field_index(col), col,
+                                 pc.replace_with_mask(vals, flag, new.cast(vals.type)))
+        return t.drop_columns([c for c in (BUCKET_COL, EXTRACT_COL) if c in t.column_names])
+
+    out, done = None, set()
+    for b in batches:
+        if not b.num_rows:
+            continue
+        ids = b.column(BUCKET_COL).to_numpy(zero_copy_only=False)
+        cuts = [0, *(np.flatnonzero(ids[1:] != ids[:-1]) + 1), len(ids)]
+        for lo, hi in zip(cuts, cuts[1:]):
+            bucket = int(ids[lo])
+            if out is None or out.bucket != bucket:
+                if out is not None:
+                    yield out.close()
+                    done.add(out.bucket)
+                if bucket in done:
+                    raise RuntimeError(
+                        f"rows of bucket {bucket} are not contiguous in partition "
+                        f"{ctx.partitionId()}: the writer needs bucket-clustered input"
+                    )
+                out = _BucketFile(root, rel_dir, bucket, name, key)
+            out.add(written(b.slice(lo, hi - lo)))
+    if out is not None:
+        yield out.close()
+
+
 class IceletTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -622,42 +784,21 @@ class IceletTable:
         schema_version: int,
         key: str,
         n_buckets: int,
-    ) -> list[DataFileMeta]:
-        """Write ``df`` (current-schema columns + ``_bucket``, keyed by
-        ``key`` over ``n_buckets`` buckets) as immutable
-        per-bucket parquet files under a per-attempt unique directory
-        data/v{version}-{uuid}; return their manifest entries with key bounds
-        harvested from parquet footers (no data scan).
-
-        The uuid suffix makes retries safe: a crash between the data-file
-        write and the snapshot commit leaves an orphan directory no snapshot
-        references, and the retried apply writes a fresh directory instead of
-        colliding with the orphan (manifest entries record exact paths, so
-        readers never glob).
-        """
-        rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
-        out = os.path.join(self.root, rel_dir)
-        # hash-repartition on (_bucket, in-bucket salt(key)): each
-        # (bucket, salt) shard lands in exactly one task, so write
-        # parallelism is min(nparts, n_buckets * n_salts) instead of being
-        # capped at n_buckets (the r3 cap on COW merges and compaction) —
-        # at most n_salts files per bucket per commit, and a key never
-        # spans two shards (salt is a pure key function), so COW stays
-        # resolution-free and compaction output still reads without
-        # LWW resolution (all files share one sequence). Rows sorted by
-        # (bucket, key) within each task so the partitionBy writer emits
-        # one file per bucket per task and parquet row-group stats enable
-        # key-range skipping on point lookups.
+    ) -> tuple[list[DataFileMeta], int]:
+        """``write_data_files_prepartitioned`` of any ``df`` (current-schema
+        columns + ``_bucket``, keyed by ``key`` over ``n_buckets``
+        buckets): hash-repartition on (_bucket, in-bucket salt(key)) so
+        each (bucket, salt) shard lands in exactly one task and write
+        parallelism is min(nparts, n_buckets * n_salts) instead of being
+        capped at n_buckets. A key never spans two shards (salt is a pure
+        key function), so the commit's files stay key-disjoint. Rows are
+        sorted by (bucket, key) within each task: one file per bucket per
+        task, rows in key order."""
         nparts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
         n_parts, n_salts = sort_layout(nparts, n_buckets)
         repart_cols, _ = layout_exprs(key, n_parts, n_salts)
         staged = df.repartition(n_parts, *repart_cols).sortWithinPartitions(BUCKET_COL, key)
-        (
-            staged.write.mode("errorifexists")
-            .partitionBy(BUCKET_COL)
-            .parquet(out)
-        )
-        return self._harvest_manifest_entries(out, schema_version, version, key)
+        return self.write_data_files_prepartitioned(staged, version, schema_version, key)
 
     def write_data_files_prepartitioned(
         self,
@@ -665,78 +806,54 @@ class IceletTable:
         version: int,
         schema_version: int,
         key: str,
-        sum_col: str | None = None,
-    ) -> "list[DataFileMeta] | tuple[list[DataFileMeta], int]":
-        """Write ``df`` that is ALREADY partitioned so that no bucket spans
-        two partitions (the fused MOR path repartitions on
-        (_bucket[, salt(key)]) upstream, fusing the exchange with the LWW
-        sort). No repartition, no sort: the writer runs with concurrent
-        output writers so the planner does not re-sort the (already
-        bucket-clustered) rows by partition column — at most
-        salts-per-bucket files per bucket per commit, and write parallelism
-        equals the upstream partition count instead of being capped at
-        n_buckets. ``key`` is the table's key column, whose per-file bounds
-        the manifest entries record.
+        extract: dict[str, str] | None = None,
+    ) -> tuple[list[DataFileMeta], int]:
+        """Write ``df``, whose rows are ALREADY clustered by bucket within
+        each partition (the LWW fold's route exchange and sort), as
+        immutable parquet files under a per-attempt unique directory
+        ``data/v{version}-{uuid8}/_bucket=K/``. Returns the manifest
+        entries (key bounds for ``key``, the table's key column) and the
+        number of tombstone rows written.
 
-        ``sum_col``: when given, each file's harvest ALSO sums that boolean
-        column (the fused MOR path's tombstone count) in the same threaded
-        file open as the footer read — one pass over the commit's files
-        instead of two, and the return becomes ``(files, total)``."""
+        The write is ``bucket_file_writer``: one pyarrow pass per task
+        that writes one file per bucket the task holds and yields each
+        file's manifest row, so the driver builds the entries from the rows
+        it collects (no listing, no footer read). ``extract`` maps computed
+        columns to their source columns; the pass extracts them on the rows
+        the ``_extract`` flag marks.
+
+        The uuid suffix makes retries safe: a crash between the data-file
+        write and the snapshot commit leaves an orphan directory no
+        snapshot references, and the retried apply writes a fresh directory
+        instead of colliding with the orphan (manifest entries record exact
+        paths, so readers never glob). A retried task's failed attempt
+        leaves files no collected row names: orphans too."""
         rel_dir = os.path.join("data", f"v{version}-{uuid.uuid4().hex[:8]}")
         out = os.path.join(self.root, rel_dir)
+        os.makedirs(out)
         try:
-            with scoped_conf(self.spark, "spark.sql.maxConcurrentOutputFileWriters", "128"):
-                df.write.mode("errorifexists").partitionBy(BUCKET_COL).parquet(out)
+            rows = bucket_file_writer(df, self.root, rel_dir, key, extract).collect()
         except BaseException:
             # a write the plan rejects (the merge's WAL-integrity raise)
             # commits nothing: its attempt directory is garbage now, not an
             # orphan for the retention sweep to find later
             shutil.rmtree(out, ignore_errors=True)
             raise
-        return self._harvest_manifest_entries(
-            out, schema_version, version, key, sum_col=sum_col
-        )
-
-    def _harvest_manifest_entries(
-        self, out: str, schema_version: int, version: int, key: str,
-        sum_col: str | None = None,
-    ) -> "list[DataFileMeta] | tuple[list[DataFileMeta], int]":
-        entries = [
-            (int(e.split("=")[1]), os.path.join(out, e))
-            for e in sorted(os.listdir(out))
-            if e.startswith(f"{BUCKET_COL}=")
-        ]
-        fpaths = []
-        for bucket, bdir in entries:
-            for fn in sorted(os.listdir(bdir)):
-                if fn.endswith(".parquet"):
-                    fpaths.append((bucket, os.path.join(bdir, fn)))
-        # footer harvesting is metadata-only but file-count-bound: do it in
-        # a thread pool (I/O-released GIL in pyarrow) instead of serially.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _one(item):
-            bucket, fpath = item
-            rows, kmin, kmax, extra = _footer_stats(fpath, key, sum_col)
-            return DataFileMeta(
-                path=os.path.relpath(fpath, self.root),
-                bucket=bucket,
-                rows=rows,
-                min_key=kmin,
-                max_key=kmax,
+        if not rows:
+            os.rmdir(out)
+        files = [
+            DataFileMeta(
+                path=r["path"],
+                bucket=r["bucket"],
+                rows=r["rows"],
+                min_key=r["min_key"],
+                max_key=r["max_key"],
                 schema_version=schema_version,
                 sequence=version,
-            ), extra
-
-        if len(fpaths) <= 2:
-            harvested = [_one(it) for it in fpaths]
-        else:
-            with ThreadPoolExecutor(max_workers=min(32, len(fpaths))) as pool:
-                harvested = list(pool.map(_one, fpaths))
-        files = [f for f, _ in harvested]
-        if sum_col is None:
-            return files
-        return files, sum(x for _, x in harvested)
+            )
+            for r in sorted(rows, key=lambda r: (r["bucket"], r["path"]))
+        ]
+        return files, sum(r["deleted"] for r in rows)
 
     def commit(
         self,
@@ -784,36 +901,3 @@ class IceletTable:
             write_snapshot(self.root, new_snap)
         return new_snap
 
-
-def _footer_stats(
-    path: str, key: str, sum_col: str | None = None
-) -> tuple[int, str | None, str | None, int]:
-    """rows + min/max of the key column from parquet footer metadata only;
-    when ``sum_col`` is given, additionally the sum of that boolean column
-    (a column-pruned read sharing the same file handle)."""
-    pf = pq.ParquetFile(path)
-    md = pf.metadata
-    extra = 0
-    if sum_col is not None:
-        import pyarrow.compute as pc
-
-        t = pf.read(columns=[sum_col])
-        extra = int(pc.sum(t[sum_col]).as_py() or 0)
-    kmin = kmax = None
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            if col.path_in_schema != key:
-                continue
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                mn = mn.decode("utf-8", "replace")
-            if isinstance(mx, bytes):
-                mx = mx.decode("utf-8", "replace")
-            kmin = mn if kmin is None else min(kmin, mn)
-            kmax = mx if kmax is None else max(kmax, mx)
-    return md.num_rows, kmin, kmax, extra

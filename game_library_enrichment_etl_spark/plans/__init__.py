@@ -14,11 +14,13 @@ from .asserts import (
     assert_pushed_filter,
     executed_plan,
     optimized_plan,
+    python_nodes,
 )
 
 __all__ = [
     "executed_plan",
     "optimized_plan",
+    "python_nodes",
     "assert_pushed_filter",
     "assert_broadcast_join",
     "assert_partial_agg",

@@ -8,12 +8,22 @@ regression invisible to row-level correctness tests.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 
 
 def executed_plan(df: DataFrame) -> str:
     """The physical (executed) plan as text."""
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def python_nodes(plan: str) -> list[str]:
+    """The names of the plan's Python execution nodes (``ArrowEvalPython``,
+    ``BatchEvalPython``, ``MapInArrow``, ``MapInPandas``, ...), top-down:
+    each is a boundary where rows cross into a Python worker."""
+    names = re.findall(r"^(?:[ :|+-]*)(?:\*\(\d+\) )?(\w+)", plan, re.M)
+    return [n for n in names if re.search(r"Python|InPandas|InArrow", n)]
 
 
 def optimized_plan(df: DataFrame) -> str:

@@ -125,7 +125,9 @@ def _maybe_auto_compact(
     bounded storage."""
     if res.skipped:
         return
-    if threshold is not None and table.merge_strategy == "mor":
+    # only a merge-on-read append adds delta commits to a bucket, and the
+    # apply reports which merge it ran: no snapshot read to find out
+    if threshold is not None and res.metrics.get("merge_strategy") == "mor":
         from ..lake.maintenance import maybe_compact
 
         m = maybe_compact(table, max_files_per_bucket=threshold)

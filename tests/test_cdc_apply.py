@@ -5,14 +5,15 @@ apply schedule matrix."""
 from __future__ import annotations
 
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from game_library_enrichment_etl_spark.cdc.apply import apply_batch, read_lineage
 from game_library_enrichment_etl_spark.cdc.tables import create_pages_table
 from game_library_enrichment_etl_spark.datagen import gen_change_events, write_change_segments
 from game_library_enrichment_etl_spark.functions.extract import (
+    extract_text_arrow,
     extract_text_one,
-    extract_text_series,
 )
 from game_library_enrichment_etl_spark.operators.lww import lww_dedup
 
@@ -158,26 +159,17 @@ def test_extractor_deterministic_and_correct():
     out = extract_text_one(html)
     assert out == "t hello & world second para"
     # batch == scalar, independent of batch composition
-    s = extract_text_series(pd.Series([html, None, html * 2]))
+    s = extract_text_arrow(pa.array([html, None, html * 2], pa.binary())).to_pylist()
     assert s[0] == out and s[1] is None
     assert extract_text_one(html) == out
 
 
-def test_extractor_fused_byte_identical_to_shipped_reference():
-    """The fused single-pipeline extractor must be byte-identical to the
-    previous shipped pandas implementation (the EXTRACTOR_VERSION-1 spec —
-    replay byte-identity across rounds hinges on this) on adversarial
-    inputs: nested/unterminated script+style, bare "<" before a block
-    (where a naive 3-sequential-pass formulation provably diverges from
-    the shipped alternation — this test found that), entity-producing
-    entities (&amp;lt; -> literal "&lt;"), exotic whitespace codepoints
-    (the fused path relies on str.isspace == re \\s), and invalid UTF-8."""
+def adversarial_html() -> list[bytes]:
+    """html the extractor must handle byte-identically: nested and
+    unterminated script/style, a bare "<" before a block, entity-producing
+    entities, exotic whitespace codepoints, invalid UTF-8, and 200 random
+    mixes of those tokens."""
     import random
-
-    from game_library_enrichment_etl_spark.functions.extract import (
-        extract_text_series,
-        extract_text_series_pandas,
-    )
 
     ws = " \t\n\r\f\v\x1c\x1d\x1e\x1f\x85\xa0   　"
     samples = [
@@ -198,11 +190,26 @@ def test_extractor_fused_byte_identical_to_shipped_reference():
             "&amp;", "&lt;", "&nbsp;", "word", ">", "<", ";", "&"] + list(ws)
     for _ in range(200):
         samples.append("".join(rng.choices(toks, k=rng.randrange(0, 40))).encode("utf-8"))
+    return samples
+
+
+def test_extractor_fused_byte_identical_to_shipped_reference():
+    """The fused single-pipeline extractor must be byte-identical to the
+    previous shipped pandas implementation (the EXTRACTOR_VERSION-1 spec —
+    replay byte-identity across rounds hinges on this) on adversarial
+    inputs: nested/unterminated script+style, bare "<" before a block
+    (where a naive 3-sequential-pass formulation provably diverges from
+    the shipped alternation — this test found that), entity-producing
+    entities (&amp;lt; -> literal "&lt;"), exotic whitespace codepoints
+    (the fused path relies on str.isspace == re \\s), and invalid UTF-8."""
+    from game_library_enrichment_etl_spark.functions.extract import extract_text_series_pandas
+
+    samples = adversarial_html()
     s = pd.Series(samples + [None], dtype=object)
-    got = extract_text_series(s)
+    got = extract_text_arrow(pa.array(samples + [None], pa.binary())).to_pylist()
     want = extract_text_series_pandas(s)
     for i in range(len(s)):
-        g, w = got.iloc[i], want.iloc[i]
+        g, w = got[i], want.iloc[i]
         assert (g == w) or (g is None and (w is None or w != w)), (i, s.iloc[i], g, w)
 
 

@@ -6,9 +6,10 @@
    target-only tombstone, batch-only insert, batch-only delete, batch
    newer than target, batch STALE (older than target), exact version tie
    (source must win), and multiple batch rows per key (in-batch LWW).
-2. Plan shape: exactly ONE exchange, and extraction sits above the winner
-   filter (losers and target-won rows never feed Python real html), with
-   a stored target and with none (the MOR write).
+2. Plan shape: exactly ONE exchange and no Python in the fold; the
+   writer's one Arrow pass, which extracts text, sits above the winner
+   filter (losers never reach Python), with a stored target and with none
+   (the MOR write).
 3. WAL integrity: two batch rows at one (key, version) raise; a stored
    row tied with a batch row is a replay, not a duplicate.
 4. The expression memo keeps one application id's entries, and one entry
@@ -27,6 +28,10 @@ from game_library_enrichment_etl_spark.cdc.fused import _EXPR_CACHE, _merge_expr
 from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA
 from game_library_enrichment_etl_spark.functions.extract import extract_text_one
 from game_library_enrichment_etl_spark.lake.schema import TableSchema
+from game_library_enrichment_etl_spark.lake.table import bucket_file_writer
+from game_library_enrichment_etl_spark.plans.asserts import python_nodes
+
+EXTRACT = {"text": "html"}
 
 
 def _ts(s: int):
@@ -74,6 +79,14 @@ def _rows(df):
     )
 
 
+def _written(spark, tmp_path, merged):
+    """``merged`` through the table's writer (which extracts text), read
+    back from the files it wrote."""
+    (tmp_path / "data" / "v1-00000000").mkdir(parents=True)
+    rows = bucket_file_writer(merged, str(tmp_path), "data/v1-00000000", "url", EXTRACT).collect()
+    return spark.read.parquet(*[str(tmp_path / r["path"]) for r in rows])
+
+
 def _live(url: str, lsn: int, html: bytes) -> tuple:
     # every fixture row's warc_ts is lsn seconds past the fixture epoch
     return (url, int(_ts(lsn).timestamp()), lsn, html, extract_text_one(html), "en", False)
@@ -83,7 +96,7 @@ def _tombstone(url: str, lsn: int) -> tuple:
     return (url, int(_ts(lsn).timestamp()), lsn, None, None, None, True)
 
 
-def test_cow_union_merge_equals_join_merge(spark):
+def test_cow_union_merge_equals_join_merge(spark, tmp_path):
     cur, target, batch = _frames(spark)
     fused = fused_merge(target, batch, "url", "op", ("warc_ts", "lsn"),
                         cur.to_spark(), {"text": "html"}, 8, total_rows=16)
@@ -101,7 +114,7 @@ def test_cow_union_merge_equals_join_merge(spark):
         _tombstone("u/batch-del", 31),
         _live("u/multi", 62, b"<p>v3 wins</p>"),
     ])
-    got = _rows(fused)
+    got = _rows(_written(spark, tmp_path, fused))
     assert got == want, f"union merge diverges from join merge:\n{got}\nvs\n{want}"
     # spot-check the interesting cases landed as designed
     by_url = {r[0]: r for r in got}
@@ -112,7 +125,7 @@ def test_cow_union_merge_equals_join_merge(spark):
     assert by_url["u/tombstone"][6] is True              # tombstone carried
 
 
-def test_cow_union_merge_plan_shape(spark):
+def test_cow_union_merge_plan_shape(spark, tmp_path):
     cur, target, batch = _frames(spark)
     # coalesce mode folds over the same union, exchange and sort; without
     # a target (the MOR write) the union is skipped
@@ -126,9 +139,13 @@ def test_cow_union_merge_plan_shape(spark):
             assert plan.count("Exchange") == 1, f"{case}: expected exactly one exchange:\n{plan}"
             n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
             assert n_sorts == 1, f"{case}: expected exactly one sort:\n{plan}"
-            # extraction above the winner filter: losers never reach Python
-            i_filt, i_py = plan.index("Filter"), plan.index("ArrowEvalPython")
-            assert i_py < i_filt, f"{case}: extraction must sit above the winner filter:\n{plan}"
+            assert python_nodes(plan) == [], f"{case}: the fold must run no Python:\n{plan}"
+            # the writer's pass above the winner filter: losers never reach Python
+            wplan = bucket_file_writer(fused, str(tmp_path), "data/v1-00000000", "url",
+                                       EXTRACT)._jdf.queryExecution().executedPlan().toString()
+            assert python_nodes(wplan) == ["MapInArrow"], f"{case}: one Python node:\n{wplan}"
+            i_filt, i_py = wplan.index("Filter"), wplan.index("MapInArrow")
+            assert i_py < i_filt, f"{case}: the writer must sit above the winner filter:\n{wplan}"
 
 
 @pytest.mark.parametrize("lsn", [62, 60], ids=["winning", "non-winning"])

@@ -70,14 +70,16 @@ def test_cosine_topk_broadcasts_queries(spark):
     assert_no_cartesian(q)
 
 
-def test_fused_mor_plan_shape(spark):
+def test_fused_mor_plan_shape(spark, tmp_path):
     """The MOR write's scale contract (cdc/fused.py, the merge over no
     stored rows): exactly ONE exchange (the bucket repartition the window
-    requires), one sort, the winner filter BELOW the Arrow extraction
-    (losers never reach Python), and no extra shuffle after the window."""
+    requires), one sort, no Python in the fold, the writer's one Arrow
+    pass ABOVE the winner filter (losers never reach Python), and no extra
+    shuffle after the window."""
     from game_library_enrichment_etl_spark.cdc.fused import fused_merge
     from game_library_enrichment_etl_spark.cdc.tables import PAGES_SCHEMA
-    from game_library_enrichment_etl_spark.plans.asserts import executed_plan
+    from game_library_enrichment_etl_spark.lake.table import bucket_file_writer
+    from game_library_enrichment_etl_spark.plans.asserts import executed_plan, python_nodes
     from pyspark.sql import functions as F
 
     df = spark.range(1000).select(
@@ -99,8 +101,15 @@ def test_fused_mor_plan_shape(spark):
 
     n_sorts = len(re.findall(r"(?:\+- |^)(?:\*\(\d+\) )?Sort \[", plan, re.M))
     assert n_sorts == 1, f"expected exactly one sort:\n{plan}"
-    # operator order bottom-up: Sort -> Window -> Filter -> ArrowEvalPython
-    i_win, i_filt, i_py = plan.index("Window"), plan.index("Filter"), plan.index("ArrowEvalPython")
-    assert i_py < i_filt < i_win, f"extraction must sit above the winner filter:\n{plan}"
+    assert python_nodes(plan) == [], f"the fold must run no Python:\n{plan}"
+    # the write plan (built, not run): its only Python node is the
+    # writer's pass, and operator order bottom-up is Sort -> Window ->
+    # Filter -> MapInArrow
+    wplan = executed_plan(bucket_file_writer(
+        out, str(tmp_path), "data/v1-00000000", "url", {"text": "html"}
+    ))
+    assert python_nodes(wplan) == ["MapInArrow"], f"one Python node, the writer:\n{wplan}"
+    i_win, i_filt, i_py = wplan.index("Window"), wplan.index("Filter"), wplan.index("MapInArrow")
+    assert i_py < i_filt < i_win, f"the writer must sit above the winner filter:\n{wplan}"
     # row-count sanity: one winner per distinct url
     assert out.count() == 200
