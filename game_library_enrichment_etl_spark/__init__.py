@@ -20,4 +20,10 @@ paths are Arrow-batched (the lake writer's one pass per write task, which
 extracts html->text and writes the files).
 """
 
+from ._zipimport import install as _install_zipimport
+
 __version__ = "0.1.0"
+
+# a Python worker imports the package with its first engine function, and
+# from then on skips the per-task re-read of its unchanged zip archives
+_install_zipimport()

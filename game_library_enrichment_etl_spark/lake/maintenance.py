@@ -251,7 +251,14 @@ def _expire_snapshots_locked(
     orphans_deleted = 0
     markers_deleted = 0
     datadir = os.path.join(root, "data")
+    # each directory's mtime from before this pass deletes anything: the
+    # deletions below bump the mtime of every directory they empty
+    dir_mtimes: dict[str, float] = {}
     for base, _dirs, fns in os.walk(datadir):
+        try:
+            dir_mtimes[base] = os.stat(base).st_mtime
+        except FileNotFoundError:
+            continue
         for fn in fns:
             p = os.path.join(base, fn)
             rel = os.path.relpath(p, root)
@@ -281,17 +288,23 @@ def _expire_snapshots_locked(
     # concurrent write's attempt directory is EMPTY until its tasks' first
     # files land, and an ungraced rmdir here fails that write (older Spark
     # commit directories staged through empty _temporary/ dirs the same
-    # way; caught by tests/test_locking.py's interleaved apply+expire race)
+    # way; caught by tests/test_locking.py's interleaved apply+expire race).
+    # The walk is bottom-up, so a directory whose subdirectories this loop
+    # removed is pruned in the same pass; a directory that appeared during
+    # the pass has no recorded mtime and is left for the next one
     dirs_removed = 0
+    removed: set[str] = set()
     for base, dirs_, fns in os.walk(datadir, topdown=False):
-        if base == datadir or dirs_ or fns:
+        if base == datadir or fns or any(os.path.join(base, d) not in removed for d in dirs_):
+            continue
+        if base not in dir_mtimes or now - dir_mtimes[base] < orphan_grace_s:
             continue
         try:
-            if now - os.stat(base).st_mtime >= orphan_grace_s:
-                os.rmdir(base)
-                dirs_removed += 1
+            os.rmdir(base)
         except OSError:  # vanished, or a concurrent writer refilled it
-            pass
+            continue
+        removed.add(base)
+        dirs_removed += 1
 
     for v in expired:
         os.remove(snapshot_path(root, v))

@@ -14,6 +14,7 @@ and ``DataFrame.update``'s by-name cell alignment
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import lru_cache
 
 from pyspark.sql import types as T
 
@@ -96,8 +97,11 @@ class TableSchema:
         )
 
 
+@lru_cache(maxsize=None)
 def _parse_type(s: str) -> T.DataType:
-    # struct-free types only (engine table columns are scalar/binary/array)
+    # struct-free types only (engine table columns are scalar/binary/array).
+    # Each parse is a py4j round trip (about 2 ms); a table has a few type
+    # strings and every ``to_spark`` asks for them again, so parse each once
     return T._parse_datatype_string(s)  # public-ish helper in pyspark.sql.types
 
 

@@ -62,8 +62,9 @@ def run_stream(
     delta-file count exceeds this after each applied batch, bounding read
     amplification over a sustained stream (None disables).
 
-    Reading the first segment's schema runs a Spark job, tagged
-    ``icelet:<table>:schema``; each apply tags its own jobs.
+    The first segment's schema comes from its parquet footers, as in
+    ``tail_segments``; only a fallback to inference runs a Spark job, tagged
+    ``icelet:<table>:schema``. Each apply tags its own jobs.
     """
     spark = table.spark
     if schema is None:
@@ -71,7 +72,7 @@ def run_stream(
         if not first:
             raise FileNotFoundError(f"no segment files in {wal_dir}")
         with job_tag(spark, table.root, "schema"):
-            schema = spark.read.parquet(first[0]).schema
+            schema = read_change_batch(spark, first[0]).schema
 
     results: list[ApplyResult] = []
 
@@ -171,15 +172,18 @@ def tail_segments(
     Each segment is read with its own (possibly evolved) schema; already
     applied batch_ids no-op inside apply_batch, so this is safe to call
     repeatedly (cron-style incremental runs) and after a crash.
-    ``auto_compact``: see run_stream. Each segment's schema read runs a
-    Spark job, tagged ``icelet:<table>:schema``.
+    ``auto_compact``: see run_stream. A segment's schema comes from its
+    parquet footers (``sources.readers.read_change_batch``), so its read
+    runs no Spark job; where the footers cannot give it exactly, inference
+    runs one, tagged ``icelet:<table>:schema``.
     """
     spark = table.spark
     segs = sorted(glob.glob(os.path.join(wal_dir, pattern)), key=_natural_key)
     results = []
     for p in segs:
         # Spark's default split sizing spreads the segment over the cluster;
-        # the read leaves the session conf untouched (sources/readers.py)
+        # the read leaves the session conf untouched (sources/readers.py).
+        # The tag labels the schema inference job of a read that falls back
         with job_tag(spark, table.root, "schema"):
             df = read_change_batch(spark, p)
         res = apply_batch(

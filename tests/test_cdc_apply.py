@@ -655,9 +655,8 @@ def test_engine_jobs_tagged_with_table_commit_and_phase(spark, tmp_path, stream,
 
     tail = create_pages_table(spark, str(tmp_path / "tail"), n_buckets=8, merge_strategy="mor")
     wal, name = os.path.split(paths[3])
-    assert tagged(tail, lambda: tail_segments(tail, wal, pattern=name)) == {
-        "schema", "merge_write"
-    }
+    # the segment's schema comes from its footer: no schema job
+    assert tagged(tail, lambda: tail_segments(tail, wal, pattern=name)) == {"merge_write"}
 
     ev = gen_change_events(200, 40, seed=31)
     dup = ev[ev["url"] == ev.iloc[0]["url"]].sort_values(["warc_ts", "lsn"]).iloc[[-1]].copy()

@@ -102,6 +102,35 @@ def test_expire_reclaims_cow_rewrites(spark, tmp_path):
     pd.testing.assert_frame_equal(before, after)
 
 
+
+def test_expire_prunes_emptied_commit_dirs_in_one_pass(spark, tmp_path):
+    """A commit directory whose bucket directories a run empties and removes
+    goes in that same run, although removing them bumped its mtime: an
+    immediate second run has no directory left to remove, and every
+    directory left under data/ holds a live file."""
+    ev = gen_change_events(900, 150, seed=94, delete_frac=0.1)
+    paths = write_change_segments(str(tmp_path / "wal"), ev.drop(columns=["title"]), 3)
+    t = create_pages_table(spark, str(tmp_path / "pages"), n_buckets=4)
+    for p in paths:
+        apply_batch(t, spark.read.parquet(p))
+
+    first = expire_snapshots(t, keep_last=1, orphan_grace_s=0.0)
+    assert first["snapshots_expired"] == 3 and first["dirs_removed"] > 0, first
+    second = expire_snapshots(t, keep_last=1, orphan_grace_s=0.0)
+    assert second["dirs_removed"] == 0, second
+
+    live_dirs = set()
+    for f in t.snapshot().files:
+        d = os.path.dirname(f.path)
+        while d != "data":
+            live_dirs.add(d)
+            d = os.path.dirname(d)
+    datadir = os.path.join(t.root, "data")
+    on_disk = {
+        os.path.relpath(base, t.root) for base, _dirs, _fns in os.walk(datadir) if base != datadir
+    }
+    assert on_disk == live_dirs
+
 def test_orphan_sweep_respects_grace_window(spark, tmp_path):
     """A data dir referenced by NO snapshot (crash between the data-file
     write and the snapshot commit) is swept only once older than the grace

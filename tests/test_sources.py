@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -113,3 +115,44 @@ def test_read_change_batch_splits_span_parallelism(spark, tmp_path, n_files):
     par = spark.sparkContext.defaultParallelism
     assert df.rdd.getNumPartitions() >= min(n_files, par)
     assert df.count() == rows
+
+
+def test_segment_schema_from_footers_equals_inference(spark, tmp_path):
+    """``footer_schema`` equals the schema ``spark.read.parquet`` infers, and
+    ``read_change_batch`` then submits no Spark job, for a Spark-written
+    segment with INT96 timestamps, a pyarrow segment with tz-aware
+    timestamps and an evolved pyarrow segment (an added column and a widened
+    type). A partitioned directory falls back to inference."""
+    import pyarrow.parquet as pq
+
+    from game_library_enrichment_etl_spark.datagen import (
+        EvolutionSpec,
+        gen_change_events,
+        write_change_segments,
+    )
+    from game_library_enrichment_etl_spark.sources.readers import footer_schema
+
+    evo = EvolutionSpec(add_title_from=1, rename_lang_from=9, widen_lsn_from=1)
+    base, evolved = write_change_segments(
+        str(tmp_path / "wal"), gen_change_events(400, 60, seed=5), 2, evolution=evo
+    )
+    int96, part = str(tmp_path / "int96"), str(tmp_path / "part")
+    spark.read.parquet(base).coalesce(1).write.parquet(int96)
+    spark.read.parquet(base).write.partitionBy("op").parquet(part)
+    (spark_file,) = [f for f in os.listdir(int96) if f.endswith(".parquet")]
+    ts = pq.read_metadata(os.path.join(int96, spark_file)).schema.column(3)
+    assert (ts.name, ts.physical_type) == ("warc_ts", "INT96")
+
+    inferred = {p: spark.read.parquet(p).schema for p in (int96, base, evolved, part)}
+    assert "title" in inferred[evolved].names and "title" not in inferred[base].names
+    assert (inferred[base]["lsn"].dataType, inferred[evolved]["lsn"].dataType) == (
+        T.IntegerType(), T.LongType()
+    )
+    tracker = spark.sparkContext.statusTracker()
+    for p in (int96, base, evolved):
+        assert footer_schema(spark, p) == inferred[p], p
+        jobs = set(tracker.getJobIdsForGroup())
+        assert read_change_batch(spark, p).schema == inferred[p]
+        assert set(tracker.getJobIdsForGroup()) == jobs, p
+    assert footer_schema(spark, part) is None
+    assert read_change_batch(spark, part).schema == inferred[part]
