@@ -49,8 +49,10 @@ are known — offsets, late counts, touched buckets and a sound hot-key bound
 - the FOOTER path: a single segment applied to a merge-on-read table in
   overwrite mode takes its facts from the source's parquet footers, which
   ``_source_footprint`` opens anyway, so the write is the apply's only
-  Spark job (Delta Lake keeps the same per-file min/max statistics in its
-  log so that writers skip this pass). The conditions, and why each is
+  phase that submits jobs (Delta Lake keeps the same per-file min/max
+  statistics in its log so that writers skip this pass). Under the
+  session's AQE the write's shuffle-map stage runs as a job of its own,
+  ahead of the result job. The conditions, and why each is
   needed, are in ``_source_footprint`` and ``apply_batch``;
 - the JOB path, everywhere else: action (1), a skinny per-(segment,
   bucket) stats job, runs first; its replay/late/bucket outputs prune the
@@ -80,10 +82,9 @@ from __future__ import annotations
 
 import os
 import time
-from contextlib import contextmanager, nullcontext
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from datetime import datetime, timedelta, timezone
-from urllib.parse import unquote, urlparse
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -95,7 +96,8 @@ from ..functions.extract import EXTRACTOR_VERSION
 from ..lake.schema import evolve
 from ..lake.table import DELETED_COL, IceletTable, bucket_expr
 from ..operators.lww import lww_dedup
-from ..session import job_tag, scoped_conf
+from ..session import job_tag
+from ..sources.readers import local_path
 from .fused import fused_merge
 
 META_COLS = ("op", "batch_id")
@@ -259,17 +261,7 @@ def apply_batch(
             target, merge_src, key, OP_COL, order_cols, cur.to_spark(), computed,
             snap.n_buckets, total_rows=stored_rows + st.live_rows, mode=mode,
         )
-        # AQE adds nothing to a join-free, explicitly-partitioned write but
-        # stage-by-stage materialization latency: measured -18% apply wall
-        # at sf0.1 for the fused MOR write with it off. A COW merge keeps it
-        # (the 1M-event A/B read parity-with-downside for AQE-off at scale).
-        # Plan building is lazy, so the conf takes effect at the write's
-        # execution.
-        with _phase("merge_write"), (
-            scoped_conf(table.spark, "spark.sql.adaptive.enabled", "false")
-            if use_mor
-            else nullcontext()
-        ):
+        with _phase("merge_write"):
             files, n_tombstones = table.write_data_files_prepartitioned(
                 out, snap.version + 1, cur.version, key, extract=computed,
             )
@@ -360,12 +352,10 @@ def _source_footprint(batch: DataFrame, order_cols) -> tuple[bool, dict | None]:
         plan = batch._jdf.queryExecution().analyzed().nodeName()
         if plan != "LogicalRelation" or "batch_id" not in batch.columns:
             return True, None
-        mds = [
-            pq.ParquetFile(
-                unquote(urlparse(p).path) if "://" in p or p.startswith("file:") else p
-            ).metadata
-            for p in src_files
-        ]
+        local = [local_path(p) for p in src_files]
+        if None in local:
+            return True, None
+        mds = [pq.ParquetFile(p).metadata for p in local]
     except Exception:
         return True, None
     ts_col, lsn_col = order_cols
@@ -613,7 +603,7 @@ LINEAGE_SCHEMA = pa.schema(
         ("buckets_touched", pa.int64()),
         ("rows_after", pa.int64()),
         # the batch's total apply wall time, copied into each of its
-        # segment rows (segments are applied in ONE Spark job, so a
+        # segment rows (segments are applied by the same jobs, so a
         # per-segment wall time does not exist; the name says so —
         # VERDICT r4 wrong #2)
         ("batch_wall_ms", pa.int64()),

@@ -99,9 +99,11 @@ ROWS_PER_SORT_SHARD = 250_000
 # rows, target ~TASK_WAVES tasks per slot, and keep at least
 # GROUPS_PER_PARTITION distinct (bucket, salt) hash groups per exchange
 # partition so balls-in-bins variance stays bounded. Each task carries a
-# fixed cost — python worker checkout, arrow stream setup, parquet file
-# init — measured ~0.3s on the bench host, so waves trade straggler
-# absorption against per-task overhead.
+# fixed cost before the writer's body runs: a few tens of ms from task
+# launch on a reused Python worker (0.013-0.040 s for a trivial mapInArrow
+# at local[4] on a 4-core host), about 0.4 s on a new worker's first task
+# (its fork and imports), so waves trade straggler absorption against
+# per-task overhead.
 MIN_ROWS_PER_SHARD = 25_000
 TASK_WAVES = 2
 GROUPS_PER_PARTITION = 8
@@ -152,15 +154,16 @@ def sort_layout(
         by_spill = -(-total_rows // ROWS_PER_SORT_SHARD)  # ceil: sorter bound
         fine_cap = max(1, -(-total_rows // MIN_ROWS_PER_SHARD))
         n_parts = max(by_spill, min(TASK_WAVES * nparts, fine_cap))
-        # Latency-regime refinement (r6, measured): a bucketed write emits
-        # one file per (bucket, salt) group regardless of n_parts, and a
-        # task's fixed cost is dominated by its per-file inits (open /
-        # footer / close / rename ~15ms each locally) — a small batch
-        # funneled into ONE task writes all n_buckets files serially
-        # (0.86s measured for 32 files at 12.5k rows) while 31 cores
-        # idle. Extra partitions that keep the SALT COUNT unchanged are
-        # free parallelism: same groups, same file count, same layout —
-        # just fewer files per task (0.51s at 4 tasks, same 32 files).
+        # Latency-regime refinement: a bucketed write emits one file per
+        # (bucket, salt) group regardless of n_parts, so a small batch
+        # funneled into ONE task writes all its files serially while the
+        # other cores idle. Measured in r6 on Spark's Hadoop writer (open /
+        # footer / close / rename ~15ms per file): 0.86s for 32 files at
+        # 12.5k rows in one task, 0.51s in 4 tasks. The table's writer now
+        # streams each file with pyarrow and renames nothing; a task still
+        # pays its fixed start (see TASK_WAVES). Extra partitions that keep
+        # the SALT COUNT unchanged are free parallelism: same groups, same
+        # file count, same layout — just fewer files per task.
         # Bounded by MIN_ROWS_PER_TASK rows per task so confetti stays
         # out, and by the largest partition count whose salt formula
         # still yields the same n_salts, so file counts (and read/

@@ -7,15 +7,15 @@ timezone so results compare bit-stably against the DuckDB oracle.
 The factory only configures: it submits no Spark job, so a fresh JVM's
 codegen and JIT compile costs land in the first queries that need them.
 
-Two block-scoped helpers serve the engine's own jobs: ``scoped_conf`` sets a
-session conf for one block, and ``job_tag`` labels every Spark job a block
-submits with the table, commit sequence and phase it serves.
+One block-scoped helper serves the engine's own jobs: ``job_tag`` labels
+every Spark job a block submits with the table, commit sequence and phase it
+serves. The engine sets no session conf while it runs: every engine job plans
+under the session's own conf.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 from collections.abc import Iterator
 from contextlib import contextmanager
 
@@ -81,35 +81,6 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-# held for the whole block of every ``scoped_conf``: two blocks on one
-# session would otherwise restore each other's value out of order (the later
-# block saves the earlier block's value as "previous" and puts it back last).
-# Re-entrant because the MOR write's writer-conf block nests inside its AQE
-# block on the same thread.
-_CONF_LOCK = threading.RLock()
-
-
-@contextmanager
-def scoped_conf(spark: SparkSession, key: str, value: str) -> Iterator[None]:
-    """Set session conf ``key`` to ``value`` for the block, then put it back
-    exactly as found: re-set when it was set, unset when it was not, so the
-    block leaves nothing behind in ``spark.conf.getAll``.
-
-    Blocks are serialized process-wide, so concurrent blocks cannot leave
-    the session with another block's value. The conf is still session-wide
-    while a block runs: other threads' jobs planned meanwhile see it."""
-    with _CONF_LOCK:
-        prev = spark.conf.get(key, None)
-        spark.conf.set(key, value)
-        try:
-            yield
-        finally:
-            if prev is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, prev)
 
 
 @contextmanager

@@ -75,6 +75,19 @@ def read_change_batch(spark: SparkSession, path: str) -> DataFrame:
     return reader.parquet(path)
 
 
+def local_path(path: str) -> str | None:
+    """The local file path that Spark's path ``path`` names, or None when it
+    names no local file. A plain path is returned as given; a ``file:`` URI
+    (``file:/x``, ``file:///x``, with ``%20`` escapes, as ``inputFiles()``
+    spells a local file) is decoded to its path; any other scheme
+    (``hdfs://``, ``s3a://``) gives None, so its path component is never
+    opened on the local filesystem."""
+    if "://" not in path and not path.startswith("file:"):
+        return path
+    url = urlparse(path)
+    return unquote(url.path) if url.scheme == "file" else None
+
+
 # where Spark's parquet writer stores the row schema as StructType JSON;
 # schema inference takes a file's schema from it verbatim when present
 _SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
@@ -95,11 +108,9 @@ def footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     nullable."""
     if any(c in path for c in "*?[{"):
         return None
-    if "://" in path or path.startswith("file:"):
-        url = urlparse(path)
-        if url.scheme != "file":
-            return None
-        path = unquote(url.path)
+    path = local_path(path)
+    if path is None:
+        return None
     if os.path.isfile(path):
         files = [path]
     elif os.path.isdir(path):

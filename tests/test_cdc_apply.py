@@ -587,10 +587,12 @@ def job_group(spark):
         sc.setLocalProperty(prop, None)
 
 
-def test_single_segment_mor_apply_is_one_labelled_job(spark, tmp_path, stream, job_group):
-    """A single-segment MOR apply submits exactly one Spark job, the write,
-    on the caller's thread: it carries the caller's job group, and no job
-    runs outside it."""
+def test_single_segment_mor_apply_submits_only_write_jobs(spark, tmp_path, stream, job_group):
+    """A single-segment MOR apply takes its facts from the footers, so it
+    submits no ``schema``, ``stats`` or ``exact`` job: every job it adds is
+    the write's (under the session's AQE its shuffle-map stage is a job of
+    its own), runs on the caller's thread with the caller's job group, and
+    carries one ``icelet:`` tag whose phase is ``merge_write``."""
     from game_library_enrichment_etl_spark.sources.readers import read_change_batch
 
     sc, group = job_group
@@ -599,9 +601,28 @@ def test_single_segment_mor_apply_is_one_labelled_job(spark, tmp_path, stream, j
     batch = read_change_batch(spark, paths[0])
     out = {}
     grouped, ungrouped = _jobs_added(sc, group, lambda: out.update(res=apply_batch(t, batch)))
-    assert not ungrouped, ungrouped
-    assert len(grouped) == 1, grouped
+    assert grouped and not ungrouped, (grouped, ungrouped)
+    write_tag = f"icelet:{t.root}:v{t.snapshot().version}:merge_write"
+    assert all(_icelet_tags(sc, job_id) == [write_tag] for job_id in grouped), grouped
     assert out["res"].metrics["stats_path"] == "footer"
+
+
+def test_source_footprint_opens_no_remote_file(spark, stream, monkeypatch):
+    """A source file under a scheme other than ``file`` is not on this
+    machine's filesystem: ``_source_footprint`` must not open the local
+    file its path component happens to name, and takes the job path."""
+    from urllib.parse import urlparse
+
+    from game_library_enrichment_etl_spark.cdc.apply import _source_footprint
+
+    _ev, paths = stream
+    batch = spark.read.parquet(paths[0])
+    order_cols = ("warc_ts", "lsn")
+    narrow, foot = _source_footprint(batch, order_cols)
+    assert narrow and foot is not None and foot["events_in"] > 0
+    remote = ["hdfs://nn" + urlparse(p).path for p in batch.inputFiles()]
+    monkeypatch.setattr(type(batch), "inputFiles", lambda self: remote)
+    assert _source_footprint(batch, order_cols) == (True, None)
 
 
 def _icelet_tags(sc, job_id: int) -> list[str]:
@@ -669,6 +690,55 @@ def test_engine_jobs_tagged_with_table_commit_and_phase(spark, tmp_path, stream,
         with pytest.raises(Exception, match="(?i)duplicate"):
             apply_batch(t, spark.read.parquet(bad[0]))
         assert not sc.getJobTags()
+
+
+def test_engine_sets_no_session_conf(spark, tmp_path, stream, monkeypatch):
+    """No engine operation writes the session conf, not even for the span
+    of one block: a conf set on a shared session changes the plans of every
+    other thread's jobs meanwhile. Covered: a footer-path MOR apply, a
+    multi-segment MOR apply, a COW apply, a coalesce apply onto MOR,
+    compaction, snapshot expiry and a WAL tail. AQE is read as the session
+    holds it before, during each write and after."""
+    import os
+
+    from pyspark.sql.conf import RuntimeConfig
+
+    from game_library_enrichment_etl_spark.lake.maintenance import compact, expire_snapshots
+    from game_library_enrichment_etl_spark.lake.table import IceletTable
+    from game_library_enrichment_etl_spark.sources.readers import read_change_batch
+    from game_library_enrichment_etl_spark.streaming.runner import tail_segments
+
+    _ev, paths = stream
+    aqe_key = "spark.sql.adaptive.enabled"
+    aqe = spark.conf.get(aqe_key)
+    calls, aqe_at_write = [], []
+    write = IceletTable.write_data_files_prepartitioned
+
+    def spy_write(self, *a, **k):
+        aqe_at_write.append(self.spark.conf.get(aqe_key))
+        return write(self, *a, **k)
+
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, *a: calls.append(("set", *a)))
+    monkeypatch.setattr(RuntimeConfig, "unset", lambda self, *a: calls.append(("unset", *a)))
+    monkeypatch.setattr(IceletTable, "write_data_files_prepartitioned", spy_write)
+
+    mor = create_pages_table(spark, str(tmp_path / "mor"), n_buckets=8, merge_strategy="mor")
+    res = apply_batch(mor, read_change_batch(spark, paths[0]))
+    assert res.metrics["stats_path"] == "footer"
+    assert apply_batch(mor, spark.read.parquet(paths[1], paths[2])).metrics["stats_path"] == "job"
+    apply_batch(mor, spark.read.parquet(paths[3]), mode="coalesce")
+    assert compact(mor)["buckets"] > 0
+    expire_snapshots(mor, keep_last=1, orphan_grace_s=0.0)
+    cow = create_pages_table(spark, str(tmp_path / "cow"), n_buckets=8, merge_strategy="cow")
+    apply_batch(cow, spark.read.parquet(paths[0]))
+    tail = create_pages_table(spark, str(tmp_path / "tail"), n_buckets=8, merge_strategy="mor")
+    wal, name = os.path.split(paths[4])
+    assert len(tail_segments(tail, wal, pattern=name)) == 1
+    monkeypatch.undo()
+
+    assert calls == []
+    assert len(aqe_at_write) == 6 and set(aqe_at_write) == {aqe}, aqe_at_write
+    assert spark.conf.get(aqe_key) == aqe
 
 
 def test_footer_path_past_ten_thousand_markers(spark, tmp_path, stream, job_group):

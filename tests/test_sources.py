@@ -14,6 +14,7 @@ from game_library_enrichment_etl_spark.sources.readers import (
     csv_scan,
     enrich_with_retry,
     latest_landing,
+    local_path,
     raw_landing,
     read_change_batch,
 )
@@ -94,6 +95,16 @@ def test_tail_segments_leaves_session_conf_unchanged(spark, tmp_path):
     assert len(results) == 1 and not results[0].skipped
     assert spark.conf.get("spark.sql.files.maxPartitionBytes") == split_before
     assert dict(spark.conf.getAll) == before
+
+
+def test_local_path_decodes_file_uris_only():
+    """Both spellings Spark gives a local file decode to its path; another
+    scheme names no local file, whatever its path component."""
+    assert local_path("/w/seg 1/a.parquet") == "/w/seg 1/a.parquet"
+    assert local_path("file:///w/seg%201/a.parquet") == "/w/seg 1/a.parquet"
+    assert local_path("file:/w/seg%201/a.parquet") == "/w/seg 1/a.parquet"
+    assert local_path("hdfs://nn/w/seg%201/a.parquet") is None
+    assert local_path("s3a://bucket/w/a.parquet") is None
 
 
 @pytest.mark.parametrize("n_files", [2, 6])
